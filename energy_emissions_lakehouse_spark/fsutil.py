@@ -1,37 +1,111 @@
-"""Local staging-path hygiene for the /tmp-backed caches.
+"""The engine's one cache policy: a session memo in memory, a staged
+artifact on disk, both keyed on what the cached work depends on.
 
-Every derived artifact the engine stages locally (canonicalized stream
-sources, bucketed tables, PQ index, merge targets, format roundtrips)
-lives under ONE per-user root created with mode 0700.  Rationale
-(round-3 advice): ``tempfile.gettempdir()`` is world-writable, so a
-fixed shared path like ``/tmp/eel_pq`` lets any local user pre-create
-the keyed directory and poison the parquet the queries then read.  A
-uid-suffixed 0700 root closes that: other users can neither pre-create
-nor read into it.
+* :func:`session_memo` holds what is only valid inside one SparkSession:
+  DataFrame handles (parquet relations, ``localCheckpoint``'d stages),
+  driver-side counts and per-session registrations.  It is keyed on the
+  session object itself (a weak key: a collected session's entries go with
+  it) plus a caller key that names the memo kind and carries the version of
+  every source the entry derives from -- typically the source file's
+  ``(path, mtime_ns, size)`` -- so a regenerated file misses.  Each session's
+  memo is an LRU bounded by :data:`SESSION_MEMO_MAX`, and one lock makes it
+  safe to share a session between threads.  Process-global facts about
+  immutable files (a parquet footer probe, a deletion-vector fold) are plain
+  ``functools.lru_cache`` functions keyed the same way.
+* :func:`staged_artifact` builds a derived directory once and serves it to
+  every later caller, in this process or another: the build fills a scratch
+  directory, a ``_SUCCESS`` marker goes inside it, and one atomic rename
+  publishes it.  A reader never sees a half-written tree, and two concurrent
+  builders of one key leave exactly one.  Keys come from
+  :func:`table_cache_key` (source mtime and size plus recipe parts).
+* Every staged family lives under ONE per-user root,
+  :func:`user_staging_root`: ``$EEL_STAGING_DIR`` when set, else
+  ``<tmp>/eel-staging-<uid>``, created with mode 0700.
+  ``tempfile.gettempdir()`` is world-writable, so a fixed shared path would
+  let any local user pre-create a keyed directory and poison the parquet the
+  queries then read; a private 0700 root closes that.
 
-On a real cluster these staging paths would be per-job scratch on
-HDFS/S3 under the job's own prefix; the uid-scoped root is the
-single-node analogue.
+On a real cluster the staging root would be per-job scratch on HDFS/S3
+under the job's own prefix; the per-user root is the single-node analogue.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import threading
+from collections import OrderedDict
+from weakref import WeakKeyDictionary
+
+#: Entries each session's memo keeps (least recently used evicted first).
+#: One registry sweep over sf0.001, sf0.01 and sf0.1 in one session creates
+#: 64 entries (16 per scale factor, 14 medallion layers, 2 source
+#: registrations); twice that leaves a sweep room to never evict.  An
+#: evicted entry is rebuilt on its next use, never served stale.
+SESSION_MEMO_MAX = 128
+
+_MEMO_LOCK = threading.Lock()
+_SESSION_MEMOS: "WeakKeyDictionary[object, OrderedDict]" = WeakKeyDictionary()
+_MISSING = object()
+
+
+def session_memo(spark, key: tuple, build, fresh: bool = False):
+    """``build()``'s value, computed once per ``(spark, key)``.
+
+    ``key`` starts with the memo kind (``"tables.t"``, ``"text.doc_sh"``,
+    ...) and must carry the version of every source the value derives from.
+    ``fresh=True`` rebuilds and replaces the entry.  ``build()`` runs outside
+    the lock; when two threads build one key at once, the first insert wins
+    and both get that value.
+    """
+    if not fresh:
+        with _MEMO_LOCK:
+            memo = _SESSION_MEMOS.get(spark)
+            hit = _MISSING if memo is None else memo.get(key, _MISSING)
+            if hit is not _MISSING:
+                memo.move_to_end(key)
+                return hit
+    value = build()
+    with _MEMO_LOCK:
+        memo = _SESSION_MEMOS.get(spark)
+        if memo is None:
+            memo = _SESSION_MEMOS[spark] = OrderedDict()
+        if fresh or key not in memo:
+            memo[key] = value
+        memo.move_to_end(key)
+        while len(memo) > SESSION_MEMO_MAX:
+            memo.popitem(last=False)
+        return memo[key]
+
+
+def session_memo_keys(spark, kind: str | None = None) -> list[tuple]:
+    """The session's memo keys (of one kind, if given), oldest first."""
+    with _MEMO_LOCK:
+        keys = list(_SESSION_MEMOS.get(spark, ()))
+    return [k for k in keys if kind is None or k[0] == kind]
+
+
+def session_memo_clear(spark, kind: str | None = None) -> None:
+    """Drop the session's memo entries (of one kind, if given)."""
+    with _MEMO_LOCK:
+        memo = _SESSION_MEMOS.get(spark, {})
+        for k in [k for k in memo if kind is None or k[0] == kind]:
+            del memo[k]
 
 
 def user_staging_root() -> str:
-    """The per-user 0700 staging root, created on first use.
+    """The per-user 0700 staging root (``$EEL_STAGING_DIR`` if set),
+    created on first use.
 
     If the path already exists but is not owned by us or is group/other
     accessible (a squatter or a pre-hardening leftover), tighten or fail
     loudly rather than silently trusting it.
     """
-    root = os.path.join(
+    root = os.environ.get("EEL_STAGING_DIR") or os.path.join(
         tempfile.gettempdir(), f"eel-staging-{os.getuid()}"
     )
     try:
-        os.mkdir(root, mode=0o700)
+        os.makedirs(root, mode=0o700)
     except FileExistsError:
         st = os.stat(root)
         if st.st_uid != os.getuid():

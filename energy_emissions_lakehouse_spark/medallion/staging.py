@@ -17,23 +17,20 @@ not — resolves a layer as a plain parquet scan, which is also the honest
 gold parquet -> warehouse; src/10_silver/bronze_to_silver.py:45,
 src/20_gold/silver_to_gold.py:87-89).
 
-Concurrency/staleness contract:
-- builds go to a tmp dir then a single atomic ``os.rename`` — readers never
-  see a partial layer, and a lost race just discards its tmp copy;
-- the fingerprint covers the four pipeline modules' bytes, so editing the
-  pipeline invalidates the cache automatically (no manual versioning).
+The build is a :func:`fsutil.staged_artifact` (marker + atomic rename:
+readers never see a partial layer, and a lost race discards its copy), keyed
+on a fingerprint of the four pipeline modules' bytes, so editing the pipeline
+invalidates the cache automatically (no manual versioning).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from energy_emissions_lakehouse_spark.fsutil import user_staging_root
+from energy_emissions_lakehouse_spark import fsutil
 from energy_emissions_lakehouse_spark.medallion import generate, gold, silver, star
 
 #: Layer name -> parquet subdir. Order documents the build DAG.
@@ -54,8 +51,6 @@ LAYERS = (
     "fact_carbon_intensity",
 )
 
-_MEMO: dict[tuple[int, str], DataFrame] = {}
-
 
 def _fingerprint() -> str:
     """Hash the pipeline source files: code change -> fresh staging dir."""
@@ -67,10 +62,7 @@ def _fingerprint() -> str:
 
 
 def staging_dir() -> str:
-    root = os.environ.get(
-        "EEL_STAGING_DIR", os.path.join(user_staging_root(), "medallion_root")
-    )
-    return os.path.join(root, "medallion", _fingerprint())
+    return os.path.join(fsutil.staging_dir("medallion"), _fingerprint())
 
 
 def _write(df: DataFrame, path: str) -> None:
@@ -102,28 +94,15 @@ def _build(spark: SparkSession, out: str) -> None:
 
 def ensure_staged(spark: SparkSession) -> str:
     """Build-once: returns the staging dir, building it if absent."""
-    final = staging_dir()
-    if os.path.isdir(final):
-        return final
-    tmp = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    try:
-        _build(spark, tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            # Lost the race to a concurrent builder — theirs is complete
-            # (rename is atomic), ours is redundant.
-            shutil.rmtree(tmp, ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return final
+    return fsutil.staged_artifact(
+        "medallion", _fingerprint(), lambda tmp: _build(spark, tmp)
+    )
 
 
 def layer(spark: SparkSession, name: str) -> DataFrame:
     """A medallion layer as a parquet scan (memoized per session)."""
-    key = (id(spark), name)
-    if key not in _MEMO:
-        root = ensure_staged(spark)
-        _MEMO[key] = spark.read.parquet(os.path.join(root, name))
-    return _MEMO[key]
+
+    def read() -> DataFrame:
+        return spark.read.parquet(os.path.join(ensure_staged(spark), name))
+
+    return fsutil.session_memo(spark, ("medallion.layer", name), read)

@@ -66,6 +66,7 @@ instead of POSIX ``link``.
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import json
 import os
@@ -132,14 +133,44 @@ _DV_DRIVER_MAX_BYTES = 64 << 20
 _DV_MAX_FILE_BRANCHES = 256
 _DV_MAX_POSITIONS_PER_FILE = 200_000
 
-#: Memoized driver-side DV content, keyed on (root, active dv set).  DV
-#: files are immutable once committed (and never vacuumed while active),
-#: so the fold can never go stale; a bounded size keeps a long-running
-#: session from accumulating dead tables' masks.
-_DV_POS_MEMO: dict[tuple, dict | None] = {}
-_DV_POS_MEMO_MAX = 64
-#: distinguishes "not cached" from a memoized None (fallback) verdict
-_DV_MEMO_MISSING = object()
+
+@functools.lru_cache(maxsize=64)
+def _dv_fold(root: str, dvs: tuple[str, ...]) -> dict | None:
+    """Driver-side fold of the deletion vectors ``dvs`` under ``root``:
+    ``{segment name: {part file: [row positions]}}``, or None when they
+    are not metadata-sized (total bytes past ``_DV_DRIVER_MAX_BYTES``, or
+    any single file masked past ``_DV_MAX_POSITIONS_PER_FILE``: an InSet
+    that large costs more than the join it replaces).  DV files
+    are immutable once committed (and never vacuumed while active), so the
+    fold memoizes on (root, active dv set) and can never go stale; the None
+    verdict is memoized too, so a too-big set is not re-read per scan.  An
+    OSError (a transient listing race) propagates and is not memoized."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    parts: list[str] = []
+    total = 0
+    for d in dvs:
+        for p in _glob.glob(os.path.join(root, d, "part-*.parquet")):
+            total += os.path.getsize(p)
+            parts.append(p)
+    if total > _DV_DRIVER_MAX_BYTES:
+        return None
+    out: dict[str, dict[str, list[int]]] = {}
+    for p in parts:
+        tb = pq.read_table(p, columns=["_dv_seg", "_dv_file", "_dv_pos"])
+        for seg, fl, pos in zip(
+            tb["_dv_seg"].to_pylist(),
+            tb["_dv_file"].to_pylist(),
+            tb["_dv_pos"].to_pylist(),
+        ):
+            out.setdefault(seg, {}).setdefault(fl, []).append(int(pos))
+    for files in out.values():
+        for poss in files.values():
+            if len(poss) > _DV_MAX_POSITIONS_PER_FILE:
+                return None
+    return out
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1818,72 +1849,13 @@ class VersionedTable:
             )
 
     def _dv_positions(self, dvs: list[str]) -> dict | None:
-        """Driver-side fold of the active deletion vectors:
-        ``{segment name: {part file: [row positions]}}`` — the per-file
-        masks the fast read path filters with.  Returns None (caller
-        falls back to the broadcast anti-join) whenever the DVs are not
-        metadata-sized: total bytes past ``_DV_DRIVER_MAX_BYTES``, or
-        any single file masked past ``_DV_MAX_POSITIONS_PER_FILE`` (an
-        InSet that large costs more than the join it replaces).  DV
-        files are immutable, so the fold memoizes on the active set."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
-        key = (self.root, tuple(dvs))
-        hit = _DV_POS_MEMO.get(key, _DV_MEMO_MISSING)
-        if hit is not _DV_MEMO_MISSING:
-            return hit  # may be a memoized None verdict (fallback)
-
-        def remember(value):
-            if len(_DV_POS_MEMO) >= _DV_POS_MEMO_MAX:
-                # pop(k, None) so two threads racing to evict the same
-                # head key can't raise KeyError; next(iter(...)) itself
-                # can still raise RuntimeError ("dictionary changed size
-                # during iteration") if a racing writer inserts between
-                # iter() and next() — skip eviction on contention, the
-                # other thread is evicting anyway and the cap is soft
-                try:
-                    _DV_POS_MEMO.pop(next(iter(_DV_POS_MEMO)), None)
-                except RuntimeError:
-                    pass
-            _DV_POS_MEMO[key] = value
-            return value
-
-        parts: list[str] = []
-        total = 0
-        for d in dvs:
-            for p in _glob.glob(
-                os.path.join(self.root, d, "part-*.parquet")
-            ):
-                try:
-                    total += os.path.getsize(p)
-                except OSError:
-                    return None  # transient: do NOT memoize
-                parts.append(p)
-        if total > _DV_DRIVER_MAX_BYTES:
-            # memoize the fallback verdict too: DV files are immutable,
-            # so re-reading them on every scan just to re-conclude
-            # "too big" would pay the full driver fold per read
-            return remember(None)
-        out: dict[str, dict[str, list[int]]] = {}
-        for p in parts:
-            tb = pq.read_table(
-                p, columns=["_dv_seg", "_dv_file", "_dv_pos"]
-            )
-            for seg, fl, pos in zip(
-                tb["_dv_seg"].to_pylist(),
-                tb["_dv_file"].to_pylist(),
-                tb["_dv_pos"].to_pylist(),
-            ):
-                out.setdefault(seg, {}).setdefault(fl, []).append(
-                    int(pos)
-                )
-        for files in out.values():
-            for poss in files.values():
-                if len(poss) > _DV_MAX_POSITIONS_PER_FILE:
-                    return remember(None)
-        return remember(out)
+        """The per-file masks the fast read path filters with (see
+        :func:`_dv_fold`); None makes the caller fall back to the
+        broadcast anti-join."""
+        try:
+            return _dv_fold(self.root, tuple(dvs))
+        except OSError:
+            return None
 
     def _scan_segments(
         self,

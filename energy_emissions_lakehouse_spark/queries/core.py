@@ -27,33 +27,32 @@ from energy_emissions_lakehouse_spark.tables import TABLES, t
 
 def _partitioned_orders_path(spark, sf_dir: str) -> str:
     """Orders staged as a year-partitioned parquet table (the MERGE target).
-    Built once per scale factor (cross-process, _SUCCESS-gated); the merge
-    query then operates on a real partitioned table, like a production
-    warehouse, not a temp view."""
-    import hashlib
+    Built once per scale factor and orders version (cross-process,
+    fsutil.staged_artifact); the merge query then operates on a real
+    partitioned table, like a production warehouse, not a temp view."""
     import os
     import re
 
-    from energy_emissions_lakehouse_spark.fsutil import staging_dir
+    from energy_emissions_lakehouse_spark.fsutil import (
+        staged_artifact,
+        table_cache_key,
+    )
 
     tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
-    # key on the source file's mtime+size: testdata is regenerated between
-    # rounds at the same path, and a stale staged copy would silently feed
-    # the merge queries old rows (same lesson as streaming._stage_key)
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    fresh = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    path = os.path.join(
-        staging_dir("merge"), f"{tag}-{fresh}", "orders_by_year"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def populate(tmp: str) -> None:
         (
             t(spark, sf_dir, "orders")
             .withColumn("o_year", F.year("o_orderdate").cast("long"))
             .write.mode("overwrite")
             .partitionBy("o_year")
-            .parquet(path)
+            .parquet(os.path.join(tmp, "orders_by_year"))
         )
-    return path
+
+    key = f"{tag}-{table_cache_key(sf_dir, 'orders')}"
+    return os.path.join(
+        staged_artifact("merge", key, populate), "orders_by_year"
+    )
 
 
 # --------------------------------------------------------------------------

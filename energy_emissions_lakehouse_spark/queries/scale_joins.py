@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from energy_emissions_lakehouse_spark.functions.exact import scaled_sum, scaled_sum_sql
-from energy_emissions_lakehouse_spark.fsutil import user_staging_root
+from energy_emissions_lakehouse_spark.fsutil import session_memo, user_staging_root
 from energy_emissions_lakehouse_spark.registry import register
 from energy_emissions_lakehouse_spark.tables import t
 
@@ -36,8 +36,6 @@ N_BUCKETS = 8
 BAND_SECONDS = 3600
 
 _BUCKET_ROOT = os.path.join(user_staging_root(), "bucketed")
-#: (session id, sf tag) pairs whose bucketed tables are already written.
-_BUCKETED: set[tuple[int, str]] = set()
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -58,38 +56,40 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """
     tag = _sf_tag(sf_dir)
     cust_tbl, ord_tbl = f"eel_cust_b_{tag}", f"eel_ord_b_{tag}"
-    key = (id(spark), tag)
-    if key in _BUCKETED:
+
+    def register_tables() -> tuple[str, str]:
+        for tbl, df, bucket_col in (
+            (cust_tbl, t(spark, sf_dir, "customer"), "c_custkey"),
+            (ord_tbl, t(spark, sf_dir, "orders"), "o_custkey"),
+        ):
+            path = os.path.join(_BUCKET_ROOT, tag, tbl)
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            if os.path.exists(os.path.join(path, "_SUCCESS")):
+                # Files already staged by an earlier session: register an
+                # external bucketed table over them (no data rewrite). Spark
+                # recovers each file's bucket id from its name.
+                cols = ", ".join(
+                    f"{f.name} {f.dataType.simpleString()}"
+                    for f in df.schema.fields
+                )
+                spark.sql(
+                    f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
+                    f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
+                    f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}'"
+                )
+            else:
+                (
+                    df.write.format("parquet")
+                    .mode("overwrite")
+                    .bucketBy(N_BUCKETS, bucket_col)
+                    .sortBy(bucket_col)
+                    .option("path", path)
+                    .saveAsTable(tbl)
+                )
         return cust_tbl, ord_tbl
-    for tbl, df, bucket_col in (
-        (cust_tbl, t(spark, sf_dir, "customer"), "c_custkey"),
-        (ord_tbl, t(spark, sf_dir, "orders"), "o_custkey"),
-    ):
-        path = os.path.join(_BUCKET_ROOT, tag, tbl)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # Files already staged by an earlier session: register an
-            # external bucketed table over them (no data rewrite). Spark
-            # recovers each file's bucket id from its name.
-            cols = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
-                f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-                f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}'"
-            )
-        else:
-            (
-                df.write.format("parquet")
-                .mode("overwrite")
-                .bucketBy(N_BUCKETS, bucket_col)
-                .sortBy(bucket_col)
-                .option("path", path)
-                .saveAsTable(tbl)
-            )
-    _BUCKETED.add(key)
-    return cust_tbl, ord_tbl
+
+    # catalog entries live in the session: register once per session
+    return session_memo(spark, ("scale_joins.bucketed", tag), register_tables)
 
 
 @register(

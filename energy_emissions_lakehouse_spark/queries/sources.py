@@ -260,34 +260,36 @@ def compact_small_files_orders(spark, sf_dir) -> DataFrame:
     """Fragment (16-way round-robin x year partitioning), compact (one
     file per partition), verify content + layout."""
     import glob as _glob
-    import hashlib
     import os as _os
 
-    st = _os.stat(_os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:compact".encode()
-    ).hexdigest()[:12]
-    base = _os.path.join(_IO_ROOT, "compact", key)
-    frag, tight = _os.path.join(base, "fragmented"), _os.path.join(base, "compacted")
-
+    from energy_emissions_lakehouse_spark.fsutil import (
+        staged_artifact,
+        table_cache_key,
+    )
     from energy_emissions_lakehouse_spark.tables import t
 
-    orders = t(spark, sf_dir, "orders").withColumn(
-        "o_year", F.year("o_orderdate").cast("long")
-    )
-    if not _os.path.exists(_os.path.join(frag, "_SUCCESS")):
+    def populate(tmp: str) -> None:
+        orders = t(spark, sf_dir, "orders").withColumn(
+            "o_year", F.year("o_orderdate").cast("long")
+        )
         # simulate an incremental sink: 16 round-robin writers per batch
         # -> ~16 files inside every year partition
         orders.repartition(16).write.mode("overwrite").partitionBy(
             "o_year"
-        ).parquet(frag)
-    # the compaction job itself: one shuffle keyed by the partition value,
-    # so each partition is written by exactly one task -> one file
-    fragmented = spark.read.parquet(frag)
-    if not _os.path.exists(_os.path.join(tight, "_SUCCESS")):
-        fragmented.repartition("o_year").write.mode("overwrite").partitionBy(
+        ).parquet(_os.path.join(tmp, "fragmented"))
+        # the compaction job itself: one shuffle keyed by the partition
+        # value, so each partition is written by exactly one task -> one file
+        spark.read.parquet(_os.path.join(tmp, "fragmented")).repartition(
             "o_year"
-        ).parquet(tight)
+        ).write.mode("overwrite").partitionBy("o_year").parquet(
+            _os.path.join(tmp, "compacted")
+        )
+
+    base = staged_artifact(
+        "compact", table_cache_key(sf_dir, "orders", "compact"), populate
+    )
+    frag = _os.path.join(base, "fragmented")
+    tight = _os.path.join(base, "compacted")
 
     def files_per_year(root: str) -> dict[int, int]:
         out = {}

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from energy_emissions_lakehouse_spark.fsutil import session_memo
 from energy_emissions_lakehouse_spark.functions.exact import scaled_sum, scaled_sum_sql
 from energy_emissions_lakehouse_spark.operators import dedup as dd
 from energy_emissions_lakehouse_spark.operators import text as tx
@@ -115,25 +116,10 @@ _PRED_SQL = (
 )
 
 
-#: Per-(session, sf_dir) memo of the shingled corpus, lineage-truncated.
-#: Within one dedup query the (doc_id, lang, sh) stage is referenced by the
-#: signature AND both verify branches — un-materialized, Spark re-tokenizes
-#: the corpus per branch. At production scale this materialization is the
-#: standard "staging" parquet write between pipeline passes; here
-#: localCheckpoint keeps it in executor storage.
-_DOC_SH_MEMO: dict[tuple, DataFrame] = {}
-#: Verified jaccard pairs are an input to both the pair listing and the
-#: connected-components clustering — checkpoint once per session/sf.
-_JACCARD_PAIRS_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def _doc_version(sf_dir: str) -> tuple[int, int]:
     """(mtime_ns, size) of documents.parquet — every memo of state DERIVED
     from the corpus keys on this, so a regenerated corpus misses the memo
-    instead of serving stale checkpointed shingles (round-7 self-review:
-    the jaccard memo fix was otherwise defeated by this layer — a rebuild
-    sourced from a stale _DOC_SH_MEMO would PERSIST old-corpus pairs under
-    the fresh staging key)."""
+    instead of serving stale checkpointed shingles."""
     import os as _os
 
     st = _os.stat(_os.path.join(sf_dir, "documents.parquet"))
@@ -141,30 +127,37 @@ def _doc_version(sf_dir: str) -> tuple[int, int]:
 
 
 def _doc_sh(spark, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir, _doc_version(sf_dir))
-    if key not in _DOC_SH_MEMO:
+    """The shingled corpus, lineage-truncated, once per session and corpus
+    version. Within one dedup query the (doc_id, lang, sh) stage is
+    referenced by the signature AND both verify branches — un-materialized,
+    Spark re-tokenizes the corpus per branch. At production scale this is
+    the standard "staging" parquet write between pipeline passes; here
+    localCheckpoint keeps it in executor storage."""
+
+    def build() -> DataFrame:
         docs = t(spark, sf_dir, "documents")
-        _DOC_SH_MEMO[key] = docs.select(
+        return docs.select(
             "doc_id", "lang", tx.shingles(tx.tokens(F.col("text"))).alias("sh")
         ).localCheckpoint(eager=True)
-    return _DOC_SH_MEMO[key]
 
-
-#: 5-gram shingle sets, shared by the two contamination queries (overlap
-#: + bloom) — same memo policy as _DOC_SH_MEMO: tokenize+shingle once per
-#: (session, sf, corpus version), lineage-truncated so neither query
-#: re-pays the scan.
-_DOC_5G_MEMO: dict[tuple, DataFrame] = {}
+    return session_memo(
+        spark, ("text.doc_sh", sf_dir, _doc_version(sf_dir)), build
+    )
 
 
 def _doc_5g(spark, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir, _doc_version(sf_dir))
-    if key not in _DOC_5G_MEMO:
+    """5-gram shingle sets, shared by the two contamination queries
+    (overlap + bloom), memoized like :func:`_doc_sh`."""
+
+    def build() -> DataFrame:
         docs = t(spark, sf_dir, "documents")
-        _DOC_5G_MEMO[key] = docs.select(
+        return docs.select(
             "doc_id", tx.shingles(tx.tokens(F.col("text")), n=5).alias("sh")
         ).localCheckpoint(eager=True)
-    return _DOC_5G_MEMO[key]
+
+    return session_memo(
+        spark, ("text.doc_5g", sf_dir, _doc_version(sf_dir)), build
+    )
 
 
 # ---------------------------------------------------------------- queries
@@ -471,14 +464,7 @@ def ngram_jaccard_pairs(spark, sf_dir, fresh: bool = False) -> DataFrame:
         table_cache_key,
     )
 
-    # Round-7 advice: the memo fronts an mtime/size-keyed staged parquet,
-    # so the memo key must carry the same cache key — a regenerated
-    # documents.parquet mid-process must MISS the memo and re-resolve the
-    # staged path, not keep serving the stale pair frame.
     cache_key = table_cache_key(sf_dir, "documents", "jac", JACCARD_THRESHOLD)
-    key = (id(spark), sf_dir, cache_key)
-    if not fresh and key in _JACCARD_PAIRS_MEMO:
-        return _JACCARD_PAIRS_MEMO[key]
 
     def build() -> DataFrame:
         sh = _doc_sh(spark, sf_dir)
@@ -508,15 +494,14 @@ def ngram_jaccard_pairs(spark, sf_dir, fresh: bool = False) -> DataFrame:
             .coalesce(4)
         )
 
-    staged = staged_tables(
+    return session_memo(
         spark,
-        "jaccard_pairs",
-        cache_key,
-        {"pairs": build},
+        ("text.jaccard_pairs", sf_dir, cache_key),
+        lambda: staged_tables(
+            spark, "jaccard_pairs", cache_key, {"pairs": build}, fresh=fresh
+        )["pairs"],
         fresh=fresh,
-    )["pairs"]
-    _JACCARD_PAIRS_MEMO[key] = staged
-    return staged
+    )
 
 
 @register(
@@ -2112,24 +2097,24 @@ _XS_DOCS_CTE = """
 """
 
 
-#: Memoized exact-substring window frames, keyed like _DOC_SH_MEMO:
-#: the (doc_id, n_tokens, pos, hid) frame is referenced TWICE by the
-#: coverage fold (occurrence count + join back), so without the
-#: lineage-truncating checkpoint the 19-layer gram construction and the
-#: md5 per window run twice per query (measured ~2x at sf0.1).
-_XS_WIN_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _xs_windows(spark, sf_dir) -> DataFrame:
-    key = (id(spark), sf_dir, _doc_version(sf_dir))
-    if key not in _XS_WIN_MEMO:
+    """Exact-substring window frames, memoized like :func:`_doc_sh`: the
+    (doc_id, n_tokens, pos, hid) frame is referenced TWICE by the coverage
+    fold (occurrence count + join back), so without the lineage-truncating
+    checkpoint the 19-layer gram construction and the md5 per window run
+    twice per query (measured ~2x at sf0.1)."""
+
+    def build() -> DataFrame:
         docs = _xs_docs(spark, sf_dir).select(
             "doc_id", tx.tokens(F.col("text")).alias("toks")
         )
-        _XS_WIN_MEMO[key] = dd.exact_substring_windows(
-            docs, _XS_W
-        ).localCheckpoint(eager=True)
-    return _XS_WIN_MEMO[key]
+        return dd.exact_substring_windows(docs, _XS_W).localCheckpoint(
+            eager=True
+        )
+
+    return session_memo(
+        spark, ("text.xs_windows", sf_dir, _doc_version(sf_dir)), build
+    )
 
 
 def _xs_docs(spark, sf_dir) -> DataFrame:

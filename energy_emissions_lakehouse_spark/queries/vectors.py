@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from energy_emissions_lakehouse_spark.fsutil import session_memo
 from energy_emissions_lakehouse_spark.functions.exact import scaled_sum, scaled_sum_sql
 from energy_emissions_lakehouse_spark.operators import similarity as sim
 from energy_emissions_lakehouse_spark.registry import register
@@ -747,21 +748,18 @@ def pq_shortlist_for(corpus_size: int) -> int:
     return max(PQ_SHORTLIST_FLOOR, corpus_size // PQ_SHORTLIST_DIVISOR)
 
 
-_EMB_COUNT_MEMO: dict[tuple, int] = {}
-
-
 def _emb_corpus_count(spark, sf_dir: str) -> int:
     """Corpus size for index sizing — index-build metadata, counted ONCE
-    per (session, corpus version) instead of per query call (round-7
-    self-review: the per-call count() was an extra full-scan job on
-    every bench/sweep invocation)."""
+    per (session, corpus version) instead of per query call (the per-call
+    count() was an extra full-scan job on every bench/sweep invocation)."""
     import os as _os
 
     st = _os.stat(_os.path.join(sf_dir, "embeddings.parquet"))
-    key = (id(spark), sf_dir, st.st_mtime_ns, st.st_size)
-    if key not in _EMB_COUNT_MEMO:
-        _EMB_COUNT_MEMO[key] = t(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_MEMO[key]
+    return session_memo(
+        spark,
+        ("vectors.emb_count", sf_dir, st.st_mtime_ns, st.st_size),
+        lambda: t(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def _pq_adc_rerank_oracle_sql(

@@ -50,12 +50,6 @@ from energy_emissions_lakehouse_spark.tables import t
 #: Bump to invalidate staged histories when the build recipe changes.
 _HISTORY_REV = 16
 
-#: Memoized staged roots, keyed on the SOURCE's version via
-#: table_cache_key (round-7 lesson: a memo fronting an mtime/size-keyed
-#: artifact must itself key on the source version, or a regenerated
-#: corpus keeps serving the stale history for the rest of the process).
-_VT_MEMO: dict[tuple[int, str, str], str] = {}
-
 _ORDER_COLS = [
     "o_orderkey",
     "o_custkey",
@@ -481,14 +475,9 @@ def _staged_base(spark: SparkSession, sf_dir: str, fresh: bool = False) -> str:
     corpus version."""
     key = table_cache_key(
         sf_dir, "orders", "vtable", _HISTORY_REV,
-        # the admin table derives from CUSTOMER — fold its version into
-        # the key too (round-7 lesson: every source the artifact reads
-        # must key it, or a regenerated corpus serves a stale history)
+        # the admin table derives from CUSTOMER: fold its version in too
         table_cache_key(sf_dir, "customer", "admin"),
     )
-    memo_key = (id(spark), sf_dir, key)
-    if not fresh and memo_key in _VT_MEMO:
-        return _VT_MEMO[memo_key]
 
     def _populate(tmp: str) -> None:
         # The six builds are independent tables under one artifact, and
@@ -518,9 +507,7 @@ def _staged_base(spark: SparkSession, sf_dir: str, fresh: bool = False) -> str:
             for f in futures:
                 f.result()  # surface the first failure, fail the artifact
 
-    base = staged_artifact("vtable", key, _populate, fresh=fresh)
-    _VT_MEMO[memo_key] = base
-    return base
+    return staged_artifact("vtable", key, _populate, fresh=fresh)
 
 
 def staged_vtable(spark: SparkSession, sf_dir: str, fresh: bool = False):

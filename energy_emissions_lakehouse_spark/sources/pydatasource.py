@@ -28,6 +28,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from energy_emissions_lakehouse_spark.fsutil import session_memo
+
 #: Rows per generated partition — at 100 TB you size this so one chunk's
 #: Arrow batch fits comfortably in a worker (same knob as files.maxPartitionBytes).
 DEFAULT_ROWS_PER_PARTITION = 25_000
@@ -114,14 +116,12 @@ class SyntheticEnergyDataSource(DataSource):
         return SyntheticEnergyWriter(self.options, overwrite)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register_synthetic_source(spark) -> None:
     """Idempotent per-session registration."""
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(SyntheticEnergyDataSource)
-        _REGISTERED.add(id(spark))
+    session_memo(
+        spark, ("pydatasource.registered",),
+        lambda: spark.dataSource.register(SyntheticEnergyDataSource),
+    )
 
 
 #: The same recipe as one DuckDB relation, for oracle WITH-chains.

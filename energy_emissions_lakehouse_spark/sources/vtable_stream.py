@@ -60,6 +60,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from energy_emissions_lakehouse_spark.fsutil import session_memo
 from energy_emissions_lakehouse_spark.operators.vtable import (
     LOG_DIR,
     _FEED_COLS,
@@ -519,15 +520,14 @@ class VtableStreamDataSource(DataSource):
         )
 
 
-_REGISTERED: set[int] = set()
-
-
 def register_vtable_source(spark) -> None:
     """Idempotent per-session registration.  Also enables Python
     DataSource filter pushdown (off by default in Spark 4.1; a plain
     runtime conf) — without it the batch reader's pushFilters() is an
     initialization ERROR, not a silent no-op."""
-    if id(spark) not in _REGISTERED:
+
+    def register() -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
         spark.dataSource.register(VtableStreamDataSource)
-        _REGISTERED.add(id(spark))
+
+    session_memo(spark, ("vtable_stream.registered",), register)

@@ -21,30 +21,22 @@ Scale design:
 
 from __future__ import annotations
 
-import hashlib
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from energy_emissions_lakehouse_spark.fsutil import staging_dir
+from energy_emissions_lakehouse_spark.fsutil import (
+    staged_artifact,
+    staging_dir,
+    table_cache_key,
+)
 from energy_emissions_lakehouse_spark.functions.exact import scaled_sum
 from energy_emissions_lakehouse_spark.session import configure_runtime
 from energy_emissions_lakehouse_spark.tables import EVENTS_SCHEMA, t as load_table
 
 SESSION_GAP_SECONDS = 1800
-
-
-def _stage_key(sf_dir: str, extra: str = "") -> str:
-    """Staging-dir key: includes the source file's mtime+size so a
-    regenerated dataset at the same path gets a fresh staging dir (stale
-    sentinels/splits were an advisory finding in round 1)."""
-    p = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(p)
-    return hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:{extra}".encode()
-    ).hexdigest()[:12]
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str, extra: str = "") -> str:
@@ -55,26 +47,18 @@ def _stage_events_dir(spark: SparkSession, sf_dir: str, extra: str = "") -> str:
     The staged copy is written through ``tables.t``, which normalizes the
     raw file's ts encoding (ns-int64 in some testdata generations, plain
     TIMESTAMP_MICROS in others) to one canonical TIMESTAMP(MICROS) — every
-    streaming reader then uses EVENTS_SCHEMA with no per-row conversion.
-    Build goes to a tmp dir then one atomic ``os.rename`` (concurrent
-    stagers race safely; a lost race discards its redundant copy)."""
-    src = os.path.join(
-        staging_dir("stream_src"), _stage_key(sf_dir, extra)
-    )
-    if os.path.isdir(src):
-        return src
-    import shutil
-    import uuid as _uuid
+    streaming reader then uses EVENTS_SCHEMA with no per-row conversion."""
 
-    tmp = f"{src}.tmp-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return src
+    def populate(tmp: str) -> None:
+        load_table(spark, sf_dir, "events").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+
+    # keyed on the source's mtime+size: a regenerated dataset at the same
+    # path gets a fresh staging dir
+    return staged_artifact(
+        "stream_src", table_cache_key(sf_dir, "events", extra), populate
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,18 +321,16 @@ def stage_events_split(
     """Stage events as an n-file parquet directory (µs timestamps) so a
     maxFilesPerTrigger=1 stream replays it as n micro-batches. Idempotent
     per (sf_dir, n_files); testdata stays untouched."""
-    from energy_emissions_lakehouse_spark.tables import t
 
-    dst = os.path.join(
-        staging_dir("stream_src"),
-        "split_" + _stage_key(sf_dir, extra=str(n_files)),
-    )
-    marker = os.path.join(dst, "_SUCCESS")
-    if not os.path.exists(marker):
-        t(spark, sf_dir, "events").repartition(n_files).write.mode(
+    def populate(tmp: str) -> None:
+        load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
             "overwrite"
-        ).parquet(dst)
-    return dst
+        ).parquet(tmp)
+
+    return staged_artifact(
+        "stream_src", "split_" + table_cache_key(sf_dir, "events", n_files),
+        populate,
+    )
 
 
 def run_foreachbatch_upsert(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -974,41 +956,23 @@ def _stage_batch_source_dir(
     tag: str,
     n_files: int = 1,
 ) -> str:
-    """Shared keyed atomic-rename staging for simulated ingest-batch
-    streaming file sources (round-7 self-review: the docs and embeddings
-    variants were line-for-line copies of this protocol — one
-    implementation so a future protocol fix lands everywhere).  Keyed on
-    the source file's mtime+size plus ``tag``/``n_files``; ``n_files > 1``
-    splits the batch so a maxFilesPerTrigger=1 stream replays it as
-    several micro-batches."""
-    from energy_emissions_lakehouse_spark.fsutil import _sweep_stale_scratch
-
+    """Shared staging for simulated ingest-batch streaming file sources
+    (the docs and embeddings variants).  Keyed on the source file's
+    mtime+size plus ``tag``/``n_files``; ``n_files > 1`` splits the batch
+    so a maxFilesPerTrigger=1 stream replays it as several micro-batches."""
     p = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(p)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:{tag}:{n_files}".encode()
-    ).hexdigest()[:12]
-    root = staging_dir("stream_src")
-    _sweep_stale_scratch(root)  # dead-pid *.tmp- leftovers strand forever
-    src = os.path.join(root, f"{tag}_{key}")
-    if os.path.isdir(src):
-        return src
-    import shutil
-    import uuid as _uuid
+    key = table_cache_key(sf_dir, table, tag, n_files)
 
-    tmp = f"{src}.tmp-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
-    (
-        spark.read.parquet(p)
-        .filter(pred)
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    try:
-        os.rename(tmp, src)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return src
+    def populate(tmp: str) -> None:
+        (
+            spark.read.parquet(p)
+            .filter(pred)
+            .repartition(n_files)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+
+    return staged_artifact("stream_src", f"{tag}_{key}", populate)
 
 
 def _stage_docs_batch_dir(

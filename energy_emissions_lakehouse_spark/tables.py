@@ -8,6 +8,7 @@ column pruning for free; never hand-materialize.
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +21,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from energy_emissions_lakehouse_spark.fsutil import session_memo
 from energy_emissions_lakehouse_spark.session import configure_runtime
 
 #: Driver-registered oracle view names (BASELINE/TESTDATA contract).
@@ -41,8 +43,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Some testdata generations write events.ts as INT64 TIMESTAMP(NANOS), which
 # Spark's parquet reader rejects ([PARQUET_TYPE_ILLEGAL]); others write plain
 # TIMESTAMP(MICROS), which Spark reads natively. Detect from the parquet
-# footer (one driver-side metadata read, memoized per path) and only apply
-# the ns->µs workaround when the file really is nanos: read the physical
+# footer (one driver-side metadata read, memoized per file version) and only
+# apply the ns->µs workaround when the file really is nanos: read the physical
 # int64 via an explicit schema and convert in the JVM (`div` = integer
 # division; a double `/` would lose precision above 2^53 at epoch-nanos
 # magnitude). Truncation toward zero matches DuckDB's ns->second flooring
@@ -71,54 +73,31 @@ EVENTS_SCHEMA = StructType(
     ]
 )
 
-_EVENTS_TS_IS_NANOS: dict[tuple[str, int, int], bool] = {}
 
-#: Per-session memo of table DataFrame HANDLES (round-13, guide §1/§5 —
-#: the sub-second-tail floor): building a fresh parquet relation costs
-#: ~90-120 ms of driver-side work per call (py4j round-trips + source
-#: resolution + footer schema inference; measured on this host:
-#: region.count() 225 ms from a fresh ``spark.read.parquet`` vs 125 ms
-#: on a reused DataFrame, with the bare job floor at ~112 ms).  A
-#: DataFrame is an immutable logical plan, so handing the same handle
-#: back is semantically identical — every action still computes from the
-#: parquet files; nothing resembling a RESULT is cached (same policy as
-#: the per-session staged-stage memos in queries/medallion and
-#: queries/text, which this predates).  Keyed by live session object
-#: (WeakKeyDictionary: a stopped/collected session's entries vanish with
-#: it, and a handle is only ever served back to the session that built
-#: it) and by (path, mtime_ns, size) exactly like _EVENTS_TS_IS_NANOS —
-#: regenerated testdata gets a fresh relation, stale plans cannot
-#: survive a file swap.
-_RELATION_MEMO: "WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
+@lru_cache(maxsize=32)
+def _ts_is_nanos(path: str, mtime_ns: int, size: int) -> bool:
+    import pyarrow.parquet as pq
 
-
-def _relation_memo(spark: SparkSession) -> dict:
-    global _RELATION_MEMO
-    if _RELATION_MEMO is None:
-        from weakref import WeakKeyDictionary
-
-        _RELATION_MEMO = WeakKeyDictionary()
-    per_session = _RELATION_MEMO.get(spark)
-    if per_session is None:
-        per_session = {}
-        _RELATION_MEMO[spark] = per_session
-    return per_session
+    ts_type = pq.read_schema(path).field("ts").type
+    return str(getattr(ts_type, "unit", "")) == "ns"
 
 
 def _events_ts_is_nanos(path: str) -> bool:
-    # memo keyed on (path, mtime, size), not path alone: testdata is
-    # regenerated between rounds, and a session spanning a regeneration
-    # that flips the ts encoding would otherwise keep the stale ns-vs-µs
-    # decision and read every timestamp 1000x off (the exact round-2
-    # failure the footer probe exists to prevent)
+    # keyed on (path, mtime, size), not path alone: testdata is regenerated
+    # between rounds, and a regeneration that flips the ts encoding must
+    # not keep the stale ns-vs-µs decision (every timestamp 1000x off)
     st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    if key not in _EVENTS_TS_IS_NANOS:
-        import pyarrow.parquet as pq
+    return _ts_is_nanos(path, st.st_mtime_ns, st.st_size)
 
-        ts_type = pq.read_schema(path).field("ts").type
-        _EVENTS_TS_IS_NANOS[key] = str(getattr(ts_type, "unit", "")) == "ns"
-    return _EVENTS_TS_IS_NANOS[key]
+
+def _load(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name == "events" and _events_ts_is_nanos(path):
+        return (
+            spark.read.schema(_EVENTS_RAW_SCHEMA)
+            .parquet(path)
+            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        )
+    return spark.read.parquet(path)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -127,19 +106,11 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_runtime(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     st = os.stat(path)
-    memo = _relation_memo(spark)
-    key = (path, st.st_mtime_ns, st.st_size)
-    df = memo.get(key)
-    if df is None:
-        if name == "events" and _events_ts_is_nanos(path):
-            df = (
-                spark.read.schema(_EVENTS_RAW_SCHEMA)
-                .parquet(path)
-                .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            )
-        else:
-            df = spark.read.parquet(path)
-        if len(memo) >= 64:  # bound: plan handles, but never unbounded
-            memo.pop(next(iter(memo)))
-        memo[key] = df
-    return df
+    # The handle is memoized per session: a fresh parquet relation costs
+    # ~100 ms of driver work (py4j round-trips, footer schema inference),
+    # and a DataFrame is an immutable plan -- every action still reads the
+    # files; no result is cached.
+    return session_memo(
+        spark, ("tables.t", path, st.st_mtime_ns, st.st_size),
+        lambda: _load(spark, path, name),
+    )

@@ -17,7 +17,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
@@ -73,14 +72,9 @@ def main() -> None:
     assert n >= 0, "entry() must produce >=0 rows"
     print(f"[drive] entry(): {n} rows ok", file=sys.stderr)
 
-    from energy_emissions_lakehouse_spark.tables import TABLES
+    from energy_emissions_lakehouse_spark.oracle import duckdb_connection
 
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{name}.parquet')"
-        )
+    con = duckdb_connection(SF_DIR)
 
     queries = e.queries()
     oracles = e.oracle_sql()

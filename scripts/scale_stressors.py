@@ -464,12 +464,13 @@ def main() -> None:
           file=sys.stderr)
     docs10.unpersist()
 
-    # Memo-cold rebuild (the per-corpus-version _XS_WIN_MEMO stage): the
-    # one-time cost a regenerated corpus pays before the first
-    # exact-substring query serves warm.
+    # Memo-cold rebuild (the per-corpus-version exact-substring window
+    # stage in the session memo): the one-time cost a regenerated corpus
+    # pays before the first exact-substring query serves warm.
+    from energy_emissions_lakehouse_spark.fsutil import session_memo_clear
     from energy_emissions_lakehouse_spark.queries import text as qtext
 
-    qtext._XS_WIN_MEMO.clear()
+    session_memo_clear(spark, "text.xs_windows")
     t0 = time.perf_counter()
     qtext._xs_windows(spark, SF_DIR)
     xs_out["memo_rebuild_cold_sec"] = round(time.perf_counter() - t0, 3)

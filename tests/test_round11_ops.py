@@ -317,7 +317,7 @@ def test_dv_fast_path_matches_antijoin_and_skips_join(
     fast_rows = sorted((r["k"], r["p"]) for r in fast.collect())
     # force the legacy anti-join and compare value-exactly
     monkeypatch.setattr(vmod, "_DV_DRIVER_MAX_BYTES", 0)
-    vmod._DV_POS_MEMO.clear()
+    vmod._dv_fold.cache_clear()
     legacy = vt.read()
     legacy_plan = legacy._jdf.queryExecution().executedPlan().toString()
     assert "_dv_seg" in legacy_plan, "fallback must be the identity join"
@@ -331,7 +331,7 @@ def test_dv_fast_path_branch_cap_falls_back(spark, root, monkeypatch):
     vt = VersionedTable.create(spark, root, _rows(spark, 0, 100))
     vt.delete_where_mor(F.col("k") < 3)
     monkeypatch.setattr(vmod, "_DV_MAX_FILE_BRANCHES", 0)
-    vmod._DV_POS_MEMO.clear()
+    vmod._dv_fold.cache_clear()
     df = vt.read()
     assert "LeftAnti" in df._jdf.queryExecution().executedPlan().toString()
     assert df.count() == 97

@@ -1,25 +1,40 @@
-"""Behavior pins for the shared build-once staging layer (fsutil) and
-its two consumers added/refactored in round 5: the co-purchase pair
-index and the PQ model.
+"""Behavior pins for the engine's cache policy (fsutil): the on-disk
+build-once staging layer, its consumers (co-purchase pair index, PQ
+model, jaccard pairs, stream sources), and the per-session memo.
 
 The staging contract: a keyed directory is trusted only with its
 _SUCCESS marker; warm hits never re-run builders; `fresh` forces a cold
 rebuild; queries that override session conf must restore it.
+
+The memo contract: same session + same source version -> same handle;
+touching a source rebuilds; results are never cached (actions re-read the
+files); threads sharing a session get one handle per key; the memo stays
+within its bound; no module keeps an ad-hoc memo or stager of its own.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
 import uuid
 
+import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import energy_emissions_lakehouse_spark
+from energy_emissions_lakehouse_spark import tables
 from energy_emissions_lakehouse_spark.fsutil import (
+    SESSION_MEMO_MAX,
+    session_memo_keys,
     staged_tables,
     staging_dir,
     table_cache_key,
 )
+from energy_emissions_lakehouse_spark.queries import text as text_q
+from energy_emissions_lakehouse_spark.queries import vectors as vec_q
+from energy_emissions_lakehouse_spark.tables import t
 
 
 def _family() -> str:
@@ -280,7 +295,7 @@ def test_staging_init_sweeps_dead_pid_scratch(spark):
 def test_jaccard_memo_misses_when_corpus_regenerated(spark, sf_dir, tmp_path):
     """Round-7 advice (+ self-review hardening): regenerating
     documents.parquet mid-process must make BOTH the jaccard-pairs memo
-    AND the underlying shingle memo (_DOC_SH_MEMO) miss, so the rebuilt
+    AND the underlying shingle memo (text.doc_sh) miss, so the rebuilt
     staged pairs reflect the NEW corpus content — not merely churn the
     memo key while serving pairs derived from stale checkpointed
     shingles (which would persist wrong pairs on disk under the fresh
@@ -288,12 +303,6 @@ def test_jaccard_memo_misses_when_corpus_regenerated(spark, sf_dir, tmp_path):
     import shutil as _sh
 
     import duckdb
-
-    from energy_emissions_lakehouse_spark.fsutil import (
-        staging_dir as _staging_dir,
-        table_cache_key,
-    )
-    from energy_emissions_lakehouse_spark.queries import text as text_q
 
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -308,10 +317,10 @@ def test_jaccard_memo_misses_when_corpus_regenerated(spark, sf_dir, tmp_path):
             for r in text_q.ngram_jaccard_pairs(spark, sdir).collect()
         }
         assert (1, 2) not in pairs_v1  # random texts: not near-dups
-        n_keys = len(text_q._JACCARD_PAIRS_MEMO)
+        n_keys = len(session_memo_keys(spark, "text.jaccard_pairs"))
         # same corpus version: warm hit, no new memo entry
         text_q.ngram_jaccard_pairs(spark, sdir)
-        assert len(text_q._JACCARD_PAIRS_MEMO) == n_keys
+        assert len(session_memo_keys(spark, "text.jaccard_pairs")) == n_keys
         # REGENERATE the corpus with different content: docs 1 and 2
         # become identical same-lang texts -> a guaranteed sim-1.0 pair
         dup = "alpha beta gamma delta epsilon zeta eta theta"
@@ -334,14 +343,249 @@ def test_jaccard_memo_misses_when_corpus_regenerated(spark, sf_dir, tmp_path):
             (r.a_id, r.b_id)
             for r in text_q.ngram_jaccard_pairs(spark, sdir).collect()
         }
-        assert len(text_q._JACCARD_PAIRS_MEMO) == n_keys + 1
+        assert (
+            len(session_memo_keys(spark, "text.jaccard_pairs")) == n_keys + 1
+        )
         # the DATA freshness pin: the rebuilt pairs see the new content
         assert (1, 2) in pairs_v2
     finally:
         for k in keys:
-            _sh.rmtree(os.path.join(_staging_dir("jaccard_pairs"), k),
+            _sh.rmtree(os.path.join(staging_dir("jaccard_pairs"), k),
                        ignore_errors=True)
-        for memo in (text_q._JACCARD_PAIRS_MEMO, text_q._DOC_SH_MEMO,
-                     text_q._DOC_5G_MEMO):
-            for k in [k for k in memo if sdir in str(k)]:
-                memo.pop(k, None)
+
+
+# ------------------------------------------------------ the session memo
+
+
+def test_same_session_same_file_returns_same_handle(spark, sf_dir):
+    a = t(spark, sf_dir, "region")
+    b = t(spark, sf_dir, "region")
+    assert a is b
+    assert a.count() == b.count() > 0
+
+
+def _events_ts(spark, d: str) -> bool:
+    return tables._events_ts_is_nanos(os.path.join(d, "events.parquet"))
+
+
+#: memo kind -> (the source file it keys on, a call served from it)
+_SOURCE_KEYED_MEMOS = {
+    "tables.t": ("region", lambda spark, d: t(spark, d, "region")),
+    "tables.events_ts": ("events", _events_ts),
+    "text.doc_sh": ("documents", text_q._doc_sh),
+    "text.doc_5g": ("documents", text_q._doc_5g),
+    "text.xs_windows": ("documents", text_q._xs_windows),
+    "text.jaccard_pairs": ("documents", text_q.ngram_jaccard_pairs),
+    "vectors.emb_count": ("embeddings", vec_q._emb_corpus_count),
+}
+
+
+def _builds(spark, kind: str) -> int:
+    if kind == "tables.events_ts":  # process-global lru_cache, not a memo
+        return tables._ts_is_nanos.cache_info().misses
+    return len(session_memo_keys(spark, kind))
+
+
+@pytest.mark.parametrize("kind", sorted(_SOURCE_KEYED_MEMOS))
+def test_mtime_bump_invalidates(spark, sf_dir, tmp_path, kind):
+    """Touching the source (same content, new mtime) must rebuild every
+    memo derived from it; an untouched source is a warm hit."""
+    table, call = _SOURCE_KEYED_MEMOS[kind]
+    d = str(tmp_path)
+    dst = os.path.join(d, f"{table}.parquet")
+    shutil.copyfile(os.path.join(sf_dir, f"{table}.parquet"), dst)
+    jac_keys = [table_cache_key(d, table, "jac", text_q.JACCARD_THRESHOLD)]
+    try:
+        a = call(spark, d)
+        n = _builds(spark, kind)
+        assert call(spark, d) is a  # warm: served from the memo
+        assert _builds(spark, kind) == n
+        os.utime(dst, ns=(os.stat(dst).st_mtime_ns + 10**9,) * 2)
+        jac_keys.append(
+            table_cache_key(d, table, "jac", text_q.JACCARD_THRESHOLD)
+        )
+        b = call(spark, d)
+        assert _builds(spark, kind) == n + 1
+        if isinstance(a, DataFrame):
+            assert a is not b
+            assert b.count() == a.count()
+        else:
+            assert b == a
+    finally:
+        for k in jac_keys:
+            shutil.rmtree(os.path.join(staging_dir("jaccard_pairs"), k),
+                          ignore_errors=True)
+
+
+def test_rewritten_file_serves_new_rows(spark, sf_dir, tmp_path):
+    dst_dir = tmp_path / "sfgen"
+    dst_dir.mkdir()
+    dst = str(dst_dir / "region.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "region.parquet"), dst)
+    n0 = t(spark, str(dst_dir), "region").count()
+    # swap in a larger file: the memo must serve the NEW data
+    bigger = t(spark, sf_dir, "region").unionAll(t(spark, sf_dir, "region"))
+    tmp_out = str(dst_dir / "out")
+    bigger.coalesce(1).write.mode("overwrite").parquet(tmp_out)
+    import glob
+
+    part = glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
+    shutil.copyfile(part, dst)
+    assert t(spark, str(dst_dir), "region").count() == 2 * n0
+
+
+def test_threads_sharing_a_session_get_one_handle_per_key(
+    spark, sf_dir, tmp_path
+):
+    """Four threads on one session race every memo/stager kind; orders is
+    a fresh copy, so the partitioned-orders stager really builds in all
+    four at once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from energy_emissions_lakehouse_spark.medallion import staging
+    from energy_emissions_lakehouse_spark.queries.core import (
+        _partitioned_orders_path,
+    )
+    from energy_emissions_lakehouse_spark.sources.pydatasource import (
+        register_synthetic_source,
+    )
+
+    d = str(tmp_path)
+    shutil.copyfile(os.path.join(sf_dir, "orders.parquet"),
+                    os.path.join(d, "orders.parquet"))
+    calls = {
+        "t": lambda: t(spark, sf_dir, "region"),
+        "layer": lambda: staging.layer(spark, "dim_region"),
+        "doc_sh": lambda: text_q._doc_sh(spark, sf_dir),
+        "register": lambda: register_synthetic_source(spark),
+        "orders_by_year": lambda: _partitioned_orders_path(spark, d),
+    }
+
+    def run_all(_=None) -> dict:
+        return {name: fn() for name, fn in calls.items()}
+
+    base = None
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            runs = list(pool.map(run_all, range(4)))
+        base = os.path.dirname(runs[0]["orders_by_year"])
+        sequential = run_all()
+        for name in calls:
+            handles = [r[name] for r in runs] + [sequential[name]]
+            if isinstance(handles[0], DataFrame):
+                assert all(h is handles[0] for h in handles), name
+            else:
+                assert len(set(handles)) == 1, name
+        # the one build is whole: no scratch left, every row present
+        family_dir, key = os.path.split(base)
+        assert not [e for e in os.listdir(family_dir) if e.startswith(key + ".")]
+        orders = spark.read.parquet(os.path.join(d, "orders.parquet"))
+        by_year = spark.read.parquet(sequential["orders_by_year"])
+        assert by_year.count() == orders.count()
+        region = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
+        assert sorted(sequential["t"].collect()) == sorted(region.collect())
+        assert len(session_memo_keys(spark)) <= SESSION_MEMO_MAX
+    finally:
+        if base:
+            shutil.rmtree(base, ignore_errors=True)
+
+
+def test_session_memo_stress_one_value_per_key_and_bounded():
+    """More threads than cores, a tiny switch interval: all threads miss
+    each key at once and build it concurrently, yet every one gets the
+    first insert; the memo never grows past its bound."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from energy_emissions_lakehouse_spark.fsutil import session_memo
+
+    class Session:  # any weak-referenceable object keys a memo
+        pass
+
+    session = Session()
+    n_threads, n_rounds = 16, 20
+    barrier = threading.Barrier(n_threads)
+    served: list[list] = [[] for _ in range(n_rounds)]
+    guard = threading.Lock()
+
+    def slow_build() -> object:
+        time.sleep(0.001)  # widen the build window the lock must not hold
+        return object()
+
+    def worker(w: int) -> None:
+        for r in range(n_rounds):
+            barrier.wait(timeout=30)
+            v = session_memo(session, ("race", r), slow_build)
+            with guard:
+                served[r].append(v)
+        barrier.wait(timeout=30)  # no eviction while a round is in flight
+        for k in range(SESSION_MEMO_MAX):
+            session_memo(session, ("fill", w, k), object)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            for f in [pool.submit(worker, w) for w in range(n_threads)]:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    for r, values in enumerate(served):
+        assert len(values) == n_threads
+        assert all(v is values[0] for v in values), f"round {r}"
+    assert len(session_memo_keys(session)) == SESSION_MEMO_MAX
+
+
+def _calls(path: str):
+    """(enclosing function, dotted callee, first arg) of every call."""
+    tree = ast.parse(open(path, encoding="utf-8").read())
+    out = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                callee = (
+                    f"{f.value.id}.{f.attr}"
+                    if isinstance(f, ast.Attribute)
+                    and isinstance(f.value, ast.Name)
+                    else getattr(f, "id", "")
+                )
+                arg = child.args[0] if child.args else None
+                out.append((name, callee, getattr(arg, "id", None)))
+            walk(child, name)
+
+    walk(tree, None)
+    return out
+
+
+def test_no_ad_hoc_session_memos_or_stagers():
+    """Every in-process memo goes through fsutil.session_memo (keyed on the
+    session object, never on ``id(spark)``) and every build-once through
+    fsutil.staged_artifact: an ``os.rename`` elsewhere is a hand-rolled
+    stager.  The vtable/catalog commit protocols and the flush-sentinel
+    publish (which appends to a published directory) are the exceptions."""
+    pkg = os.path.dirname(energy_emissions_lakehouse_spark.__file__)
+    rename_ok = {"fsutil.py", "operators/vtable.py", "operators/catalog.py"}
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            for fn, callee, arg in _calls(path):
+                if callee == "id" and arg == "spark":
+                    found.append(f"{rel}:{fn}: id(spark)")
+                if callee in ("os.rename", "os.replace") and not (
+                    rel in rename_ok
+                    or (rel, fn) == ("streaming/jobs.py",
+                                     "read_events_stream_with_flush")
+                ):
+                    found.append(f"{rel}:{fn}: {callee}")
+    assert not found, found

@@ -748,9 +748,9 @@ def mmr_diversified_topk(spark, sf_dir) -> DataFrame:
     import pandas as pd
 
     emb = t(spark, sf_dir, "embeddings")
-    milli = F.transform(
-        sim.as_double(F.col("embedding")),
-        lambda x: F.round(x * 1000, 0).cast("long"),
+    milli = F.expr(
+        f"transform({sim.as_double('embedding')}, "
+        "x -> CAST(round(x * 1000, 0) AS BIGINT))"
     )
     vecs = emb.select("vec_id", milli.alias("v"))
     qid = vecs.agg(F.min("vec_id").alias("qid"))

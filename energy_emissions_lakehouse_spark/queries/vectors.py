@@ -37,7 +37,7 @@ def _pq_staged_model(
 
     def _train() -> None:
         emb = t(spark, sf_dir, "embeddings").select(
-            "vec_id", sim.as_double(F.col("embedding")).alias("v")
+            "vec_id", F.expr(sim.as_double("embedding")).alias("v")
         )
         encoded, codebooks = sim.pq_model(emb, m=m, ksub=ksub, iters=iters)
         model["encoded"], model["codebooks"] = encoded, codebooks.coalesce(1)
@@ -100,12 +100,12 @@ _BUCKET_SQL = _bucket_sql(sim.NUM_HYPERPLANES)
 )
 def embedding_norm_stats(spark, sf_dir) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    v = sim.as_double(F.col("embedding"))
+    v_norm = F.expr(sim.norm(sim.as_double("embedding")))
     n = F.count(F.lit(1))
     return emb.groupBy(F.col("label").cast("long").alias("label")).agg(
         n.alias("n_vectors"),
         F.round(
-            scaled_sum(sim.norm(v), scale=1_000_000) / n.cast("double"), 6
+            scaled_sum(v_norm, scale=1_000_000) / n.cast("double"), 6
         ).alias("avg_norm"),
     )
 
@@ -149,9 +149,9 @@ def cosine_topk_bruteforce(spark, sf_dir) -> DataFrame:
 )
 def ann_bucket_histogram(spark, sf_dir) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    v = sim.as_double(F.col("embedding"))
     return (
-        emb.select(sim.lsh_bucket(v).alias("bucket"))
+        emb.selectExpr(f"{sim.as_double('embedding')} AS v")
+        .selectExpr(f"{sim.lsh_bucket('v')} AS bucket")
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -183,7 +183,7 @@ def ann_bucket_histogram(spark, sf_dir) -> DataFrame:
 )
 def embedding_cosine_neardup(spark, sf_dir) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("embedding")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("embedding")
     )
     scaled = emb.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") + 200000).alias("vec_id"),
@@ -244,7 +244,7 @@ def embedding_neardup_adaptive(spark, sf_dir) -> DataFrame:
     metadata (one scalar to the driver at plan time, standard for sizing
     an index), then the same bucket equi-join as cosine_neardup_pairs."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("embedding")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("embedding")
     )
     h = sim.num_hyperplanes_for(emb.count(), target_occupancy=_ADAPTIVE_OCC)
     copies = emb.filter(F.col("vec_id") % 25 == 0).select(
@@ -396,7 +396,7 @@ def ann_multiprobe_topk(spark, sf_dir) -> DataFrame:
 )
 def ivf_topk_nprobe1(spark, sf_dir) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     centroids = emb.filter(F.col("vec_id") % 100 == 1)
     return sim.ivf_topk(
@@ -459,36 +459,21 @@ def _kmeans_oracle_sql(k: int = 8, iters: int = 3) -> str:
     "embedding_kmeans_clusters",
     oracle=_kmeans_oracle_sql(k=8, iters=3),
     survey="extension (similarity, iterative): distributed Lloyd k-means "
-    "— deterministic seed (k lowest ids), per-iteration broadcast-assign "
-    "(map-only) + posexplode hash-aggregate update; model state is k x d, "
-    "quantized to 9 dp per iteration (cross-engine bit-reproducible) and "
-    "localCheckpoint'd, the data never collects. The IVF centroid "
-    "TRAINING step that ivf_topk_nprobe1 consumes; the DuckDB oracle "
-    "replays all 3 Lloyd iterations exactly (value-hash parity), and "
-    "tests additionally assert inertia is monotone non-increasing",
+    "— deterministic seed (k lowest ids); each round is one vectorised "
+    "mapInArrow pass that takes the k x d model as a closure value and "
+    "returns per-cluster partial sums. The model state (k x d, quantized "
+    "to 9 dp per round with DuckDB's ROUND rule, cross-engine "
+    "bit-reproducible) collects to the driver; the data never does. The "
+    "IVF centroid TRAINING step that ivf_topk_nprobe1 consumes; the DuckDB "
+    "oracle replays all 3 Lloyd iterations exactly (value-hash parity), "
+    "and tests additionally assert inertia is monotone non-increasing",
 )
 def embedding_kmeans_clusters(spark, sf_dir) -> DataFrame:
     """8-way k-means over the embedding corpus, 3 Lloyd iterations.
     Returns (cluster_id, n_members, inertia) — the training half of the
     IVF index pipeline."""
-    # round-6 loop audit: the final assign + k-row census would otherwise
-    # execute at the caller session's partition count when the driver
-    # collects; materialize inside the same override the trainer uses.
-    # The lazy plan lives in _kmeans_frame so the window-free argmin pin
-    # stays inspectable (the checkpoint opaques the returned frame).
-    from energy_emissions_lakehouse_spark.session import (
-        loop_shuffle_partitions,
-    )
-
-    with loop_shuffle_partitions(spark, 8):
-        return _kmeans_frame(spark, sf_dir).localCheckpoint(eager=True)
-
-
-def _kmeans_frame(spark, sf_dir) -> DataFrame:
-    """Lazy Lloyd plan for ``embedding_kmeans_clusters`` (see the
-    execution wrapper there)."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     return sim.kmeans_lloyd(emb, k=8, iters=3)
 
@@ -539,7 +524,7 @@ def ivf_topk_nprobe2(spark, sf_dir) -> DataFrame:
     recall/cost dial of the IVF index demonstrated as a first-class
     operator."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     centroids = emb.filter(F.col("vec_id") % 100 == 1)
     return sim.ivf_topk_nprobe(
@@ -677,7 +662,7 @@ def pq_encode_stats(spark, sf_dir) -> DataFrame:
     """PQ codebook training + corpus encoding: per (subspace, code) member
     counts and summed reconstruction error."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     enc = sim.pq_encode(emb, m=4, ksub=16, iters=2)
     return (
@@ -711,7 +696,7 @@ def pq_adc_topk(spark, sf_dir) -> DataFrame:
     Serves against the staged model (index built once per corpus) — the
     timed path is ADC serving, not Lloyd training."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     return sim.pq_adc_topk(
         emb, query_pred=F.col("vec_id") % 100 == 0, k=3, m=16, ksub=32,
@@ -860,7 +845,7 @@ def pq_adc_rerank_topk(spark, sf_dir) -> DataFrame:
     embedding_neardup_adaptive's H) + exact re-rank top-3 per query
     (vec_id%100), served against the staged model (_pq_staged_model)."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     return sim.pq_adc_rerank_topk(
         emb, query_pred=F.col("vec_id") % 100 == 0, k=3,
@@ -902,7 +887,7 @@ def pq_adc_rerank_hi_topk(spark, sf_dir) -> DataFrame:
     rounds) halve the exact-re-rank shortlist (GREATEST(20, N//50)) at
     equal-or-better recall — served against its own staged index."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     n = _emb_corpus_count(spark, sf_dir)
     return sim.pq_adc_rerank_topk(
@@ -973,7 +958,7 @@ def semantic_dedup_prune(spark, sf_dir) -> DataFrame:
     semantic deduplication: coarse k-partition via nearest seed centroid,
     exact cosine near-dup pruning within each cluster only."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     copies = emb.filter(F.col("vec_id") % 25 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "v"
@@ -991,30 +976,17 @@ def semantic_dedup_prune(spark, sf_dir) -> DataFrame:
     # + broadcast argmin with no shuffle, the cheap kind of recompute.
     member = sim.ivf_assign(aug, centroids)
 
-    x = member.select(
-        F.col("centroid_id"),
-        F.col("vec_id").alias("x_id"),
-        F.col("v").alias("x_v"),
-        sim.norm(F.col("v")).alias("x_n"),
+    x = member.selectExpr(
+        "centroid_id", "vec_id AS x_id", "v AS x_v", f"{sim.norm('v')} AS x_n"
     )
-    y = member.select(
-        F.col("centroid_id"),
-        F.col("vec_id").alias("pruned_id"),
-        F.col("v").alias("y_v"),
-        sim.norm(F.col("v")).alias("y_n"),
+    y = member.selectExpr(
+        "centroid_id", "vec_id AS pruned_id", "v AS y_v", f"{sim.norm('v')} AS y_n"
     )
+    cos = sim.cosine_pre("x_v", "x_n", "y_v", "y_n")
     pruned = (
         x.join(y, "centroid_id")
         .filter(F.col("x_id") < F.col("pruned_id"))
-        .filter(
-            F.round(
-                sim.cosine_pre(
-                    F.col("x_v"), F.col("x_n"), F.col("y_v"), F.col("y_n")
-                ),
-                6,
-            )
-            >= 0.9
-        )
+        .filter(f"round({cos}, 6) >= 0.9D")
         .select(
             F.col("centroid_id").alias("p_cid"),
             F.col("pruned_id"),
@@ -1122,7 +1094,7 @@ def ivfpq_adc_topk(spark, sf_dir) -> DataFrame:
     over seed centroids (vec_id%100==1), ADC-scored through the staged
     m=16 x 32 PQ index."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     centroids = emb.filter(F.col("vec_id") % 100 == 1)
     return sim.ivfpq_adc_topk(
@@ -1224,7 +1196,7 @@ def pq_incremental_assign(spark, sf_dir) -> DataFrame:
     batch_raw = (
         t(spark, sf_dir, "embeddings")
         .filter(is_batch)
-        .select("vec_id", sim.as_double(F.col("embedding")).alias("v"))
+        .select("vec_id", F.expr(sim.as_double("embedding")).alias("v"))
     )
     # batch_enc has a SINGLE consumer inside _merged_cell_census, so the
     # batch is encoded exactly once (a second consumer would re-execute
@@ -1317,7 +1289,7 @@ def embedding_dim_profile(spark, sf_dir) -> DataFrame:
     dead-dim flag. Output is dimension-count-sized regardless of corpus."""
     emb = t(spark, sf_dir, "embeddings")
     comp = emb.select(
-        F.posexplode(sim.as_double(F.col("embedding"))).alias("dim", "x")
+        F.posexplode(F.expr(sim.as_double("embedding"))).alias("dim", "x")
     ).select(
         F.col("dim").cast("long").alias("dim"),
         F.round(F.col("x") * 1000, 0).cast("long").alias("milli"),
@@ -1645,7 +1617,7 @@ def graph_ann_ivf_beam_topk(spark, sf_dir) -> DataFrame:
     neighbor graph, route each query to its home cell's entry point,
     beam-walk 2 rounds, exact-rank the visited set."""
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     centroids = emb.filter(F.col("vec_id") % 100 == 1)
     return (

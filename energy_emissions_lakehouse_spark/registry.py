@@ -19,10 +19,13 @@ Cross-engine exactness policy (why results hash-match bit-for-bit):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from energy_emissions_lakehouse_spark.session import ship_package
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -47,12 +50,19 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[SparkQuery], SparkQuery]:
-    """Decorator: add a (spark_fn, oracle_sql) pair under ``name``."""
+    """Decorator: add a (spark_fn, oracle_sql) pair under ``name``.  The
+    registered builder first puts the package on the Python workers' path
+    (``session.ship_package``), so every query runs from any cwd."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, survey, doc, tuple(tags))
+
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(ship_package(spark), sf_dir)
+
+        _REGISTRY[name] = QuerySpec(name, build, oracle, survey, doc, tuple(tags))
         return fn
 
     return deco

@@ -33,6 +33,24 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: The directory holding this package: Python workers import it from here.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ship_package(spark: SparkSession) -> SparkSession:
+    """Put the package's parent directory on the Python workers' path, so a
+    worker can unpickle package-level code (DataSources, UDF bodies) from
+    any working directory.  ``sc.environment`` is read when each Python
+    function is created, so this works on a session the caller built, as
+    long as it runs before the query builds its Python functions.  Local
+    mode only: on a cluster, ship the package with ``addPyFile`` instead."""
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *parts])
+    return spark
+
+
 def get_spark(
     app_name: str = "energy-emissions-lakehouse",
     cpus: int | None = None,
@@ -76,7 +94,7 @@ def get_spark(
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
-    spark = configure_runtime(builder.getOrCreate())
+    spark = ship_package(configure_runtime(builder.getOrCreate()))
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

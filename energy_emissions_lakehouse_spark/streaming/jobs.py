@@ -1352,51 +1352,32 @@ def rowwise_pq_code_cols(codebook_rows, m: int, dim: int) -> list:
     projection (``_d{s}``) so the argmin's two references don't inline
     the transform twice.
 
-    Returns (slices, dists, codes): three projection stages to apply in
-    order, each referencing only the previous stage's columns."""
+    Returns (slices, dists, codes): three lists of SQL projections to
+    apply in order with ``selectExpr``, each referencing only the previous
+    stage's columns."""
     from energy_emissions_lakehouse_spark.operators import similarity as sim
 
     by_sub: dict[int, list] = {}
     for r in codebook_rows:
         by_sub.setdefault(int(r.sub), []).append((int(r.code), list(r.c_vec)))
-    for s in by_sub:
-        by_sub[s].sort()
-
-    mats = {
-        s: F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in c_vec])
-                for _code, c_vec in by_sub[s]
-            ]
+    slices, dists, codes = [], [], []
+    for s in range(m):
+        cents = sorted(by_sub[s])
+        # repr() is the shortest round-tripping text: each literal parses
+        # back to the identical double
+        mat = ", ".join(
+            "array(" + ", ".join(f"{float(x)!r}D" for x in c_vec) + ")"
+            for _code, c_vec in cents
         )
-        for s in by_sub
-    }
-    code_arrs = {
-        s: F.array(*[F.lit(code) for code, _ in by_sub[s]]) for s in by_sub
-    }
-    slices = [
-        F.slice("v", s * dim + 1, dim).alias(f"_s{s}") for s in range(m)
-    ]
-    def _dist_expr(s: int):
-        # NB: a 2-arg lambda would make F.transform pass the array INDEX
-        # as the second argument — close over s via a factory instead
-        return F.transform(
-            mats[s], lambda c: sim.sq_l2(F.col(f"_s{s}"), c, dim)
-        ).alias(f"_d{s}")
-
-    dists = [_dist_expr(s) for s in range(m)]
-    codes = [
-        F.struct(
-            F.lit(s).alias("sub"),
-            F.element_at(
-                code_arrs[s],
-                F.array_position(
-                    F.col(f"_d{s}"), F.array_min(F.col(f"_d{s}"))
-                ).cast("int"),
-            ).alias("code"),
-        ).alias(f"_c{s}")
-        for s in range(m)
-    ]
+        code_arr = ", ".join(str(code) for code, _ in cents)
+        slices.append(f"slice(v, {s * dim + 1}, {dim}) AS _s{s}")
+        dists.append(
+            f"transform(array({mat}), c -> {sim.sq_l2(f'_s{s}', 'c', dim)}) AS _d{s}"
+        )
+        codes.append(
+            f"named_struct('sub', {s}, 'code', element_at(array({code_arr}), "
+            f"CAST(array_position(_d{s}, array_min(_d{s})) AS INT))) AS _c{s}"
+        )
     return slices, dists, codes
 
 
@@ -1425,10 +1406,10 @@ def stream_pq_encode_batch(
     enc = (
         spark.readStream.schema(schema)
         .parquet(src)
-        .select("vec_id", sim.as_double(F.col("embedding")).alias("v"))
-        .select("vec_id", *slices)
-        .select("vec_id", *dists)
-        .select("vec_id", *codes)
+        .selectExpr("vec_id", f"{sim.as_double('embedding')} AS v")
+        .selectExpr("vec_id", *slices)
+        .selectExpr("vec_id", *dists)
+        .selectExpr("vec_id", *codes)
         .select(
             "vec_id",
             F.explode(

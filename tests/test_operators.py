@@ -205,7 +205,7 @@ def test_kmeans_invariants(spark, sf_dir):
     from energy_emissions_lakehouse_spark.tables import t as load
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     n = emb.count()
 
@@ -506,7 +506,7 @@ def test_pq_encode_covers_corpus_and_reduces_distortion(spark, sf_dir):
     from energy_emissions_lakehouse_spark.tables import t
 
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     n = emb.count()
     trained = sim.pq_encode(emb, m=4, ksub=16, iters=2)
@@ -547,7 +547,7 @@ def test_pq_adc_recall_ladder(spark, sf_dir):
         )
 
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
 
     def recall(m, ksub):
@@ -599,7 +599,7 @@ def test_pq_incremental_assign_is_exact_and_batch_only(spark, sf_dir):
         spark, sf_dir, m=16, ksub=32, iters=2
     )
     emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     is_batch = F.col("vec_id") % 10 == 0
     merged = encoded.filter(~is_batch).unionByName(

@@ -84,16 +84,12 @@ def _lazy_frame_builders():
     from energy_emissions_lakehouse_spark.queries.text import (
         _dedup_cluster_frame,
     )
-    from energy_emissions_lakehouse_spark.queries.vectors import (
-        _kmeans_frame,
-    )
 
     return {
         "pagerank_nation_trade": _pagerank_frame,
         "lpa_communities_copurchase": _lpa_frame,
         "kcore_copurchase": _kcore_frame,
         "dedup_cluster_components": _dedup_cluster_frame,
-        "embedding_kmeans_clusters": _kmeans_frame,
     }
 
 
@@ -432,24 +428,13 @@ def test_scan_pushdown_and_column_pruning(spark, sf_dir):
 def test_argmin_paths_use_aggregates_not_windows(spark, sf_dir, name):
     """IVF assignment, Lloyd assignment, and PQ encoding keep only the
     rank-1 row per key, so they must be min(struct) grouped aggregates
-    (map-side partial combine), never row_number windows that sort-shuffle
-    the full scored set. ivf_topk_nprobe1's final top-k window is over the
-    QUERY subset only — the corpus-sized assignment pass is the part that
-    must stay window-free, so nprobe1 is excluded and kmeans/pq (pure
-    assignment pipelines) assert zero Window nodes.
-
-    embedding_kmeans_clusters eagerly checkpoints inside its loop-local
-    shuffle override (round 6), which would make this pin vacuous (the
-    returned plan is just the checkpoint RDD scan) — inspect its LAZY
-    plan (_kmeans_frame) instead."""
-    if name == "embedding_kmeans_clusters":
-        from energy_emissions_lakehouse_spark.queries.vectors import (
-            _kmeans_frame,
-        )
-
-        df = _kmeans_frame(spark, sf_dir)
-    else:
-        df = all_specs()[name].spark(spark, sf_dir)
+    (map-side partial combine) or a vectorised argmin (Lloyd's mapInArrow
+    pass), never row_number windows that sort-shuffle the full scored set.
+    ivf_topk_nprobe1's final top-k window is over the QUERY subset only —
+    the corpus-sized assignment pass is the part that must stay
+    window-free, so nprobe1 is excluded and kmeans/pq (pure assignment
+    pipelines) assert zero Window nodes."""
+    df = all_specs()[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_windows = sum(
         1

@@ -26,7 +26,7 @@ def test_stream_encode_matches_frozen_batch(spark, sf_dir):
     raw = (
         t(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % 10 == 0)
-        .select("vec_id", sim.as_double(F.col("embedding")).alias("v"))
+        .select("vec_id", F.expr(sim.as_double("embedding")).alias("v"))
     )
     ref = {
         (r.vec_id, r.sub): r.code

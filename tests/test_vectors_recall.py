@@ -42,7 +42,7 @@ def test_pq_rerank_recall_at_sf01(spark):
         for r in pq_adc_rerank_topk(spark, SF01).collect()
     }
     emb = t(spark, SF01, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -54,7 +54,7 @@ def test_pq_rerank_recall_at_sf01(spark):
         .select(
             "query_id",
             "cand_id",
-            F.round(sim.sq_l2(F.col("qv"), F.col("cv")) * F.lit(1e6), 0)
+            F.round(F.expr(sim.sq_l2("qv", "cv")) * F.lit(1e6), 0)
             .cast("long")
             .alias("d_micro"),
         )
@@ -87,7 +87,7 @@ def test_pq_hi_tier_recall_at_half_shortlist(spark):
         for r in pq_adc_rerank_hi_topk(spark, SF01).collect()
     }
     emb = t(spark, SF01, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
     )
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -99,7 +99,7 @@ def test_pq_hi_tier_recall_at_half_shortlist(spark):
         .select(
             "query_id",
             "cand_id",
-            F.round(sim.sq_l2(F.col("qv"), F.col("cv")) * F.lit(1e6), 0)
+            F.round(F.expr(sim.sq_l2("qv", "cv")) * F.lit(1e6), 0)
             .cast("long")
             .alias("d_micro"),
         )

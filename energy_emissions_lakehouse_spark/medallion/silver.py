@@ -1,10 +1,12 @@
 """Bronze -> Silver cleaning (reference src/10_silver/bronze_to_silver.py).
 
-Operation ORDER is semantic and preserved exactly (SURVEY.md §2.3 critical
-note): dedup -> type coercion -> trim -> range filters -> median imputation
--> date dropna. Because the null-rejecting BETWEEN filters run *before* the
-median fillna, the imputation is dead code — faithfully kept (and cheap: one
-extra tiny aggregate).
+The reference's operation order is semantic (SURVEY.md §2.3 critical
+note): dedup -> type coercion -> trim -> range filters -> median
+imputation -> date dropna.  The median imputation is omitted here: the
+null-rejecting BETWEEN filters run before it, so no null is left for the
+fillna to replace and it never changes a row.  The DuckDB oracle
+(sql_oracle.py) keeps the imputation in the reference order, so it stays
+the independent check that the omission is sound.
 
 All coercions are TRY_CAST / to_timestamp style (null on failure), matching
 pandas ``errors="coerce"`` regardless of the session's ANSI mode.
@@ -18,17 +20,6 @@ from pyspark.sql import functions as F
 TEMP_RANGE = (-40.0, 60.0)  # bronze_to_silver.py:35
 CONS_RANGE = (0.0, 2_000_000.0)  # bronze_to_silver.py:36
 CO2_RANGE = (0.0, 5_000_000.0)  # bronze_to_silver.py:66
-
-
-def _impute_median(df: DataFrame, col: str) -> DataFrame:
-    """fillna(median) via a broadcast 1-row aggregate — no driver collect.
-    Exact percentile (not approx) for pandas-median parity (SURVEY §2.6 A8)."""
-    med = df.agg(F.percentile(F.col(col), F.lit(0.5)).alias("__med"))
-    return (
-        df.crossJoin(F.broadcast(med))
-        .withColumn(col, F.coalesce(F.col(col), F.col("__med")))
-        .drop("__med")
-    )
 
 
 def clean_energy(bronze: DataFrame) -> DataFrame:
@@ -45,7 +36,6 @@ def clean_energy(bronze: DataFrame) -> DataFrame:
     )
     df = df.filter(F.col("temperature_c").between(*TEMP_RANGE))  # F1 (:35)
     df = df.filter(F.col("consumption_mwh").between(*CONS_RANGE))  # F1 (:36)
-    df = _impute_median(df, "consumption_mwh")  # A8 (:39) — dead code by order
     return df.filter(F.col("date").isNotNull())  # F2 (:42)
 
 
@@ -59,5 +49,4 @@ def clean_emissions(bronze: DataFrame) -> DataFrame:
         F.expr("TRY_CAST(co2_tonnes AS DOUBLE)").alias("co2_tonnes"),
     )
     df = df.filter(F.col("co2_tonnes").between(*CO2_RANGE))
-    df = _impute_median(df, "co2_tonnes")
     return df.filter(F.col("date").isNotNull())

@@ -55,17 +55,22 @@ Scale notes (100 TB): data operations are ordinary distributed Spark
 jobs over parquet; only O(#segments) path metadata ever crosses the
 driver, exactly like Delta's log.  Commits fold per-segment min/max
 column stats from the parquet footers (Iceberg manifests), which powers
-file-level range pruning (:meth:`read_pruned`) and the touched-file
-MERGE (:meth:`merge_upsert_pruned` — only segments whose key range
-overlaps the source are rewritten; ``merge_upsert``/``delete_where``
-remain the whole-set copy-on-write forms).  On a real cluster the log
-lives on an object store with conditional-put (or a log store service)
-instead of POSIX ``link``.
+file-level range pruning (:meth:`read_pruned`) and touched-file DML.
+Every DML method takes one of two shapes, the Delta protocol's split:
+copy-on-write (``merge_upsert``, ``delete_where``, ``update_where``,
+``overwrite_where``, ``overwrite_range``, ``replace_where_segment``)
+rewrites only the segments that can hold affected rows — found exactly
+from the predicate, or from key-range stats for MERGE — and leaves every
+other segment live; merge-on-read (the ``*_mor`` methods) masks the
+affected rows with a deletion vector and rewrites nothing.  On a real
+cluster the log lives on an object store with conditional-put (or a log
+store service) instead of POSIX ``link``.
 """
 
 from __future__ import annotations
 
 import base64
+import contextlib
 import functools
 import hashlib
 import json
@@ -75,10 +80,16 @@ import re
 import struct
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from energy_emissions_lakehouse_spark.operators.merge import (
+    upsert,
+    upsert_change_feed,
+)
 
 LOG_DIR = "_log"
 DATA_DIR = "data"
@@ -171,6 +182,67 @@ def _dv_fold(root: str, dvs: tuple[str, ...]) -> dict | None:
             if len(poss) > _DV_MAX_POSITIONS_PER_FILE:
                 return None
     return out
+
+
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of ``schema`` planned in the JVM alone — one built
+    from a Python list (``createDataFrame([], schema)``) starts Python
+    workers when executed, even with zero rows."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
+@contextlib.contextmanager
+def _persisted(df: DataFrame, shared: bool):
+    """``df`` persisted for the ``with`` body when ``shared`` — it feeds
+    more than one write job (a DML's data write and its change-data
+    write), so the scan runs once — and unpersisted on exit; otherwise
+    ``df`` as is."""
+    if not shared:
+        yield df
+        return
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _change_rows(df: DataFrame, kind: str) -> DataFrame:
+    """``df`` tagged as change-data rows of ``kind`` (Delta CDF's
+    ``_change_type``: insert / delete / update_preimage /
+    update_postimage)."""
+    return df.withColumn("_change_type", F.lit(kind))
+
+
+def _post_images(rows: DataFrame, assigns: dict[str, Column]) -> DataFrame:
+    """The UPDATE post-images of ``rows``: SET expressions applied,
+    evaluated on the pre-image."""
+    return rows.select(
+        *[assigns.get(c, F.col(c)).alias(c) for c in rows.columns]
+    )
+
+
+def _update_changes(rows: DataFrame, assigns: dict[str, Column]) -> DataFrame:
+    """The change rows of an UPDATE of ``rows``: one update_preimage and
+    one update_postimage per row."""
+    return _change_rows(rows, "update_preimage").unionByName(
+        _change_rows(_post_images(rows, assigns), "update_postimage")
+    )
+
+
+def _key_range_probe(source: DataFrame, key: str):
+    """The rebase probe of a merge: it read every row whose ``key`` falls
+    in the source's [min, max] range.  A zero-arg callable, so
+    :meth:`VersionedTable._commit_rebased` runs the tiny aggregate only
+    on a lost race, never on the uncontended path."""
+
+    def probe() -> list[tuple]:
+        mn, mx = source.agg(F.min(key), F.max(key)).first()
+        return [(key, mn, mx)] if mn is not None else []
+
+    return probe
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -520,11 +592,9 @@ def _check_constraint_defs(
                 f"constraint {name!r}: expression must be a non-empty "
                 "SQL predicate string"
             )
-        # empty local relation: full analysis (resolution + type check),
+        # empty frame: full analysis (resolution + type check),
         # zero scan.  collect() forces it; the result is always [].
-        spark.createDataFrame([], schema).where(
-            _violation_pred(expr_sql)
-        ).collect()
+        _empty_frame(spark, schema).where(_violation_pred(expr_sql)).collect()
 
 
 class VersionedTable:
@@ -1533,10 +1603,10 @@ class VersionedTable:
     ) -> tuple[set[str], set[str]]:
         """(live segments, active deletion vectors) at ``version`` in ONE
         checkpointed fold — O(tail) driver metadata, and every read needs
-        both.  DV semantics: a FULL-replace commit (overwrite /
-        copy-on-write delete / compact / whole-set merge) materializes
-        every DV through the read path it rewrote from, so the DV set
-        resets to empty there.  Partial rewrites (merge_upsert_pruned)
+        both.  DV semantics: a FULL-replace commit (overwrite, compact,
+        or a copy-on-write DML that touched every live segment)
+        materializes every DV through the read path it rewrote from, so
+        the DV set resets to empty there.  Partial copy-on-write rewrites
         keep DVs active: rows of removed segments simply stop matching
         (segment names are never reused), so a stale DV entry can only be
         dead weight, never a wrong delete."""
@@ -1811,19 +1881,19 @@ class VersionedTable:
             F.col("_metadata.row_index").alias("_dv_pos"),
         ]
 
-    def _write_dv(self, positions: DataFrame, version_hint: int) -> str | None:
+    def _write_dv(self, positions: DataFrame, version_hint: int) -> list[str]:
         """Write one immutable deletion-vector file under ``dv/``.  The
         payload is three narrow columns of row positions — tiny relative
         to the data it masks (the whole point of merge-on-read: a delete
         at 100 TB writes kilobytes, not rewritten segments) — so it is
         collapsed to one shuffle-of-positions output file.
 
-        Returns None when NO rows matched (checked from the written
-        parquet footers, no extra job): registering an empty DV would
-        permanently demote every later read from the plain scan to the
-        anti-join plan and make streams treat the commit as a change
-        commit — a pure-insert merge or no-op delete must stay a plain
-        append/no-op."""
+        Returns ``[rel]``, or ``[]`` when NO rows matched (checked from
+        the written parquet footers, no extra job): registering an empty
+        DV would permanently demote every later read from the plain scan
+        to the anti-join plan and make streams treat the commit as a
+        change commit — a pure-insert merge or no-op delete must stay a
+        plain append/no-op."""
         rel = os.path.join(
             DV_DIR, f"{_fmt_version(version_hint)}-{uuid.uuid4().hex[:8]}"
         )
@@ -1833,10 +1903,7 @@ class VersionedTable:
             .write.mode("error")
             .parquet(os.path.join(self.root, rel))
         )
-        if self._segment_rows(rel) == 0:
-            shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            return None
-        return rel
+        return self._nonempty(rel)
 
     def _check_present(self, version: int, rels: list[str]) -> None:
         missing = [
@@ -1898,7 +1965,7 @@ class VersionedTable:
             if v and any(f.name == k for f in schema.fields)
         }
         if not rels:
-            empty = self.spark.createDataFrame([], schema)
+            empty = _empty_frame(self.spark, schema)
             if keep_identity:
                 # honor the contract even on an empty live set: callers
                 # (touched-file discovery, the MOR mutations) select the
@@ -1994,7 +2061,7 @@ class VersionedTable:
                     if not parts_dfs:
                         # every part file of every rel fully enumerated
                         # and none exist — an empty (but present) live set
-                        return self.spark.createDataFrame([], schema)
+                        return _empty_frame(self.spark, schema)
                     fast = parts_dfs[0]
                     for other in parts_dfs[1:]:
                         fast = fast.unionAll(other)
@@ -2966,6 +3033,147 @@ class VersionedTable:
         )
         return v + 1
 
+    # ------------------------------------------------------------------ DML
+    def _rewrite_slice(
+        self,
+        op: str,
+        v: int,
+        schema: StructType,
+        dvs: list[str],
+        candidates: list[str],
+        touched: list[str],
+        rewrite: Callable[[DataFrame], DataFrame],
+        changes: Callable[[DataFrame], DataFrame],
+        extra: dict,
+        *,
+        skipped: list[str] = (),
+        new_rel: str | None = None,
+        probes=None,
+    ) -> int:
+        """Copy-on-write DML core (Delta's touched-file rewrite).
+
+        ``candidates`` are the live segments the operation read at
+        snapshot ``v`` (its conflict-check read set), ``touched`` the
+        ones among them holding affected rows, and ``skipped`` the live
+        segments log stats proved disjoint without a read.  ONE DV-aware
+        scan of ``touched`` feeds ``rewrite(slice)`` — the rows that
+        replace the touched segments, written as one segment and dropped
+        when empty — and, on CDF tables, ``changes(slice)``, the commit's
+        change rows.  The scan materializes the touched segments'
+        deletion vectors; every other segment stays live with its own.
+        ``new_rel`` is an already-written, validated batch the same
+        commit appends (its rows enter the change data as inserts); with
+        a batch, an empty ``touched`` has nothing to rewrite.
+        Commit-free when nothing is removed or added.  Returns the
+        version that committed."""
+        add = [new_rel] if new_rel is not None else []
+        slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
+        with _persisted(slice_df, self.cdf_enabled) as slice_df:
+            if touched or new_rel is None:
+                add += self._nonempty(
+                    self._write_segment(rewrite(slice_df), v + 1)
+                )
+            if not add and not touched:
+                return v
+            if self.cdf_enabled:
+                feed = changes(slice_df)
+                if new_rel is not None:
+                    # insert images from the batch ALREADY WRITTEN — the
+                    # input plan never recomputes
+                    batch = self.spark.read.schema(schema).parquet(
+                        os.path.join(self.root, new_rel)
+                    )
+                    feed = feed.unionByName(_change_rows(batch, "insert"))
+                extra["cdf"] = self._write_cdf(feed, v + 1)
+        extra["rewritten"] = len(touched)
+        extra["preserved"] = len(candidates) - len(touched) + len(skipped)
+        if skipped:
+            extra["stats_skipped"] = len(skipped)
+        return self._commit_rebased(
+            v, op, add=add, remove=list(touched), schema=schema,
+            extra=extra, read_files=candidates, probes=probes,
+        )
+
+    def _mask_rows(
+        self,
+        op: str,
+        v: int,
+        schema: StructType,
+        live: list[str],
+        matched: DataFrame,
+        changes: Callable[[DataFrame], DataFrame],
+        extra: dict,
+        *,
+        images: Callable[[DataFrame], DataFrame] | None = None,
+        probes=None,
+    ) -> int:
+        """Merge-on-read DML core (Delta deletion vectors / Iceberg
+        positional deletes): ``matched`` — rows of the identity-keeping
+        scan of ``live`` at snapshot ``v``, which already excludes rows
+        earlier DVs masked, so none is masked or imaged twice — land as
+        one deletion vector; with ``rows`` their data columns,
+        ``images(rows)`` (if given) land as one appended segment and, on
+        CDF tables, ``changes(rows)`` as the commit's change rows.
+        ZERO existing segments are rewritten; the deferred rewrite
+        amortizes into the next :meth:`compact`.  The operation read
+        every live file, so ``live`` is its conflict-check read set.
+        Commit-free when neither a DV nor an image row results (no empty
+        DV is ever registered — see :meth:`_write_dv`).  Returns the
+        version that committed."""
+        with _persisted(
+            matched, self.cdf_enabled or images is not None
+        ) as matched:
+            rows = matched.select(*[f.name for f in schema.fields])
+            dv_add = self._write_dv(matched, v + 1)
+            add = (
+                self._nonempty(self._write_segment(images(rows), v + 1))
+                if images is not None
+                else []
+            )
+            if dv_add:
+                extra["dv_add"] = dv_add
+            elif not add:
+                return v
+            if self.cdf_enabled:
+                extra["cdf"] = self._write_cdf(changes(rows), v + 1)
+        return self._commit_rebased(
+            v, op, add=add, remove=[], schema=schema, extra=extra,
+            read_files=live, probes=probes,
+        )
+
+    def _nonempty(self, rel: str) -> list[str]:
+        """``[rel]`` when the just-written directory holds rows (counted
+        from its footers, no job); otherwise it is deleted and ``[]``
+        returned — DML never registers an empty segment or DV."""
+        if self._segment_rows(rel):
+            return [rel]
+        shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+        return []
+
+    def _matched_segments(
+        self,
+        v: int,
+        rels: list[str],
+        schema: StructType,
+        dvs: list[str],
+        match: Column,
+    ) -> list[str]:
+        """EXACT touched-file discovery: which of ``rels`` hold at least
+        one live row where ``match`` is true?  One small job over an
+        identity-keeping, DV-aware scan — the predicate is pushed into
+        the parquet read (row-group stats skip non-matching groups at
+        the source) and only O(files) distinct segment names ever cross
+        the driver.  Exact discovery can never be optimistic: a segment
+        with no matching row needs no rewrite by definition."""
+        if not rels:
+            return []
+        scan = self._scan_segments(
+            v, rels, schema, dvs=dvs, keep_identity=True
+        )
+        by_base = {os.path.basename(r): r for r in rels}
+        hits = scan.where(match).select("_dv_seg").distinct().collect()
+        return sorted(by_base[row._dv_seg] for row in hits)
+
     def overwrite_where(self, df: DataFrame, condition: Column | str) -> int:
         """Delta's ``replaceWhere``: atomically DELETE every row matching
         the predicate and INSERT ``df``, in ONE commit — the periodic-
@@ -2973,22 +3181,17 @@ class VersionedTable:
         touching the rest).  Touched-file discovery is EXACT via the
         pushed-down predicate (:meth:`_matched_segments`); segments with
         no matching row stay live untouched, and the touched ones are
-        rewritten keeping only their non-matching rows (through a
-        DV-aware read, so their deletion vectors materialize with the
-        rewrite).  Every ``df`` row must satisfy the predicate — the
-        Delta replaceWhere contract — validated against the WRITTEN
-        batch (O(delta), one footer-backed scan); a violating batch is
-        rejected with the table unchanged.  Predicate UNKNOWN (null)
-        rows are kept, like SQL DELETE.  For a pure range predicate
-        prefer :meth:`overwrite_range`, which additionally keeps
-        stats-disjoint files out of the discovery scan entirely.  On CDF
-        tables the commit carries delete rows for the replaced slice and
-        insert rows for the batch."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        return self._replace_slice(
-            df, cond, str(condition), live, [], v, dvs, entry
-        )
+        rewritten keeping only their non-matching rows.  Every ``df``
+        row must satisfy the predicate — the Delta replaceWhere contract
+        — validated against the WRITTEN batch (O(delta), one
+        footer-backed scan); a violating batch is rejected with the
+        table unchanged.  Predicate UNKNOWN (null) rows are kept, like
+        SQL DELETE.  For a pure range predicate prefer
+        :meth:`overwrite_range`, which additionally keeps stats-disjoint
+        files out of the discovery scan entirely.  On CDF tables the
+        commit carries delete rows for the replaced slice and insert
+        rows for the batch."""
+        return self._replace_slice(condition, df=df)
 
     def overwrite_range(self, df: DataFrame, col: str, lo, hi) -> int:
         """:meth:`overwrite_where` specialized to ``lo <= col <= hi`` —
@@ -3001,12 +3204,11 @@ class VersionedTable:
         files truly holding matching rows.  On a range-clustered layout
         the whole reload plans from O(log) metadata plus a scan of the
         overlapping files only."""
-        v, live, dvs, entry = self._snapshot_state(None)
-        candidates, skipped = self.pruned_segments(v, col, lo, hi)
-        cond = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         return self._replace_slice(
-            df, cond, f"{col} BETWEEN {lo} AND {hi}", candidates, skipped,
-            v, dvs, entry, probes=[(col, lo, hi)],
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
+            df=df,
+            desc=f"{col} BETWEEN {lo} AND {hi}",
+            prune=(col, lo, hi),
         )
 
     def replace_where_segment(
@@ -3023,198 +3225,111 @@ class VersionedTable:
         a rejected batch deletes the segment and leaves the table
         unchanged.  ``new_rel=None`` is the empty batch: a pure
         predicate delete."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        if new_rel is not None:
-            cons = self.constraints(v)
-            if cons:
-                self._enforce_constraints([new_rel], cons, "replace_where")
-        return self._replace_slice(
-            None, cond, str(condition), live, [], v, dvs, entry,
-            new_rel=new_rel,
-        )
+        return self._replace_slice(condition, new_rel=new_rel)
 
     def _replace_slice(
         self,
-        df: DataFrame | None,
-        cond: Column,
-        cond_desc: str,
-        candidates: list[str],
-        skipped: list[str],
-        v: int,
-        dvs: list[str],
-        entry: dict,
+        condition: Column | str,
+        *,
+        df: DataFrame | None = None,
         new_rel: str | None = None,
-        probes: list[tuple] | None = None,
+        desc: str | None = None,
+        prune: tuple | None = None,
     ) -> int:
-        """Shared replaceWhere core: exact touched discovery over
-        ``candidates`` (``skipped`` were already proven disjoint from log
-        stats), rewrite of the touched segments minus their matching
-        rows, the validated batch appended, one atomic commit.  The
-        batch arrives either as a DataFrame (``df``, written here) or as
-        an already-written segment (``new_rel``, the sink path — may be
-        None for an empty batch)."""
+        """The replaceWhere batch contract in front of
+        :meth:`_rewrite_slice`.  Candidates are the live segments, or
+        with ``prune=(col, lo, hi)`` those whose log stats overlap the
+        range (the probe a lost race is re-checked against); exact
+        discovery narrows them to the touched ones.  The batch — a
+        DataFrame (``df``, written here) or an already-written segment
+        (``new_rel``, the sink path; None for an empty batch) — is
+        validated row by row against the predicate before the slice
+        rewrite drops the matching rows and appends it."""
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        v, live, dvs, entry = self._snapshot_state(None)
+        schema = StructType.fromJson(entry["schema"])
         if df is not None:
             df = self._require_schema(df, "overwrite_where")
-        schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
+        elif new_rel is not None:
+            cons = self.constraints(v)
+            if cons:
+                self._enforce_constraints([new_rel], cons, "replace_where")
+        candidates, skipped = (
+            self.pruned_segments(v, *prune) if prune else (live, [])
+        )
         match = F.coalesce(cond, F.lit(False))
-        touched: list[str] = []
-        if candidates:
-            scan = self._scan_segments(
-                v, candidates, schema, dvs=dvs, keep_identity=True
-            )
-            touched = self._matched_segments(scan, match, candidates)
+        touched = self._matched_segments(v, candidates, schema, dvs, match)
         # the batch lands (and is validated) before the slice rewrite:
         # a rejected batch must cost nothing but its own write
         if df is not None:
             new_rel = self._write_segment(df, v + 1)
+        empty_new: str | None = None
         if new_rel is not None:
-            n_bad = (
-                self.spark.read.schema(schema)
-                .parquet(os.path.join(self.root, new_rel))
-                .where(~match)
-                .limit(1)
-                .count()
+            batch = self.spark.read.schema(schema).parquet(
+                os.path.join(self.root, new_rel)
             )
-            if n_bad:
+            if batch.where(~match).limit(1).count():
                 shutil.rmtree(
                     os.path.join(self.root, new_rel), ignore_errors=True
                 )
                 raise ValueError(
                     "overwrite_where: replacement rows must ALL satisfy "
-                    f"the predicate ({cond_desc}) — batch rejected, table "
-                    "unchanged (the Delta replaceWhere contract)"
+                    f"the predicate ({desc or condition}) — batch "
+                    "rejected, table unchanged (the Delta replaceWhere "
+                    "contract)"
                 )
-        add = [new_rel] if new_rel is not None else []
-        empty_new: str | None = None
-        if new_rel is not None and self._segment_rows(new_rel) == 0:
-            # an empty batch is a pure predicate delete — don't register
-            # a zero-row segment as dead weight in every later scan.
-            # Deleted only AFTER the commit settles: a caller retrying a
-            # lost commit race may hand the same segment back in, and a
-            # pre-commit delete would make that retry read a vanished
-            # directory.  (On a lost race it stays as a vacuumable
-            # orphan until the retry resolves it the same way.)
-            empty_new = new_rel
-            add = []
-            new_rel = None
-        if not add and not touched:
-            if empty_new is not None:
-                shutil.rmtree(
-                    os.path.join(self.root, empty_new), ignore_errors=True
-                )
-            return v  # nothing deleted, nothing inserted: no-op
-        extra: dict = {
-            "condition": cond_desc,
-            "rewritten": len(touched),
-            "preserved": len(candidates) - len(touched) + len(skipped),
-        }
-        if skipped:
-            extra["stats_skipped"] = len(skipped)
-        if touched:
-            slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
-            if self.cdf_enabled:
-                # the kept rewrite and the delete feed share one scan
-                slice_df = slice_df.persist()
-            try:
-                kept_rel = self._write_segment(
-                    slice_df.where(~match).select(*data_cols), v + 1
-                )
-                if self._segment_rows(kept_rel) == 0:
-                    # every row of every touched segment matched
-                    shutil.rmtree(
-                        os.path.join(self.root, kept_rel),
-                        ignore_errors=True,
-                    )
-                else:
-                    add.append(kept_rel)
-                if self.cdf_enabled:
-                    deletes = (
-                        slice_df.where(match)
-                        .select(*data_cols)
-                        .withColumn("_change_type", F.lit("delete"))
-                    )
-                    changes = deletes
-                    if new_rel in add:
-                        # insert images from the batch ALREADY WRITTEN —
-                        # the input plan never recomputes
-                        changes = deletes.unionByName(
-                            self.spark.read.schema(schema)
-                            .parquet(os.path.join(self.root, new_rel))
-                            .withColumn("_change_type", F.lit("insert"))
-                        )
-                    extra["cdf"] = self._write_cdf(changes, v + 1)
-            finally:
-                if self.cdf_enabled:
-                    slice_df.unpersist()
-        elif self.cdf_enabled:
-            extra["cdf"] = self._write_cdf(
-                self.spark.read.schema(schema)
-                .parquet(os.path.join(self.root, new_rel))
-                .withColumn("_change_type", F.lit("insert")),
-                v + 1,
+            if self._segment_rows(new_rel) == 0:
+                # an empty batch is a pure predicate delete — don't
+                # register a zero-row segment.  Deleted only AFTER the
+                # commit settles: a caller retrying a lost commit race
+                # may hand the same segment back in, and a pre-commit
+                # delete would make that retry read a vanished
+                # directory.  (On a lost race it stays as a vacuumable
+                # orphan until the retry resolves it the same way.)
+                empty_new, new_rel = new_rel, None
+        committed = v  # nothing deleted, nothing inserted: no-op
+        if new_rel is not None or touched:
+            committed = self._rewrite_slice(
+                "replace_where", v, schema, dvs, candidates, touched,
+                rewrite=lambda s: s.where(~match),
+                changes=lambda s: _change_rows(s.where(match), "delete"),
+                extra={"condition": desc or str(condition)},
+                skipped=skipped, new_rel=new_rel,
+                probes=[prune] if prune else None,
             )
-        committed = self._commit_rebased(
-            v, "replace_where", add=add, remove=list(touched),
-            schema=schema, extra=extra,
-            read_files=candidates, probes=probes,
-        )
         if empty_new is not None:
-            # the commit settled without referencing it — reclaim now
             shutil.rmtree(
                 os.path.join(self.root, empty_new), ignore_errors=True
             )
         return committed
 
     def merge_upsert(self, source: DataFrame, keys: list[str]) -> int:
-        """MERGE (source wins on key match) as copy-on-write: read the
-        snapshot, merge relationally (operators/merge.py upsert — the same
-        engine the plain-parquet queries pin), write the merged segment,
-        commit swapping the whole live set.  See the module docstring for
-        the pruned-rewrite scale path."""
-        from energy_emissions_lakehouse_spark.operators.merge import upsert
-
+        """MERGE (source wins on key match) with file-level pruned
+        rewrite — the shape Delta/Iceberg execute at scale: only
+        segments whose ``keys[0]`` range overlaps the source keys
+        (:meth:`touched_segments`) are read and rewritten, merged
+        relationally (operators/merge.py upsert — the same engine the
+        plain-parquet queries pin); provably-disjoint segments stay live
+        UNTOUCHED in the new commit.  Pruning on ``keys[0]`` alone is
+        sound: an all-keys match requires equality on the first key, so
+        a segment disjoint in ``keys[0]`` cannot contain a match;
+        unmatched source rows (inserts) land in the rewritten segment.
+        Correctness never rests on the stats: a statless segment is
+        conservatively rewritten.  On CDF tables the commit carries
+        update pre/post images and inserts — the touched slice holds
+        every matchable key, so its change set is the full-table one."""
         source = self._require_schema(source, "merge_upsert")
-        v, live, _ = self._snapshot(None)
-        target = self.read(v)
-        extra: dict = {"keys": keys}
-        if self.cdf_enabled:
-            # the change-feed write and the merged-segment write are two
-            # actions over the same target scan — persist it across both
-            # (this is the whole-set merge, already the non-scale form;
-            # the pruned variant persists only the touched slice)
-            target = target.persist()
-        try:
-            merged = upsert(target=target, source=source, keys=keys)
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, keys), v + 1
-                )
-            add = [self._write_segment(merged, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                target.unpersist()
-        self._commit(
-            v + 1, "merge", add=add, remove=live,
-            schema=merged.schema, extra=extra,
+        keys = list(keys)
+        v, _, dvs, entry = self._snapshot_state(None)
+        touched, untouched = self.touched_segments(source, keys[0], v)
+        return self._rewrite_slice(
+            "merge", v, StructType.fromJson(entry["schema"]), dvs,
+            touched, touched,
+            rewrite=lambda s: upsert(target=s, source=source, keys=keys),
+            changes=lambda s: upsert_change_feed(s, source, keys),
+            extra={"keys": keys},
+            skipped=untouched, probes=_key_range_probe(source, keys[0]),
         )
-        return v + 1
-
-    @staticmethod
-    def _merge_changes(
-        target: DataFrame, source: DataFrame, keys: list[str]
-    ) -> DataFrame:
-        """The row-level change set of an upsert — update_preimage/
-        update_postimage per matched key, insert per new key (Delta's
-        unconditional WHEN MATCHED UPDATE CDF; operators/merge.py
-        upsert_change_feed, the engine the plain-parquet change-feed
-        query pins)."""
-        from energy_emissions_lakehouse_spark.operators.merge import (
-            upsert_change_feed,
-        )
-
-        return upsert_change_feed(target, source, keys)
 
     def touched_segments(
         self, source: DataFrame, key: str, version: int
@@ -3233,7 +3348,13 @@ class VersionedTable:
             if stats[r].get(key) is not None
         ]
         if ranged:
-            rng = self.spark.createDataFrame(ranged, ["_rel", "_mn", "_mx"])
+            import pandas as pd
+
+            # via pandas (Arrow): no Python workers, and one dtype for
+            # the int and double stats of an int -> double widened key
+            rng = self.spark.createDataFrame(
+                pd.DataFrame(ranged, columns=["_rel", "_mn", "_mx"])
+            )
             hits = (
                 source.select(F.col(key).alias("_k"))
                 .distinct()
@@ -3250,97 +3371,27 @@ class VersionedTable:
         untouched = [r for r in sorted(stats) if r not in touched]
         return sorted(touched), untouched
 
-    def merge_upsert_pruned(self, source: DataFrame, keys: list[str]) -> int:
-        """MERGE with file-level pruned rewrite — the shape Delta/Iceberg
-        actually execute at scale: only segments whose key range overlaps
-        the source keys are read and rewritten; provably-disjoint segments
-        stay live UNTOUCHED in the new commit.  A daily 0.1% delta into a
-        100 TB time-ordered table rewrites a handful of files instead of
-        the whole table (contrast merge_upsert, the whole-set
-        copy-on-write).  Pruning on ``keys[0]`` alone is sound: an
-        all-keys match requires equality on the first key, so a segment
-        disjoint in ``keys[0]`` cannot contain a match; unmatched source
-        rows (inserts) land in the rewritten segment.  Correctness never
-        rests on the stats: a statless segment is conservatively
-        rewritten, and the oracle checks the merged content value-exactly."""
-        from energy_emissions_lakehouse_spark.operators.merge import upsert
-
-        source = self._require_schema(source, "merge_upsert_pruned")
-        v, live, entry = self._snapshot(None)
-        touched, untouched = self.touched_segments(source, keys[0], v)
-        schema = StructType.fromJson(entry["schema"])
-        # DV-aware slice read: a merge-on-read-deleted row must not be
-        # resurrected by the rewrite (the rewrite MATERIALIZES the DVs of
-        # the touched segments; untouched segments keep theirs active)
-        target = self._scan_segments(v, touched, schema)
-        extra: dict = {
-            "keys": list(keys),
-            "rewritten": len(touched),
-            "preserved": len(untouched),
-        }
-        if self.cdf_enabled:
-            # the touched slice (small by construction — that is the point
-            # of pruning) feeds two jobs: persist it across both
-            target = target.persist()
-        try:
-            merged = upsert(target=target, source=source, keys=list(keys))
-            if self.cdf_enabled:
-                # the touched slice contains every matchable key, so the
-                # change set over it equals the full-table change set
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, list(keys)), v + 1
-                )
-            add = [self._write_segment(merged, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                target.unpersist()
-        # rebase probe: the merge READ every row whose keys[0] falls in
-        # the source's key range — one tiny agg over the delta side,
-        # LAZY so the uncontended path never runs it (resolved by
-        # _commit_rebased only on a lost race)
-        def _krange_probe():
-            krange = source.agg(
-                F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-            ).first()
-            return (
-                [(keys[0], krange["mn"], krange["mx"])]
-                if krange["mn"] is not None
-                else []
-            )
-
-        return self._commit_rebased(
-            v, "merge", add=add, remove=touched, schema=merged.schema,
-            extra=extra, read_files=touched, probes=_krange_probe,
-        )
-
     def delete_where(self, condition: Column | str) -> int:
-        """SQL DELETE semantics: rows where the predicate is TRUE are
-        removed; FALSE and NULL rows are kept (hence the coalesce)."""
+        """SQL DELETE as pruned copy-on-write: exact discovery (see
+        :meth:`_matched_segments`) finds the segments holding matching
+        rows, and ONLY those are rewritten without them; every other
+        segment stays live untouched.  Rows where the predicate is TRUE
+        are removed; FALSE and NULL rows are kept (hence the coalesce).
+        No-op (commit-free) when nothing matches.  On CDF tables the
+        commit carries one delete row per removed row."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, _ = self._snapshot(None)
-        snapshot = self.read(v)
-        extra: dict = {"condition": str(condition)}
-        if self.cdf_enabled:
-            # delete-rows feed + kept-rows rewrite scan the same snapshot
-            snapshot = snapshot.persist()
-        try:
-            kept = snapshot.where(~F.coalesce(cond, F.lit(False)))
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    snapshot.where(
-                        F.coalesce(cond, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete")),
-                    v + 1,
-                )
-            add = [self._write_segment(kept, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                snapshot.unpersist()
-        self._commit(
-            v + 1, "delete", add=add, remove=live,
-            schema=kept.schema, extra=extra,
+        v, live, dvs, entry = self._snapshot_state(None)
+        schema = StructType.fromJson(entry["schema"])
+        match = F.coalesce(cond, F.lit(False))
+        touched = self._matched_segments(v, live, schema, dvs, match)
+        if not touched:
+            return v  # a DELETE of zero rows: no-op, commit-free
+        return self._rewrite_slice(
+            "delete", v, schema, dvs, live, touched,
+            rewrite=lambda s: s.where(~match),
+            changes=lambda s: _change_rows(s.where(match), "delete"),
+            extra={"condition": str(condition)},
         )
-        return v + 1
 
     def _resolve_assignments(
         self, set_exprs: dict, schema: StructType
@@ -3364,21 +3415,6 @@ class VersionedTable:
             out[name] = col.cast(types[name])
         return out
 
-    def _matched_segments(
-        self, scan: DataFrame, match: Column, rels: list[str]
-    ) -> list[str]:
-        """EXACT touched-file discovery: which of ``rels`` hold at least
-        one row where ``match`` is true?  One small job over an
-        identity-keeping scan — the predicate is pushed into the parquet
-        read (row-group stats skip non-matching groups at the source)
-        and only O(files) distinct segment names ever cross the driver.
-        Exact discovery can never be optimistic: a segment with no
-        matching row needs no rewrite by definition — so unlike
-        stats-based candidate pruning there is no exactness caveat."""
-        by_base = {os.path.basename(r): r for r in rels}
-        hits = scan.where(match).select("_dv_seg").distinct().collect()
-        return sorted(by_base[row._dv_seg] for row in hits)
-
     def _segment_rows(self, rel: str) -> int:
         """Row count of a just-written segment from its parquet FOOTERS —
         O(part files) driver metadata, no Spark job."""
@@ -3396,137 +3432,66 @@ class VersionedTable:
     def update_where(
         self, condition: Column | str, set_exprs: dict
     ) -> int:
-        """SQL UPDATE as pruned copy-on-write (Delta UPDATE): one
-        discovery pass finds the segments actually holding matching rows
-        (exact, via the pushed-down predicate — see
-        :meth:`_matched_segments`), and ONLY those are rewritten with the
-        SET expressions applied; every other segment stays live untouched
-        in the new commit.  At 100 TB a 0.1% update rewrites a handful of
-        files, never the table (and :meth:`update_where_mor` rewrites
+        """SQL UPDATE as pruned copy-on-write (Delta UPDATE): exact
+        discovery (:meth:`_matched_segments`) finds the segments holding
+        matching rows, and ONLY those are rewritten with the SET
+        expressions applied.  At 100 TB a 0.1% update rewrites a handful
+        of files, never the table (and :meth:`update_where_mor` rewrites
         NOTHING).  SET values are evaluated on the PRE-image and cast to
         the column's current type; predicate UNKNOWN (null) rows are kept
         unchanged — both exactly SQL UPDATE.  No-op (commit-free) when
-        nothing matches.  The rewritten segment passes the CHECK-
-        constraint choke point like every write; on CDF tables the commit
-        carries update_preimage/update_postimage rows from the same
-        scan.  The touched segments are rewritten through a DV-aware
-        read, so their deletion vectors materialize with the rewrite."""
+        nothing matches.  On CDF tables the commit carries
+        update_preimage/update_postimage rows."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         v, live, dvs, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
         assigns = self._resolve_assignments(set_exprs, schema)
         match = F.coalesce(cond, F.lit(False))
-        scan = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
-        )
-        touched = self._matched_segments(scan, match, live)
+        touched = self._matched_segments(v, live, schema, dvs, match)
         if not touched:
             return v  # an UPDATE of zero rows: no-op, commit-free
-        slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
-        extra: dict = {
-            "condition": str(condition),
-            "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
-            "rewritten": len(touched),
-            "preserved": len(live) - len(touched),
+        guarded = {
+            c: F.when(match, e).otherwise(F.col(c)) for c, e in assigns.items()
         }
-        if self.cdf_enabled:
-            # the rewrite and the two image feeds share one slice scan
-            slice_df = slice_df.persist()
-        try:
-            updated = slice_df.select(
-                *[
-                    F.when(match, assigns[c]).otherwise(F.col(c)).alias(c)
-                    if c in assigns
-                    else F.col(c)
-                    for c in data_cols
-                ]
-            )
-            if self.cdf_enabled:
-                matched_rows = slice_df.where(match)
-                pre = matched_rows.select(*data_cols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                post = matched_rows.select(
-                    *[
-                        assigns[c].alias(c) if c in assigns else F.col(c)
-                        for c in data_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                extra["cdf"] = self._write_cdf(pre.unionByName(post), v + 1)
-            add = [self._write_segment(updated, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                slice_df.unpersist()
-        self._commit(
-            v + 1, "update", add=add, remove=touched, schema=schema,
-            extra=extra,
+        return self._rewrite_slice(
+            "update", v, schema, dvs, live, touched,
+            rewrite=lambda s: _post_images(s, guarded),
+            changes=lambda s: _update_changes(s.where(match), assigns),
+            extra={
+                "condition": str(condition),
+                "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
+            },
         )
-        return v + 1
 
     def delete_where_mor(self, condition: Column | str) -> int:
         """Merge-on-read DELETE (Delta deletion vectors / Iceberg
-        positional deletes): instead of rewriting every live segment
-        minus the matching rows (:meth:`delete_where`, copy-on-write),
-        ONE filtered scan finds the matching rows' (segment, file,
-        position) identities and writes them as a tiny deletion-vector
-        file; the commit references it with ZERO data segments touched.
-        Readers mask DV positions with a broadcast anti-join.  At 100 TB
-        this turns a delete from a full table rewrite into a scan plus a
+        positional deletes): instead of rewriting the segments holding
+        matching rows (:meth:`delete_where`, copy-on-write), ONE
+        filtered scan finds the matching rows' (segment, file, position)
+        identities and writes them as a tiny deletion-vector file; the
+        commit references it with ZERO data segments touched.  Readers
+        mask DV positions with a broadcast anti-join.  At 100 TB this
+        turns a delete from a segment rewrite into a scan plus a
         kilobytes-scale metadata write; the deferred rewrite happens at
         the next :meth:`compact` / full-replace, which materializes and
         clears the DVs.  Same null semantics as SQL DELETE (only
         predicate-TRUE rows are deleted).  Note the semantics are
         POSITION-scoped, not predicate-scoped: rows appended AFTER this
-        commit stay live even if they match the predicate."""
+        commit stay live even if they match the predicate.  A DELETE
+        matching zero rows is commit-free, the surface delete_where,
+        update_where and update_where_mor share (and what the model
+        checker's noop program asserts)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         v, live, dvs, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
-        if not live:
-            # SQL DELETE from an empty table is a no-op, not an error —
-            # same commit-free surface as delete_where / zero matches
-            return v
-        data_cols = [f.name for f in schema.fields]
-        # the identified scan already excludes previously-masked rows, so
-        # they cannot re-enter the new DV or double-count in the feed
-        scan = self._scan_segments(
+        matched = self._scan_segments(
             v, live, schema, dvs=dvs, keep_identity=True
+        ).where(F.coalesce(cond, F.lit(False)))
+        return self._mask_rows(
+            "delete_mor", v, schema, live, matched,
+            changes=lambda rows: _change_rows(rows, "delete"),
+            extra={"condition": str(condition)},
         )
-        matched = scan.where(F.coalesce(cond, F.lit(False)))
-        extra: dict = {"condition": str(condition)}
-        if self.cdf_enabled:
-            # the DV write and the delete-rows feed share one scan
-            matched = matched.persist()
-        try:
-            dv_rel = self._write_dv(matched, v + 1)
-            if dv_rel is None:
-                # a DELETE matching ZERO rows is a commit-free no-op —
-                # the surface every other DML shape already has
-                # (delete_where, update_where, update_where_mor, merge)
-                # and what the model checker's noop program asserts.
-                # Found by the round-9 DDL-aware random program: this
-                # path previously published an empty no-change
-                # "delete_mor" commit (harmless to readers/streams, but
-                # an inconsistent DML surface — and the original
-                # checker's seed had never drawn its noop op to catch
-                # it).  No CDF either: zero rows changed.
-                return v
-            extra["dv_add"] = [dv_rel]
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    matched.select(*data_cols).withColumn(
-                        "_change_type", F.lit("delete")
-                    ),
-                    v + 1,
-                )
-        finally:
-            if self.cdf_enabled:
-                matched.unpersist()
-        self._commit(
-            v + 1, "delete_mor", add=[], remove=[], schema=schema,
-            extra=extra,
-        )
-        return v + 1
 
     def update_where_mor(
         self, condition: Column | str, set_exprs: dict
@@ -3546,52 +3511,20 @@ class VersionedTable:
         carry update_preimage/update_postimage rows from the same scan."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         v, live, dvs, entry = self._snapshot_state(None)
-        if not live:
-            # SQL UPDATE of an empty table is a no-op, not an error —
-            # same commit-free surface as update_where / zero matches
-            return v
         schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
         assigns = self._resolve_assignments(set_exprs, schema)
-        # the identified scan already excludes previously-masked rows, so
-        # they cannot re-enter the new DV or the appended images
-        scan = self._scan_segments(
+        matched = self._scan_segments(
             v, live, schema, dvs=dvs, keep_identity=True
+        ).where(F.coalesce(cond, F.lit(False)))
+        return self._mask_rows(
+            "update_mor", v, schema, live, matched,
+            changes=lambda rows: _update_changes(rows, assigns),
+            extra={
+                "condition": str(condition),
+                "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
+            },
+            images=lambda rows: _post_images(rows, assigns),
         )
-        # one scan feeds the DV write, the image write, and (CDF) the
-        # pre/post feeds — persist it across those jobs
-        matched = scan.where(F.coalesce(cond, F.lit(False))).persist()
-        extra: dict = {
-            "condition": str(condition),
-            "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
-        }
-        try:
-            dv_rel = self._write_dv(matched, v + 1)
-            if dv_rel is None:
-                return v  # an UPDATE of zero rows: no-op, commit-free
-            extra["dv_add"] = [dv_rel]
-            images = matched.select(
-                *[
-                    assigns[c].alias(c) if c in assigns else F.col(c)
-                    for c in data_cols
-                ]
-            )
-            if self.cdf_enabled:
-                pre = matched.select(*data_cols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                post = images.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-                extra["cdf"] = self._write_cdf(pre.unionByName(post), v + 1)
-            add = [self._write_segment(images, v + 1)]
-        finally:
-            matched.unpersist()
-        self._commit(
-            v + 1, "update_mor", add=add, remove=[], schema=schema,
-            extra=extra,
-        )
-        return v + 1
 
     def merge_upsert_mor(self, source: DataFrame, keys: list[str]) -> int:
         """MERGE as merge-on-read (Iceberg MOR merge / Delta DV-backed
@@ -3600,71 +3533,38 @@ class VersionedTable:
         scan against the source's distinct keys — and the ENTIRE source
         lands as one appended segment (source-wins updates and inserts
         together).  ZERO existing segments are rewritten: where
-        :meth:`merge_upsert_pruned` rewrites the touched files, this
-        writes only the new segment plus a kilobytes-scale position
-        file, the cheapest possible shape for a small delta into a
-        100 TB table; the deferred rewrite amortizes into the next
-        :meth:`compact`.  Same contract as the other merges: source keys
-        must be unique (standard MERGE precondition).  On CDF-enabled
-        tables the commit carries update pre/post images and inserts
-        from the same scan pipeline."""
+        :meth:`merge_upsert` rewrites the touched files, this writes
+        only the new segment plus a kilobytes-scale position file, the
+        cheapest possible shape for a small delta into a 100 TB table;
+        the deferred rewrite amortizes into the next :meth:`compact`.
+        Same contract as the other merges: source keys must be unique
+        (standard MERGE precondition).  On CDF-enabled tables the commit
+        carries update pre/post images and inserts from the same scan
+        pipeline.  Rebase contract: an interleaved add whose ``keys[0]``
+        range is provably disjoint from the source's cannot hold a
+        match, so a lost race past it rebases; an in-range add (a row
+        this merge should have masked), any removal of a live file, or
+        another DV all conflict."""
         source = self._require_schema(source, "merge_upsert_mor")
+        keys = list(keys)
         v, live, dvs, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
-        extra: dict = {"keys": list(keys)}
-        identified = (
-            self._scan_segments(v, live, schema, dvs=dvs, keep_identity=True)
-            if live
-            else None
+        matched = self._scan_segments(
+            v, live, schema, dvs=dvs, keep_identity=True
+        ).join(
+            F.broadcast(source.select(*keys).distinct()),
+            on=keys,
+            how="left_semi",
         )
-        if self.cdf_enabled and identified is not None:
-            # the DV discovery and the change images share one scan
-            identified = identified.persist()
-        try:
-            if identified is not None:
-                matched = identified.join(
-                    F.broadcast(source.select(*keys).distinct()),
-                    on=list(keys),
-                    how="left_semi",
-                )
-                dv_rel = self._write_dv(matched, v + 1)
-                if dv_rel is not None:
-                    extra["dv_add"] = [dv_rel]
-            if self.cdf_enabled:
-                target = (
-                    identified.select(*data_cols)
-                    if identified is not None
-                    else self.spark.createDataFrame([], schema)
-                )
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, list(keys)), v + 1
-                )
-            add = [self._write_segment(source.select(*data_cols), v + 1)]
-        finally:
-            if self.cdf_enabled and identified is not None:
-                identified.unpersist()
-        # rebase contract (same decision table as merge_upsert_pruned):
-        # the merge READ every live file (the identified scan) hunting
-        # rows whose keys match the source — an interleaved add whose
-        # keys[0] range is provably disjoint from the source's cannot
-        # hold a match, so the lost race rebases; an in-range add (a row
-        # this merge should have masked), any removal of a file the DV
-        # references, or another DV all conflict.  Probe is lazy: the
-        # uncontended path never pays the key-range agg.
-        def _krange_probe():
-            krange = source.agg(
-                F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-            ).first()
-            return (
-                [(keys[0], krange["mn"], krange["mx"])]
-                if krange["mn"] is not None
-                else []
-            )
-
-        return self._commit_rebased(
-            v, "merge_mor", add=add, remove=[], schema=schema,
-            extra=extra, read_files=live, probes=_krange_probe,
+        # the upsert feed depends only on the target rows whose keys the
+        # source holds — exactly the matched rows; the source, aligned to
+        # the table schema, is the appended image
+        return self._mask_rows(
+            "merge_mor", v, schema, live, matched,
+            changes=lambda rows: upsert_change_feed(rows, source, keys),
+            extra={"keys": keys},
+            images=lambda _: source,
+            probes=_key_range_probe(source, keys[0]),
         )
 
     def compact_dvs(self) -> int:
@@ -3684,10 +3584,10 @@ class VersionedTable:
         merged = self.spark.read.parquet(
             *(os.path.join(self.root, d) for d in dvs)
         ).distinct()
-        new_rel = self._write_dv(merged, v + 1)
         extra = {"dv_remove": sorted(dvs), "folded": len(dvs)}
-        if new_rel is not None:  # always true under the no-empty-DV invariant
-            extra["dv_add"] = [new_rel]
+        dv_add = self._write_dv(merged, v + 1)
+        if dv_add:  # always true under the no-empty-DV invariant
+            extra["dv_add"] = dv_add
         self._commit(
             v + 1, "dv_compact", add=[], remove=[],
             schema=StructType.fromJson(entry["schema"]), extra=extra,
@@ -4651,7 +4551,7 @@ class VersionedTable:
                 self._read_commit(versions[-1])["schema"]
             )
             return (
-                self.spark.createDataFrame([], head_schema)
+                _empty_frame(self.spark, head_schema)
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_version", F.lit(0).cast("bigint"))
                 .limit(0)

@@ -48,7 +48,7 @@ from energy_emissions_lakehouse_spark.registry import register
 from energy_emissions_lakehouse_spark.tables import t
 
 #: Bump to invalidate staged histories when the build recipe changes.
-_HISTORY_REV = 16
+_HISTORY_REV = 17
 
 _ORDER_COLS = [
     "o_orderkey",
@@ -141,7 +141,7 @@ def _build_ranged(spark: SparkSession, sf_dir: str, root: str) -> None:
         "o_orderdate",
         "o_orderpriority",
     )
-    vt.merge_upsert_pruned(updates, keys=["o_orderkey"])
+    vt.merge_upsert(updates, keys=["o_orderkey"])
 
 
 def _build_zorder(spark: SparkSession, sf_dir: str, root: str) -> None:
@@ -902,17 +902,18 @@ def vtable_schema_evolution_backfill(spark, sf_dir) -> DataFrame:
     GROUP BY o_orderstatus
     """,
     survey="S7 V4 — MERGE with file-level pruned rewrite (Delta/Iceberg "
-    "touched-file MERGE): updates confined to the second key quarter "
-    "rewrite ONE of four segments; the other three stay live untouched "
-    "(commit metadata pins rewritten=1/preserved=3 in tests); the "
-    "whole-table content after the merge must equal the relational "
-    "merge the oracle computes over raw orders",
+    "touched-file MERGE, operators/vtable.py merge_upsert): updates "
+    "confined to the second key quarter rewrite ONE of four segments; "
+    "the other three stay live untouched (commit metadata pins "
+    "rewritten=1/preserved=3 in tests); the whole-table content after "
+    "the merge must equal the relational merge the oracle computes over "
+    "raw orders",
 )
 def vtable_merge_pruned_rewrite(spark, sf_dir) -> DataFrame:
-    """Read the post-merge snapshot (v4) of the ranged table: the pruned
-    MERGE (operators/vtable.py merge_upsert_pruned) discovered the one
-    touched segment from per-segment key ranges, rewrote only it, and
-    preserved the other three.  At 100 TB this is the difference between
+    """Read the post-merge snapshot (v4) of the ranged table: the MERGE
+    (operators/vtable.py merge_upsert) discovered the one touched
+    segment from per-segment key ranges, rewrote only it, and preserved
+    the other three.  At 100 TB this is the difference between
     a full-table rewrite and a few files per merge.  The per-status
     count/checksum/price fingerprint catches a lost untouched segment, a
     double-applied update, or a dropped insert alike."""

@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 import pandas as pd
 from pyspark.sql import SparkSession

@@ -110,6 +110,18 @@ def test_write_path_upcasts_narrow_batch_after_widen(spark, root):
         vt.append(bad)
 
 
+def test_merge_on_int_to_double_widened_key(spark, root):
+    """MERGE prunes on its first key's per-segment [min, max] stats; after
+    an int -> double widen, pre-widen segments record int stats and later
+    ones double, and the pruning join must still compare them."""
+    vt = VersionedTable.create(spark, root, _kv(spark, 0, 4))
+    vt.widen_column_type("k", "double")
+    vt.append(_kv(spark, 10, 12, ktype="double"))
+    v = vt.merge_upsert(_kv(spark, 2, 3, ktype="double"), keys=["k"])
+    assert read_commit(root, v)["rewritten"] == 1  # only the int-era segment
+    assert sorted(r.k for r in vt.read().collect()) == [0, 1, 2, 3, 10, 11]
+
+
 def test_time_travel_serves_each_eras_type(spark, root):
     vt = VersionedTable.create(spark, root, _kv(spark, 0, 4))
     vt.widen_column_type("v", "double")

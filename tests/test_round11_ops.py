@@ -204,7 +204,7 @@ def test_merge_pruned_rebases_across_disjoint_append(
     state = _inject_loss(
         monkeypatch, vt_a, lambda: vt_b.append(_rows(spark, 5000, 5010))
     )
-    vt_a.merge_upsert_pruned(_rows(spark, 0, 5, price=7.0), ["k"])
+    vt_a.merge_upsert(_rows(spark, 0, 5, price=7.0), ["k"])
     assert state["fired"]
     df = vt_a.read()
     assert df.count() == 210
@@ -220,7 +220,25 @@ def test_merge_pruned_conflicts_with_append_in_key_range(
         monkeypatch, vt_a, lambda: vt_b.append(_rows(spark, 2, 4))
     )
     with pytest.raises(ConcurrentAppendError):
-        vt_a.merge_upsert_pruned(_rows(spark, 0, 5, price=7.0), ["k"])
+        vt_a.merge_upsert(_rows(spark, 0, 5, price=7.0), ["k"])
+
+
+def test_delete_conflicts_with_any_concurrent_append(
+    spark, root, monkeypatch
+):
+    """A copy-on-write DELETE carries no read probes, so ANY interleaved
+    add may hold rows its predicate matches: the lost race raises the
+    typed conflict and the table stays at the winner's head."""
+    vt_a = _two_segment_table(spark, root)
+    vt_b = VersionedTable(spark, root)
+    state = _inject_loss(
+        monkeypatch, vt_a, lambda: vt_b.append(_rows(spark, 2, 4))
+    )
+    with pytest.raises(ConcurrentAppendError):
+        vt_a.delete_where(F.col("k") < 5)
+    assert state["fired"]
+    assert vt_a.latest_version() == 2
+    assert vt_a.read().count() == 202
 
 
 # ----------------------------------------------------------- compaction

@@ -113,10 +113,11 @@ def test_full_rewrite_replaces_every_sidecar(spark, root, monkeypatch):
     for i in range(1, CHECKPOINT_EVERY + 1):
         vt.append(_rows(spark, 100 * i, 100 * i + 5))
     refs1 = [s["name"] for s in _ckpt_raw(vt, CHECKPOINT_EVERY)["sidecars"]]
-    # a copy-on-write delete rewrites the WHOLE live set: every prior
-    # sidecar's segments are removed, so the next checkpoint must carry
-    # entirely fresh sidecar names (a full rewrite dirties everything)
-    vt.delete_where(F.col("k") < 10)
+    # a copy-on-write delete matching a row in EVERY segment rewrites
+    # the whole live set: every prior sidecar's segments are removed, so
+    # the next checkpoint must carry entirely fresh sidecar names (a
+    # full rewrite dirties everything)
+    vt.delete_where(F.col("k") % 100 == 0)
     head = _to_boundary(vt, spark)
     refs2 = [s["name"] for s in _ckpt_raw(vt, head)["sidecars"]]
     assert set(refs2).isdisjoint(set(refs1))

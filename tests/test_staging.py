@@ -589,3 +589,30 @@ def test_no_ad_hoc_session_memos_or_stagers():
                 ):
                     found.append(f"{rel}:{fn}: {callee}")
     assert not found, found
+
+
+def test_scripts_import_their_own_checkout():
+    """A script that puts a literal path on ``sys.path`` imports whatever
+    package lives there: run from a second checkout (a clone for an A/B),
+    it would exercise — and certify — the other checkout's code.  Scripts
+    derive the path from their own location instead."""
+    scripts = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+    )
+    found = []
+    for f in sorted(os.listdir(scripts)):
+        if not f.endswith(".py"):
+            continue
+        path = os.path.join(scripts, f)
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "sys.path.insert"
+                and any(
+                    isinstance(a, ast.Constant) and isinstance(a.value, str)
+                    for a in node.args
+                )
+            ):
+                found.append(f"{f}:{node.lineno}")
+    assert not found, found

@@ -466,7 +466,7 @@ def test_merge_pruned_rewrites_only_touched_segments(spark, vt_root):
     src = spark.createDataFrame(
         [(105, -1), (108, -2), (200, -3)], ["k", "v"]
     )  # two updates inside B's range + one insert outside every range
-    v = vt.merge_upsert_pruned(src, keys=["k"])
+    v = vt.merge_upsert(src, keys=["k"])
     entry = vt._read_commit(v)
     assert entry["remove"] == [seg_b]
     assert entry["rewritten"] == 1 and entry["preserved"] == 1
@@ -475,6 +475,27 @@ def test_merge_pruned_rewrites_only_touched_segments(spark, vt_root):
     assert got[105] == -1 and got[108] == -2 and got[200] == -3
     assert got[0] == 0 and got[104] == 1040  # non-matched rows intact
     assert len(got) == 21
+
+
+def test_delete_rewrites_only_touched_segments(spark, vt_root):
+    """A copy-on-write DELETE confined to one segment's rows rewrites
+    ONLY that segment (exact discovery); the other segment stays live
+    under its original path."""
+    vt = _mk(spark, vt_root, n=10)  # segment A: keys 0..9
+    vt.append(
+        spark.range(100, 110).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+    )  # segment B: keys 100..109
+    seg_a = vt._read_commit(0)["add"][0]
+    seg_b = vt._read_commit(1)["add"][0]
+    v = vt.delete_where("k >= 105")
+    entry = vt._read_commit(v)
+    assert entry["op"] == "delete" and entry["remove"] == [seg_b]
+    assert entry["rewritten"] == 1 and entry["preserved"] == 1
+    assert seg_a in vt._resolve_live(v)  # untouched segment survives
+    got = dict(_rows(vt.read(v)))
+    assert sorted(got) == list(range(10)) + list(range(100, 105))
 
 
 def test_merge_pruned_statless_segment_is_conservatively_rewritten(
@@ -493,7 +514,7 @@ def test_merge_pruned_statless_segment_is_conservatively_rewritten(
     src = spark.createDataFrame([(999, -1)], ["k", "v"])
     touched, untouched = vt.touched_segments(src, "k", 0)
     assert untouched == [] and len(touched) == 1
-    v = vt.merge_upsert_pruned(src, keys=["k"])
+    v = vt.merge_upsert(src, keys=["k"])
     assert vt._read_commit(v)["rewritten"] == 1
     assert vt.read(v).count() == 6
 
@@ -920,7 +941,7 @@ def test_full_replace_materializes_and_clears_dvs(spark, vt_root):
 
 
 def test_merge_pruned_does_not_resurrect_mor_deleted_rows(spark, vt_root):
-    """The touched-slice read of merge_upsert_pruned applies DVs, so a
+    """The touched-slice read of merge_upsert applies DVs, so a
     pruned rewrite of the segment materializes its deletions instead of
     resurrecting them — and DVs on UNTOUCHED segments stay active."""
     lo = spark.range(10).select(
@@ -933,7 +954,7 @@ def test_merge_pruned_does_not_resurrect_mor_deleted_rows(spark, vt_root):
     vt.append(hi)
     vt.delete_where_mor("k = 105 OR k = 5")  # one hit per segment
     src = spark.createDataFrame([(101, -1), (333, -3)], ["k", "v"])
-    v = vt.merge_upsert_pruned(src, keys=["k"])
+    v = vt.merge_upsert(src, keys=["k"])
     assert vt._read_commit(v)["rewritten"] == 1  # only the hi segment
     got = {r.k: r.v for r in vt.read().collect()}
     assert 105 not in got  # materialized by the rewrite

@@ -60,6 +60,17 @@ def _table_state(vt, version=None) -> dict[int, tuple[int, ...]]:
     return {k: tuple(sorted(vs)) for k, vs in out.items()}
 
 
+def _assert_noop_dml(vt):
+    """Never-matching predicates: all four predicate DML shapes must be
+    commit-free (the head version may not move)."""
+    head = vt.latest_version()
+    assert vt.delete_where("k = -1") == head
+    assert vt.update_where("k = -1", {"v": F.lit(0)}) == head
+    assert vt.delete_where_mor("k = -1") == head
+    assert vt.update_where_mor("k = -1", {"v": F.lit(0)}) == head
+    assert vt.latest_version() == head
+
+
 def test_random_dml_program_matches_model_and_history(spark, root):
     rng = random.Random(SEED)
     model: dict[int, list[int]] = {1: [10], 2: [20], 3: [30]}
@@ -140,17 +151,13 @@ def test_random_dml_program_matches_model_and_history(spark, root):
                 k: list(vs) for k, vs in history[target].items()
             }
         elif op == "noop_dml":
-            # never-matching predicates: all four DML shapes must be
-            # commit-free (the head version may not move)
-            head = vt.latest_version()
-            assert vt.delete_where_mor("k = -1") == head
-            assert vt.update_where_mor("k = -1", {"v": F.lit(0)}) == head
-            assert vt.latest_version() == head
+            _assert_noop_dml(vt)
         head = vt.latest_version()
         snap = _snapshot(model)
         got = _table_state(vt)
         assert got == snap, f"step {step} op {op}: head != model"
         history[head] = snap
+    _assert_noop_dml(vt)  # whether or not the seed drew the op
     # ---- time travel: EVERY recorded version replays its exact state
     for v, snap in sorted(history.items()):
         assert _table_state(vt, v) == snap, f"time travel to v{v} diverged"

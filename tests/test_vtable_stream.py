@@ -43,7 +43,7 @@ def _mk_history(spark, root) -> VersionedTable:
             F.col("id").alias("k"), (F.col("id") * 10).alias("v")
         )
     )
-    vt.merge_upsert_pruned(
+    vt.merge_upsert(
         spark.createDataFrame([(5, -1)], ["k", "v"]), keys=["k"]
     )
     vt.append(

@@ -23,15 +23,16 @@ re-expressed in ~pure PySpark + stdlib:
   single-node analogue of Delta's conditional-put / rename-commit on
   object stores.
 - ``<root>/_log/<v020>.checkpoint.json``: every CHECKPOINT_EVERY commits
-  the live-segment state is checkpointed, so snapshot resolution replays
-  only the tail instead of the whole log.  Sidecar form (Delta V2
+  the complete table state at that version is checkpointed (Delta V2
   checkpoints + sidecars, simplified to JSON): the main file carries the
   small folds (txns, DVs, constraints) plus references to immutable
   ``<v020>.<uuid>.sidecar.json`` files of up to SIDECAR_MAX segments'
-  metadata each; per checkpoint only the sidecars the tail touched are
-  rewritten, so checkpoint-commit cost is O(tail + dirty), not O(live).
-  Round-11 inline checkpoints stay readable (upgraded at the next
-  checkpoint write).
+  metadata each; a sidecar whose entries are unchanged is reused, so
+  checkpoint-commit cost is O(tail + dirty), not O(live).  Every snapshot
+  comes from ONE replay (:meth:`VersionedTable._replay`): the newest
+  checkpoint plus the commit tail, each tail commit read once.  A
+  checkpoint that is not a complete state of this form is skipped for an
+  older one (or genesis), never partially trusted.
 
 Concurrency contract (optimistic, Delta-style): writers read a snapshot,
 write new segments, then attempt the ``snapshot_version + 1`` commit.  A
@@ -70,6 +71,7 @@ store service) instead of POSIX ``link``.
 from __future__ import annotations
 
 import base64
+import bisect
 import contextlib
 import functools
 import hashlib
@@ -78,13 +80,19 @@ import os
 import shutil
 import re
 import struct
+import threading
 import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from energy_emissions_lakehouse_spark.operators.merge import (
     upsert,
@@ -130,6 +138,8 @@ CHECKPOINT_EVERY = 8
 #: sidecars): a drip-feed append workload rewrites ONE file of at most
 #: this many entries per checkpoint, whatever the history depth.
 SIDECAR_MAX = 512
+#: hydrated checkpoint states one handle keeps (each is O(live) metadata)
+_CKPT_CACHE_MAX = 4
 
 
 def _chunks(items: list, n: int):
@@ -184,13 +194,34 @@ def _dv_fold(root: str, dvs: tuple[str, ...]) -> dict | None:
     return out
 
 
-def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
-    """An empty frame of ``schema`` planned in the JVM alone — one built
-    from a Python list (``createDataFrame([], schema)``) starts Python
-    workers when executed, even with zero rows."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+def _sql_literal(x) -> str:
+    if x is None:
+        return "NULL"
+    if isinstance(x, str):
+        return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(x, int):
+        return str(int(x))
+    raise TypeError(f"no SQL literal for {type(x).__name__}")
+
+
+def _literal_frame(
+    spark: SparkSession, schema: StructType, rows: list[tuple] = ()
+) -> DataFrame:
+    """``rows`` (str / int / None values) as a frame of ``schema``, from
+    SQL text: a ``VALUES`` relation plans as ``LocalTableScan`` in the
+    JVM alone.  A frame from a Python list (``createDataFrame(rows)``)
+    plans as ``Scan ExistingRDD`` and starts Python workers when
+    executed, even with zero rows."""
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(x) for x in row) + ")"
+        for row in rows or [(None,) * len(schema.fields)]
     )
+    return spark.sql(
+        f"SELECT * FROM VALUES {values}" + ("" if rows else " WHERE false")
+    ).select(*[
+        F.col(f"col{i + 1}").cast(f.dataType).alias(f.name)
+        for i, f in enumerate(schema.fields)
+    ])
 
 
 @contextlib.contextmanager
@@ -594,7 +625,9 @@ def _check_constraint_defs(
             )
         # empty frame: full analysis (resolution + type check),
         # zero scan.  collect() forces it; the result is always [].
-        _empty_frame(spark, schema).where(_violation_pred(expr_sql)).collect()
+        _literal_frame(spark, schema).where(
+            _violation_pred(expr_sql)
+        ).collect()
 
 
 class VersionedTable:
@@ -608,6 +641,13 @@ class VersionedTable:
             raise FileNotFoundError(
                 f"not a versioned table (no {LOG_DIR}/): {root}"
             )
+        # checkpoint discovery cache (see _latest_checkpoint): versions
+        # listed on disk (None until first needed), hydrated states, and
+        # checkpoints found unusable
+        self._ckpt_lock = threading.Lock()
+        self._ckpt_versions: list[int] | None = None
+        self._ckpt_payloads: dict[int, dict] = {}
+        self._ckpt_skip: set[int] = set()
 
     # ------------------------------------------------------------------ init
     @classmethod
@@ -792,37 +832,12 @@ class VersionedTable:
         """The CHECK constraints active at ``version`` (Delta's
         ``delta.constraints.*`` table properties): the newest
         ``set_constraint`` commit at or before it wins, falling back to
-        the create-time map.  Constraints are governance metadata, not
-        data — :meth:`restore` does NOT revert them (a loosened check
-        must not silently re-tighten because someone restored data) —
-        though a restore DOES re-validate against checks added since its
-        target (see :meth:`restore`).  O(tail) via the checkpointed map,
-        like the txn fold; pre-rev checkpoints (no ``constraints`` key)
-        fall back to the genesis walk — slower, never wrong."""
-        if version is None:
-            # only the head-defaulting path needs the O(history) log
-            # listing — an explicit version (every checkpoint write)
-            # must not pay a listdir over the whole log per call
-            versions = self._versions()
-            if not versions:
-                return {}
-            version = versions[-1]
-        floor, fallback = -1, None
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None and "constraints" in ckpt:
-            floor = ckpt["version"]
-            fallback = dict(ckpt["constraints"])
-        # contiguous log: the candidate tail is a range (the full list
-        # comp was O(history) python work per fold at deep logs)
-        for v in range(version, floor, -1):
-            entry = self._read_commit(v)
-            if "constraints" in entry:
-                return dict(entry["constraints"])
-            if v == 0:
-                return dict(
-                    entry.get("properties", {}).get("constraints", {})
-                )
-        return fallback if fallback is not None else {}
+        the create-time map (see :meth:`_replay`).  Constraints are
+        governance metadata, not data — :meth:`restore` does NOT revert
+        them (a loosened check must not silently re-tighten because
+        someone restored data) — though a restore DOES re-validate
+        against checks added since its target (see :meth:`restore`)."""
+        return dict(self._replay(version)["constraints"])
 
     def _enforce_constraints(
         self, rels: list[str], cons: dict[str, str], op: str
@@ -886,17 +901,17 @@ class VersionedTable:
         aggregate over the head snapshot before the metadata commit —
         and every later write is validated against it at segment-write
         time.  UNKNOWN passes (ANSI CHECK); spell NOT NULL explicitly."""
-        v, live, dvs, entry = self._snapshot_state(None)
-        cons = self.constraints(v)
+        s = self._replay()
+        v, cons = s["version"], s["constraints"]
         if name in cons:
             raise ValueError(
                 f"constraint {name!r} already exists: {cons[name]!r} "
                 "(drop_constraint first to replace it)"
             )
-        schema = StructType.fromJson(entry["schema"])
+        schema = StructType.fromJson(s["entry"]["schema"])
         _check_constraint_defs(self.spark, {name: expr_sql}, schema)
         n_bad = (
-            self._scan_segments(v, live, schema, dvs=dvs)
+            self._scan_segments(s, s["live"])
             .where(_violation_pred(expr_sql))
             .limit(1)
             .count()
@@ -916,8 +931,8 @@ class VersionedTable:
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT: metadata-only commit removing the
         named check from the active map."""
-        v, _, entry = self._snapshot(None)
-        cons = self.constraints(v)
+        s = self._replay()
+        v, cons = s["version"], s["constraints"]
         if name not in cons:
             raise ValueError(
                 f"no constraint named {name!r} (have {sorted(cons)})"
@@ -925,7 +940,7 @@ class VersionedTable:
         del cons[name]
         self._commit(
             v + 1, "set_constraint", add=[], remove=[],
-            schema=StructType.fromJson(entry["schema"]),
+            schema=StructType.fromJson(s["entry"]["schema"]),
             extra={"constraints": cons, "constraint_dropped": name},
         )
         return v + 1
@@ -942,15 +957,15 @@ class VersionedTable:
         many rows would violate a tightened floor?").  Lazy: one
         groupless aggregate job over the snapshot, then a constant-size
         stack() unpivot — nothing per-row crosses the driver."""
-        version, _, _, entry = self._snapshot_state(version)
-        cons = {**self.constraints(version), **(extra_checks or {})}
+        s = self._replay(version)
+        cons = {**s["constraints"], **(extra_checks or {})}
         if not cons:
             raise ValueError("table has no constraints and no extra_checks")
         _check_constraint_defs(
-            self.spark, cons, StructType.fromJson(entry["schema"])
+            self.spark, cons, StructType.fromJson(s["entry"]["schema"])
         )
         names = sorted(cons)
-        agg = self.read(version).agg(
+        agg = self._scan_segments(s, s["live"]).agg(
             F.count(F.lit(1)).alias("n_rows"),
             *[
                 F.sum(
@@ -1154,79 +1169,62 @@ class VersionedTable:
 
     def _write_checkpoint(self, version: int) -> None:
         """Sidecar checkpoint (Delta V2 checkpoints + sidecars, Iceberg's
-        manifest list + manifests): the main ``<v>.checkpoint.json``
-        carries only the SMALL folds — txn map (Delta setTransactions),
-        active DV set, CHECK constraints — plus references to immutable
-        sidecar files, each holding up to ``SIDECAR_MAX`` live segments'
-        metadata ({stats, pv, writing commit} per segment, the Delta
-        add-file stats / Iceberg manifest entries).  Per checkpoint only
-        the DIRTY sidecars are rewritten — the ones the tail's
-        adds/removes touched — so a drip-feed append workload rewrites
-        one ~SIDECAR_MAX-entry file per checkpoint regardless of history
-        depth.  Round-11's inline form serialized the FULL live-set maps
-        every CHECKPOINT_EVERY commits: 6.5 ms -> 217 ms across a
-        10k-commit log (SCALE_STRESSORS_r11 deep_history) because the
-        payload is O(live) and live grows with the log.  Reads hydrate
-        main + sidecars back into the legacy in-memory shape once per
-        cached payload (:meth:`_hydrate_checkpoint`), so every consumer
-        fold is unchanged; legacy inline checkpoints stay readable and
-        are upgraded to sidecar form at the next checkpoint write."""
-        sidecars = None
-        prev = self._latest_checkpoint(version)
-        if prev is not None and "_sidecars" in prev:
-            sidecars = self._fold_sidecars_incremental(prev, version)
-        if sidecars is None:
-            # genesis, legacy-inline predecessor, or a restore in the
-            # tail (re-references pre-checkpoint segments whose stats /
-            # physical-writer commit the tail entries don't carry):
-            # one full fold through the existing checkpointed meta
-            # walks, then chunk.  O(live) once; incremental after.
-            live = self._resolve_live(version)
-            stats, pvs = self._live_segment_meta(version)
-            commits = self._live_segment_commits(version)
-            segs = {
-                rel: {
-                    "stats": stats.get(rel, {}),
-                    "pv": pvs.get(rel),
-                    "commit": commits.get(rel),
-                }
-                for rel in sorted(live)
+        manifest list + manifests) of the replayed state at ``version``:
+        the main ``<v>.checkpoint.json`` carries only the SMALL folds —
+        txn map (Delta setTransactions), active DV set, CHECK
+        constraints — plus references to immutable sidecar files, each
+        holding up to ``SIDECAR_MAX`` live segments' metadata ({stats,
+        pv, writing commit} per segment, the Delta add-file stats /
+        Iceberg manifest entries).  A sidecar of the previous checkpoint
+        whose entries are all unchanged is reused by name; the rest of
+        the live set is re-chunked into fresh files, and a partial last
+        reused sidecar is folded in so a drip of appends fills it rather
+        than stranding a small file per checkpoint.  One replay of the
+        tail plus O(dirty) writes, whatever the history depth."""
+        state = self._replay(version)
+        segs = {
+            rel: {
+                "stats": state["stats"][rel],
+                "pv": state["pvs"].get(rel),
+                "commit": state["seg_commits"][rel],
             }
-            sidecars = [
-                {"name": None, "segments": dict(chunk)}
-                for chunk in _chunks(sorted(segs.items()), SIDECAR_MAX)
-            ]
-        # publish dirty sidecars first (immutable, fresh uuid names — a
+            for rel in state["live"]
+        }
+        sidecars = [
+            sc
+            for sc in state["_sidecars"]
+            if all(segs.get(rel) == m for rel, m in sc["segments"].items())
+        ]
+        loose = set(segs).difference(*(sc["segments"] for sc in sidecars))
+        if loose and sidecars and len(sidecars[-1]["segments"]) < SIDECAR_MAX:
+            loose.update(sidecars.pop()["segments"])
+        # publish fresh sidecars first (immutable, fresh uuid names — a
         # crash before the main rename strands unreferenced litter,
         # never a readable-but-wrong checkpoint)
         try:
-            for sc in sidecars:
-                if sc["name"] is not None:
-                    continue  # clean: reused from the previous checkpoint
-                name = (
-                    f"{_fmt_version(version)}."
-                    f"{uuid.uuid4().hex[:8]}.sidecar.json"
-                )
-                spath = os.path.join(self._log_dir, name)
+            for chunk in _chunks(sorted(loose), SIDECAR_MAX):
+                sc = {
+                    "name": (
+                        f"{_fmt_version(version)}."
+                        f"{uuid.uuid4().hex[:8]}.sidecar.json"
+                    ),
+                    "segments": {rel: segs[rel] for rel in chunk},
+                }
+                spath = os.path.join(self._log_dir, sc["name"])
                 sscratch = (
                     f"{spath}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
                 )
                 with open(sscratch, "w") as fh:
                     json.dump({"segments": sc["segments"]}, fh)
                 os.rename(sscratch, spath)
-                sc["name"] = name
+                sidecars.append(sc)
         except OSError:
             return  # best-effort: skip this checkpoint entirely
         ckpt = {
             "version": version,
-            # latest (batch, version) per streaming source, so
-            # idempotent_append's replay check stays O(tail)
-            "txns": self._resolve_txns(version),
-            "dvs": sorted(self._resolve_dvs(version)),
-            # the active CHECK-constraint map, so constraints() is
-            # O(tail) like every other fold (pre-rev checkpoints
-            # lack the key and force the genesis walk — never wrong)
-            "constraints": self.constraints(version),
+            "txns": state["txns"],
+            "dvs": state["dvs"],
+            "constraints": state["constraints"],
             "sidecars": [
                 {"name": sc["name"], "n": len(sc["segments"])}
                 for sc in sidecars
@@ -1247,118 +1245,61 @@ class VersionedTable:
             except OSError:
                 pass
         else:
-            # register in this handle's discovery cache so the next
-            # fold uses it without a fresh listdir; hydration of the
-            # legacy-shape views is lazy (first consumer fold)
-            ckpt["_sidecars"] = sidecars
-            if hasattr(self, "_ckpt_versions") and (
-                version not in self._ckpt_versions
-            ):
-                import bisect
-
-                bisect.insort(self._ckpt_versions, version)
-                if len(self._ckpt_payloads) >= 4:
-                    # racing in-process writer threads share this handle
-                    # cache: next(iter()) can raise RuntimeError if a
-                    # peer inserts mid-eviction — skip on contention,
-                    # same soft-cap policy as the DV-position memo
-                    try:
-                        self._ckpt_payloads.pop(
-                            next(iter(self._ckpt_payloads)), None
-                        )
-                    except RuntimeError:
-                        pass
-                self._ckpt_payloads[version] = ckpt
-
-    def _fold_sidecars_incremental(
-        self, prev: dict, version: int
-    ) -> list[dict] | None:
-        """New sidecar list for a checkpoint at ``version``, folded from
-        the previous checkpoint's sidecars + the commit tail.  Clean
-        sidecars are returned with their existing ``name`` (reused,
-        never rewritten); touched ones carry ``name: None`` (the writer
-        publishes them fresh — sidecar files are immutable).  Returns
-        None when the tail contains a restore: its ``add`` re-references
-        segments whose stats/pv/physical-writer live in commits BEFORE
-        the previous checkpoint, which only the full fold resolves."""
-        scs = [dict(sc) for sc in prev["_sidecars"]]
-        adds: dict[str, dict] = {}
-        removes: set[str] = set()
-        for v in range(prev["version"] + 1, version + 1):
-            entry = self._read_commit(v)
-            if "restored_from" in entry:
-                return None
-            for rel in entry["remove"]:
-                if rel in adds:
-                    del adds[rel]  # added and removed within the tail
-                else:
-                    removes.add(rel)
-            for rel in entry["add"]:
-                adds[rel] = {
-                    "stats": entry.get("stats", {}).get(rel, {}),
-                    "pv": (entry.get("pv") or {}).get(rel) or None,
-                    "commit": v,
-                }
-        if removes:
-            for i, sc in enumerate(scs):
-                hit = removes & sc["segments"].keys()
-                if hit:
-                    segs = dict(sc["segments"])
-                    for rel in hit:
-                        del segs[rel]
-                    scs[i] = {"name": None, "segments": segs}
-            scs = [sc for sc in scs if sc["segments"]]
-        if adds:
-            items = sorted(adds.items())
-            if scs and len(scs[-1]["segments"]) < SIDECAR_MAX:
-                room = SIDECAR_MAX - len(scs[-1]["segments"])
-                head, items = items[:room], items[room:]
-                segs = dict(scs[-1]["segments"])
-                segs.update(head)
-                scs[-1] = {"name": None, "segments": segs}
-            for chunk in _chunks(items, SIDECAR_MAX):
-                scs.append({"name": None, "segments": dict(chunk)})
-        return scs
+            # the written state IS the replayed one: cache it hydrated,
+            # so the next replay off this checkpoint reads no file
+            self._cache_checkpoint(version, {
+                **ckpt,
+                **{
+                    k: state[k]
+                    for k in ("live", "stats", "pvs", "seg_commits")
+                },
+                "_sidecars": sidecars,
+            })
 
     def _hydrate_checkpoint(self, payload: dict) -> dict:
-        """Materialize a sidecar checkpoint's legacy-shaped views
-        (``live`` / ``stats`` / ``pvs`` / ``seg_commits``) in place, so
-        every consumer fold reads the same keys whether the file on disk
-        is round-11 inline or sidecar form.  Idempotent and lazy: the
-        sidecar files are read once per cached payload, the merged views
-        built on first consumer access.  Raises OSError when a
-        referenced sidecar is unreadable (externally cleaned) — the
-        caller drops this checkpoint and falls back to an older one."""
-        if "sidecars" not in payload or "live" in payload:
-            return payload
-        if "_sidecars" not in payload:
+        """The full state a checkpoint file records: the main file's
+        small folds plus its sidecars merged into the replay's
+        ``live`` / ``stats`` / ``pvs`` / ``seg_commits`` views, and the
+        sidecars themselves under ``_sidecars`` (what the next
+        checkpoint reuses).  Raises OSError when a referenced sidecar is
+        unreadable (externally cleaned) and ValueError when the payload
+        is not a complete sidecar-form state — either way
+        :meth:`_latest_checkpoint` skips this checkpoint for an older
+        one or genesis, so a checkpoint is used whole or not at all."""
+        try:
+            state = {
+                k: payload[k]
+                for k in ("version", "txns", "dvs", "constraints")
+            }
             scs = []
             for ref in payload["sidecars"]:
-                with open(
-                    os.path.join(self._log_dir, ref["name"])
-                ) as fh:
+                with open(os.path.join(self._log_dir, ref["name"])) as fh:
                     scs.append({
                         "name": ref["name"],
                         "segments": json.load(fh)["segments"],
                     })
-            payload["_sidecars"] = scs
-        stats: dict[str, dict] = {}
-        pvs: dict[str, dict] = {}
-        seg_commits: dict[str, int] = {}
-        for sc in payload["_sidecars"]:
-            for rel, meta in sc["segments"].items():
-                stats[rel] = meta.get("stats") or {}
-                pv = meta.get("pv")
-                if pv:
-                    pvs[rel] = pv
-                c = meta.get("commit")
-                if c is not None:
-                    seg_commits[rel] = c
-        payload["stats"] = stats
-        payload["pvs"] = pvs
-        payload["seg_commits"] = seg_commits
-        payload["live"] = sorted(stats)
-        return payload
+            stats: dict[str, dict] = {}
+            pvs: dict[str, dict] = {}
+            seg_commits: dict[str, int] = {}
+            for sc in scs:
+                for rel, meta in sc["segments"].items():
+                    stats[rel] = meta["stats"]
+                    if meta["pv"]:
+                        pvs[rel] = meta["pv"]
+                    seg_commits[rel] = meta["commit"]
+        except (KeyError, TypeError) as exc:
+            raise ValueError(
+                f"not a complete sidecar-form checkpoint of {self.root} "
+                f"({exc!r})"
+            ) from exc
+        return {
+            **state,
+            "live": sorted(stats),
+            "stats": stats,
+            "pvs": pvs,
+            "seg_commits": seg_commits,
+            "_sidecars": scs,
+        }
 
     #: ops whose commit changes table METADATA — never rebasable across:
     #: the lost writer derived its batch under schema/spec/constraint/
@@ -1529,170 +1470,178 @@ class VersionedTable:
             f"{self.root}"
         )
 
+    def _checkpoint_listing(self) -> list[int]:
+        """Checkpoint versions on disk, oldest first, minus the ones this
+        handle found unusable."""
+        suffix = ".checkpoint.json"
+        return sorted(
+            int(n[: -len(suffix)])
+            for n in os.listdir(self._log_dir)
+            if n.endswith(suffix)
+            and n[: -len(suffix)].isdigit()
+            and int(n[: -len(suffix)]) not in self._ckpt_skip
+        )
+
+    def _cache_checkpoint(self, cv: int, state: dict | None) -> None:
+        """Record checkpoint ``cv`` in this handle's cache — its hydrated
+        state, or None to drop an unusable one for good.  One lock and
+        one bound (``_CKPT_CACHE_MAX`` states, oldest insert evicted)
+        for every writer and reader thread sharing the handle."""
+        with self._ckpt_lock:
+            if state is None:
+                self._ckpt_skip.add(cv)
+                if self._ckpt_versions and cv in self._ckpt_versions:
+                    self._ckpt_versions.remove(cv)
+                self._ckpt_payloads.pop(cv, None)
+                return
+            if self._ckpt_versions is not None and (
+                cv not in self._ckpt_versions
+            ):
+                bisect.insort(self._ckpt_versions, cv)
+            self._ckpt_payloads.pop(cv, None)
+            while len(self._ckpt_payloads) >= _CKPT_CACHE_MAX:
+                del self._ckpt_payloads[next(iter(self._ckpt_payloads))]
+            self._ckpt_payloads[cv] = state
+
     def _latest_checkpoint(self, version: int) -> dict | None:
-        """The newest checkpoint payload at or before ``version`` (None
-        when the log has none yet) — the single discovery point every
-        checkpointed fold shares.
+        """The newest usable checkpoint state at or before ``version``
+        (None: the replay folds from genesis) — called by
+        :meth:`_replay` alone.
 
-        Per-handle caching (round-11 deep-history item): the discovery
-        listdir runs once per handle (refreshed when THIS handle writes
-        a checkpoint), and payloads are memoized — checkpoint files are
-        immutable and never vacuumed, so a cached payload can't go
-        stale.  A checkpoint another PROCESS wrote after this handle's
-        listing is simply not used yet: the fold replays a longer tail
-        off an older checkpoint, which is always correct."""
-        if not hasattr(self, "_ckpt_versions"):
-            self._ckpt_versions: list[int] = sorted(
-                int(n[: -len(".checkpoint.json")])
-                for n in os.listdir(self._log_dir)
-                if n.endswith(".checkpoint.json")
-                and n[: -len(".checkpoint.json")].isdigit()
-            )
-            self._ckpt_payloads: dict[int, dict] = {}
-        import bisect
-
-        i = bisect.bisect_right(self._ckpt_versions, version)
-        known = self._ckpt_versions[i - 1] if i else -1
-        if version - known > 4 * CHECKPOINT_EVERY:
-            # the cached listing would force a long tail replay — other
-            # writers have likely checkpointed since; refresh once
-            self._ckpt_versions = sorted(
-                int(n[: -len(".checkpoint.json")])
-                for n in os.listdir(self._log_dir)
-                if n.endswith(".checkpoint.json")
-                and n[: -len(".checkpoint.json")].isdigit()
-            )
-            i = bisect.bisect_right(self._ckpt_versions, version)
-        if i == 0:
-            return None
-        cv = self._ckpt_versions[i - 1]
-        payload = self._ckpt_payloads.get(cv)
-        if payload is None:
+        Per-handle caching: the discovery listdir runs once per handle
+        (a checkpoint THIS handle writes is registered directly), and
+        hydrated states are memoized — checkpoint files are immutable
+        and never vacuumed, so a cached state can't go stale.  A
+        checkpoint another PROCESS wrote after this handle's listing is
+        simply not used yet: the replay folds a longer tail off an older
+        checkpoint, which is always correct.  A checkpoint that fails to
+        hydrate (unreadable, or not a complete state) is skipped the
+        same way."""
+        while True:
+            with self._ckpt_lock:
+                if self._ckpt_versions is None:
+                    self._ckpt_versions = self._checkpoint_listing()
+                i = bisect.bisect_right(self._ckpt_versions, version)
+                known = self._ckpt_versions[i - 1] if i else -1
+                if version - known > 4 * CHECKPOINT_EVERY:
+                    # the cached listing would force a long tail replay —
+                    # other writers have likely checkpointed since
+                    self._ckpt_versions = self._checkpoint_listing()
+                    i = bisect.bisect_right(self._ckpt_versions, version)
+                if i == 0:
+                    return None
+                cv = self._ckpt_versions[i - 1]
+                state = self._ckpt_payloads.get(cv)
+            if state is not None:
+                return state
             try:
                 with open(self._checkpoint_path(cv)) as fh:
-                    payload = json.load(fh)
-                # sidecar form: load the referenced sidecar files now so
-                # an unreadable one (externally cleaned) fails here and
-                # falls back like a missing main file
-                payload = self._hydrate_checkpoint(payload)
-            except OSError:
-                # externally cleaned (not our vacuum's doing): drop it
-                # from the cache and fall back to the next older one
-                # (a racing thread may have dropped it first)
-                try:
-                    self._ckpt_versions.remove(cv)
-                except ValueError:
-                    pass
-                return self._latest_checkpoint(version)
-            if len(self._ckpt_payloads) >= 4:
-                # same contention guard as the write-path registration
-                try:
-                    self._ckpt_payloads.pop(
-                        next(iter(self._ckpt_payloads)), None
-                    )
-                except RuntimeError:
-                    pass
-            self._ckpt_payloads[cv] = payload
-        # a write-path registration caches {main + _sidecars} without the
-        # merged legacy views — build them on first consumer access
-        # (in-place, so the cached object keeps them; no file IO here)
-        return self._hydrate_checkpoint(payload)
+                    state = self._hydrate_checkpoint(json.load(fh))
+            except (OSError, ValueError):
+                self._cache_checkpoint(cv, None)
+                continue
+            self._cache_checkpoint(cv, state)
+            return state
 
-    def _resolve_state(
-        self, version: int, use_checkpoint: bool = True
-    ) -> tuple[set[str], set[str]]:
-        """(live segments, active deletion vectors) at ``version`` in ONE
-        checkpointed fold — O(tail) driver metadata, and every read needs
-        both.  DV semantics: a FULL-replace commit (overwrite, compact,
-        or a copy-on-write DML that touched every live segment)
-        materializes every DV through the read path it rewrote from, so
-        the DV set resets to empty there.  Partial copy-on-write rewrites
-        keep DVs active: rows of removed segments simply stop matching
-        (segment names are never reused), so a stale DV entry can only be
-        dead weight, never a wrong delete."""
-        start = 0
-        live: set[str] = set()
-        dvs: set[str] = set()
-        legacy_dv_refold = False
-        ckpt = self._latest_checkpoint(version) if use_checkpoint else None
-        if ckpt is not None:
-            live = set(ckpt["live"])
-            start = ckpt["version"] + 1
-            if "dvs" in ckpt:
-                dvs = set(ckpt["dvs"])
-            else:
-                # pre-DV-rev checkpoint: the dv fold must restart from
-                # genesis (the live fold may still use the checkpoint)
-                legacy_dv_refold = True
-        for v in range(start, version + 1):
-            entry = self._read_commit(v)
+    def _replay(
+        self, version: int | None = None, use_checkpoint: bool = True
+    ) -> dict:
+        """The snapshot at ``version`` (head when None): ONE fold of the
+        newest checkpoint plus the commit tail, each tail commit read
+        once.  The only reader of snapshot state; ``use_checkpoint=False``
+        folds from genesis (the reference every checkpointed answer must
+        equal).  Returns the hydrated-checkpoint shape plus the head
+        commit:
+
+        - ``version``, ``entry`` (the head commit);
+        - ``live`` / ``dvs``: sorted live segments and active deletion
+          vectors.  A FULL-replace commit (overwrite, compact, or a
+          copy-on-write DML that touched every live segment)
+          materializes every DV through the read path it rewrote from,
+          so the DV set resets to empty there; partial rewrites keep DVs
+          active (segment names are never reused, so a stale DV entry
+          is dead weight, never a wrong delete);
+        - ``txns``: latest ``[batch, version]`` per streaming source
+          (single writer per source, monotonic batch ids);
+        - ``constraints``: the newest ``set_constraint`` map, else the
+          create-time one;
+        - ``stats`` / ``pvs`` / ``seg_commits``: per live segment, the
+          footer stats, partition tuple and PHYSICALLY writing commit.
+          A restore's re-added segments take their partition tuple and
+          writer from the restored-to snapshot — the re-reference is not
+          a write;
+        - ``_sidecars``: the sidecars of the checkpoint the fold started
+          from (empty from genesis), which the next checkpoint reuses.
+        """
+        if version is None:
+            version = self.latest_version()
+        try:
+            head = self._read_commit(version)
+        except FileNotFoundError:
+            versions = self._versions()
+            if not versions:
+                raise
+            raise ValueError(
+                f"unknown version {version} "
+                f"(have {versions[0]}..{versions[-1]})"
+            ) from None
+        base = self._latest_checkpoint(version) if use_checkpoint else None
+        if base is None:
+            base = {
+                "version": -1, "live": [], "dvs": [], "txns": {},
+                "constraints": {}, "stats": {}, "pvs": {},
+                "seg_commits": {}, "_sidecars": [],
+            }
+        live = set(base["live"])
+        dvs = set(base["dvs"])
+        txns = {k: list(t) for k, t in base["txns"].items()}
+        cons = dict(base["constraints"])
+        stats = dict(base["stats"])
+        pvs = dict(base["pvs"])
+        commits = dict(base["seg_commits"])
+        for v in range(base["version"] + 1, version + 1):
+            entry = head if v == version else self._read_commit(v)
             removed = set(entry["remove"])
             if live and removed >= live:
                 dvs = set()  # full replace: the rewrite read applied DVs
-            live -= removed
-            live |= set(entry["add"])
+            for rel in removed:
+                live.discard(rel)
+                stats.pop(rel, None)
+                pvs.pop(rel, None)
+                commits.pop(rel, None)
             dvs -= set(entry.get("dv_remove", []))  # dv compaction
             dvs |= set(entry.get("dv_add", []))
-        if legacy_dv_refold:
-            dvs = self._resolve_state(version, use_checkpoint=False)[1]
-        return live, dvs
-
-    def _resolve_live(
-        self, version: int, use_checkpoint: bool = True
-    ) -> set[str]:
-        """Live segments at ``version`` (see :meth:`_resolve_state`)."""
-        return self._resolve_state(version, use_checkpoint)[0]
-
-    def _resolve_dvs(
-        self, version: int, use_checkpoint: bool = True
-    ) -> set[str]:
-        """Active DV files at ``version`` (see :meth:`_resolve_state`)."""
-        return self._resolve_state(version, use_checkpoint)[1]
-
-    def _resolve_txns(
-        self, version: int, use_checkpoint: bool = True
-    ) -> dict[str, list]:
-        """Latest ``{source: [batch, version]}`` transaction per streaming
-        source at ``version`` — from the nearest checkpoint carrying a
-        txn map (pre-txn checkpoints force a genesis fold, never a wrong
-        answer) plus the commit tail.  Single-writer-per-source with
-        monotonically increasing batch ids (the structured-streaming
-        model), so the latest entry subsumes all earlier ones."""
-        start = 0
-        txns: dict[str, list] = {}
-        if use_checkpoint:
-            ckpt = self._latest_checkpoint(version)
-            if ckpt is not None and "txns" in ckpt:
-                txns = {k: list(v) for k, v in ckpt["txns"].items()}
-                start = ckpt["version"] + 1
-            # else: an older-rev checkpoint — fold from genesis
-        for v in range(start, version + 1):
-            txn = self._read_commit(v).get("txn")
+            src = None
+            if "restored_from" in entry:
+                src = self._replay(entry["restored_from"], use_checkpoint)
+            for rel in entry["add"]:
+                live.add(rel)
+                stats[rel] = entry.get("stats", {}).get(rel, {})
+                pv = (src["pvs"] if src else entry.get("pv") or {}).get(rel)
+                if pv:
+                    pvs[rel] = pv
+                commits[rel] = src["seg_commits"][rel] if src else v
+            txn = entry.get("txn")
             if txn:
                 txns[txn["source"]] = [txn["batch"], v]
-        return txns
-
-    def _snapshot(self, version: int | None) -> tuple[int, list[str], dict]:
-        version, live, _, entry = self._snapshot_state(version)
-        return version, live, entry
-
-    def _snapshot_state(
-        self, version: int | None
-    ) -> tuple[int, list[str], list[str], dict]:
-        """(version, live segments, active DVs, commit entry) — the full
-        snapshot resolution in one log fold, for read paths that need
-        the DV set too (every read does)."""
-        versions = self._versions()
-        if not versions:
-            raise FileNotFoundError(f"empty commit log: {self._log_dir}")
-        if version is None:
-            version = versions[-1]
-        if version not in set(versions):
-            raise ValueError(
-                f"unknown version {version} (have {versions[0]}..{versions[-1]})"
-            )
-        live, dvs = self._resolve_state(version)
-        return version, sorted(live), sorted(dvs), self._read_commit(version)
+            if "constraints" in entry:
+                cons = dict(entry["constraints"])
+            elif v == 0:
+                cons = dict(
+                    entry.get("properties", {}).get("constraints", {})
+                )
+        return {
+            "version": version,
+            "entry": head,
+            "live": sorted(live),
+            "dvs": sorted(dvs),
+            "txns": txns,
+            "constraints": cons,
+            "stats": stats,
+            "pvs": pvs,
+            "seg_commits": commits,
+            "_sidecars": base["_sidecars"],
+        }
 
     def history(self) -> list[dict]:
         """All commits, oldest first (the DESCRIBE HISTORY surface)."""
@@ -1925,47 +1874,36 @@ class VersionedTable:
             return None
 
     def _scan_segments(
-        self,
-        version: int,
-        rels: list[str],
-        schema: StructType,
-        dvs: list[str] | None = None,
-        keep_identity: bool = False,
-        renames: dict[str, list[str]] | None = None,
+        self, s: dict, rels: list[str], keep_identity: bool = False
     ) -> DataFrame:
-        """Scan ``rels`` under the snapshot's schema with the active
-        deletion vectors applied: rows masked by a DV are dropped via ONE
-        broadcast left-anti join on the (segment, file, position)
-        identity — no shuffle of the data side, and a DV row whose
-        segment is not in ``rels`` (pruned away or since rewritten)
-        simply never matches.  Tables with no active DVs get the plain
-        scan, bit-identical plans to before DVs existed.  ``dvs`` is the
-        already-resolved active set (pass it to avoid a second log fold);
-        None means resolve here.  ``keep_identity=True`` keeps the
-        ``_dv_*`` identity columns on the result — the shared scan the
-        merge-on-read mutations build their own DVs from.
+        """Scan ``rels`` under the schema of snapshot ``s`` (a
+        :meth:`_replay` state) with its active deletion vectors applied:
+        rows masked by a DV are dropped via ONE broadcast left-anti join
+        on the (segment, file, position) identity — no shuffle of the
+        data side, and a DV row whose segment is not in ``rels`` (pruned
+        away or since rewritten) simply never matches.  Tables with no
+        active DVs get the plain scan, bit-identical plans to before DVs
+        existed.  ``keep_identity=True`` keeps the ``_dv_*`` identity
+        columns on the result — the shared scan the merge-on-read
+        mutations build their own DVs from.
 
-        ``renames`` is the snapshot's column-rename chains
-        (logical name -> [retired names, newest first]; see
-        :meth:`rename_column`): segments persist their WRITE-TIME column
-        names forever, so a scan spanning a rename reads a WIDENED
-        schema (logical + retired twins, parquet null-fills whichever a
-        file lacks) and projects each logical column as
-        ``coalesce(current, *retired)`` — metadata-only rename, zero
-        rewrite, and tables with no renames keep the bit-identical plain
-        plan.  None means resolve from the version's commit entry."""
-        if renames is None:
-            renames = (
-                self._read_commit(version).get("renames") or {}
-                if self._versions()
-                else {}
-            )
+        The snapshot's column-rename chains (logical name -> [retired
+        names, newest first]; see :meth:`rename_column`) widen the read:
+        segments persist their WRITE-TIME column names forever, so a
+        scan spanning a rename reads a WIDENED schema (logical + retired
+        twins, parquet null-fills whichever a file lacks) and projects
+        each logical column as ``coalesce(current, *retired)`` —
+        metadata-only rename, zero rewrite, and tables with no renames
+        keep the bit-identical plain plan."""
+        version, dvs = s["version"], s["dvs"]
+        schema = StructType.fromJson(s["entry"]["schema"])
+        renames = s["entry"].get("renames") or {}
         chains = {
             k: v for k, v in renames.items()
             if v and any(f.name == k for f in schema.fields)
         }
         if not rels:
-            empty = _empty_frame(self.spark, schema)
+            empty = _literal_frame(self.spark, schema)
             if keep_identity:
                 # honor the contract even on an empty live set: callers
                 # (touched-file discovery, the MOR mutations) select the
@@ -1987,8 +1925,6 @@ class VersionedTable:
             ]
             read_schema = StructType(list(schema.fields) + retired)
         reader = self.spark.read.schema(read_schema)
-        if dvs is None:
-            dvs = sorted(self._resolve_dvs(version))
         if dvs:
             self._check_present(version, dvs)
 
@@ -2061,7 +1997,7 @@ class VersionedTable:
                     if not parts_dfs:
                         # every part file of every rel fully enumerated
                         # and none exist — an empty (but present) live set
-                        return _empty_frame(self.spark, schema)
+                        return _literal_frame(self.spark, schema)
                     fast = parts_dfs[0]
                     for other in parts_dfs[1:]:
                         fast = fast.unionAll(other)
@@ -2295,6 +2231,12 @@ class VersionedTable:
     def prune_point(
         self, version: int, col: str, value
     ) -> tuple[list[str], list[str]]:
+        """:meth:`_prune_point` at ``version``."""
+        return self._prune_point(self._replay(version), col, value)
+
+    def _prune_point(
+        self, s: dict, col: str, value
+    ) -> tuple[list[str], list[str]]:
         """Split the live set into (scanned, skipped) for an equality
         probe ``col = value``, combining min/max stats (cheap, from the
         commit log) with the per-segment bloom probe (catches the case
@@ -2314,8 +2256,8 @@ class VersionedTable:
                 f"(got {type(value).__name__}; floats/bools/timestamps "
                 "have engine-divergent string forms)"
             )
-        scanned, skipped = self.pruned_segments(version, col, value, value)
-        names = self._stat_names(version, col)
+        scanned, skipped = self._prune_range(s, col, value, value)
+        names = self._stat_names(s, col)
         really_scanned = []
         for rel in scanned:
             # each file physically stores exactly ONE of the names; its
@@ -2339,10 +2281,8 @@ class VersionedTable:
         :meth:`read_pruned`, the caller applies the residual equality
         predicate — pruning skips whole files, it does not filter rows.
         Deletion vectors are applied as in every read."""
-        version, _, dvs, entry = self._snapshot_state(version)
-        scanned, _ = self.prune_point(version, col, value)
-        schema = StructType.fromJson(entry["schema"])
-        return self._scan_segments(version, scanned, schema, dvs=dvs)
+        s = self._replay(version)
+        return self._scan_segments(s, self._prune_point(s, col, value)[0])
 
     def version_at(self, ts: float) -> int:
         """TIMESTAMP AS OF resolution (Delta/Iceberg): the latest version
@@ -2374,9 +2314,8 @@ class VersionedTable:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
             version = self.version_at(timestamp)
-        version, live, dvs, entry = self._snapshot_state(version)
-        schema = StructType.fromJson(entry["schema"])
-        return self._scan_segments(version, live, schema, dvs=dvs)
+        s = self._replay(version)
+        return self._scan_segments(s, s["live"])
 
     # ------------------------------------------------------------- mutations
     def read_with_provenance(self, version: int | None = None) -> DataFrame:
@@ -2388,13 +2327,10 @@ class VersionedTable:
         is exactly what the audit cares about (which commit produced
         the bytes being served; vacuum/debug lineage).  One broadcast
         join of the identified scan against the O(files) segment→commit
-        map — no data-side shuffle; the map resolves O(tail) via the
-        checkpointed fold (:meth:`_live_segment_commits`), so a
-        long-lived table's provenance read no longer pays a
-        genesis-to-head log walk per call."""
-        version, live, dvs, entry = self._snapshot_state(version)
-        schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
+        map — no data-side shuffle; the map is the replay's
+        ``seg_commits`` (O(tail) off the newest checkpoint)."""
+        s = self._replay(version)
+        data_cols = [f["name"] for f in s["entry"]["schema"]["fields"]]
         if "_commit_version" in data_cols:
             # same contract as the streaming readChangeFeed: a table may
             # STORE such a column, but a read that APPENDS it must
@@ -2404,16 +2340,18 @@ class VersionedTable:
                 "'_commit_version', reserved for the provenance stamp — "
                 "read() it plainly or rename the column"
             )
-        by_seg = {
-            os.path.basename(rel): v
-            for rel, v in self._live_segment_commits(version).items()
-        }
-        lookup = self.spark.createDataFrame(
-            sorted(by_seg.items()), "_dv_seg string, _commit_version bigint"
+        lookup = _literal_frame(
+            self.spark,
+            StructType([
+                StructField("_dv_seg", StringType()),
+                StructField("_commit_version", LongType()),
+            ]),
+            sorted(
+                (os.path.basename(rel), v)
+                for rel, v in s["seg_commits"].items()
+            ),
         )
-        scan = self._scan_segments(
-            version, live, schema, dvs=dvs, keep_identity=True
-        )
+        scan = self._scan_segments(s, s["live"], keep_identity=True)
         return scan.join(F.broadcast(lookup), "_dv_seg", "left").select(
             *data_cols, "_commit_version"
         )
@@ -2493,14 +2431,15 @@ class VersionedTable:
         Returns the exact original version for a replay of the source's
         latest batch (the foreachBatch failure model); an OLDER batch id
         also no-ops, returning the source's latest committed version."""
-        latest_txn = self._resolve_txns(self.latest_version()).get(source_id)
+        latest_txn = self._replay()["txns"].get(source_id)
         if latest_txn is not None and batch_id <= latest_txn[0]:
             # replay: this batch (or a predecessor it subsumes) committed
             return latest_txn[1]
         df = self._require_schema(df, "idempotent_append")
         add = [self._write_segment(df, self.latest_version() + 1)]
         for _ in range(64):  # bounded: each loss means another's progress
-            v = self.latest_version()
+            s = self._replay()
+            v = s["version"]
             # Re-validate against the NEW head after every lost race: the
             # interleaved winner may have recorded this very txn (another
             # replay of the same batch — re-check the txn map) or widened
@@ -2508,10 +2447,10 @@ class VersionedTable:
             # record the CURRENT (widened) schema, not the pre-race
             # df.schema, or it would silently revert the evolution for
             # every later reader (read() serves the latest commit schema).
-            latest_txn = self._resolve_txns(v).get(source_id)
+            latest_txn = s["txns"].get(source_id)
             if latest_txn is not None and batch_id <= latest_txn[0]:
                 return latest_txn[1]
-            current = StructType.fromJson(self._read_commit(v)["schema"])
+            current = StructType.fromJson(s["entry"]["schema"])
             cur_types = {f.name: f.dataType for f in current.fields}
             incompatible = [
                 f.name for f in df.schema.fields
@@ -2554,7 +2493,8 @@ class VersionedTable:
         pre-evolution version still serves the schema recorded THEN.  At
         100 TB this is the whole point: adding a column is one metadata
         commit, never a table rewrite."""
-        v, _, entry = self._snapshot(None)
+        s = self._replay()
+        v, entry = s["version"], s["entry"]
         current = StructType.fromJson(entry["schema"])
         cur_types = {f.name: f.dataType for f in current.fields}
         batch_types = {f.name: f.dataType for f in df.schema.fields}
@@ -2650,7 +2590,8 @@ class VersionedTable:
         stats/bloom pushdown — sources/vtable_batch.py); the STREAMING
         source refuses renamed tables loudly (mid-stream schema change
         semantics are not defined for it)."""
-        v, _, entry = self._snapshot(None)
+        s = self._replay()
+        v, entry = s["version"], s["entry"]
         schema = StructType.fromJson(entry["schema"])
         names = [f.name for f in schema.fields]
         if old not in names:
@@ -2672,7 +2613,7 @@ class VersionedTable:
             )
         pat = re.compile(rf"\b{re.escape(old)}\b")
         hit = sorted(
-            n for n, sql in self.constraints(v).items() if pat.search(sql)
+            n for n, sql in s["constraints"].items() if pat.search(sql)
         )
         if hit:
             raise ValueError(
@@ -2732,7 +2673,8 @@ class VersionedTable:
         drop resurrects the column with the data.  Refused when the
         column is absent, is the table's only column, or an active
         CHECK constraint references it."""
-        v, _, entry = self._snapshot(None)
+        s = self._replay()
+        v, entry = s["version"], s["entry"]
         schema = StructType.fromJson(entry["schema"])
         names = [f.name for f in schema.fields]
         if col not in names:
@@ -2741,7 +2683,7 @@ class VersionedTable:
             raise ValueError("drop_column: cannot drop the only column")
         pat = re.compile(rf"\b{re.escape(col)}\b")
         hit = sorted(
-            n for n, sql in self.constraints(v).items() if pat.search(sql)
+            n for n, sql in s["constraints"].items() if pat.search(sql)
         )
         if hit:
             raise ValueError(
@@ -2796,7 +2738,8 @@ class VersionedTable:
         post-images, compaction) stay unpartitioned-and-always-scanned;
         re-partition them with :meth:`compact_clustered` + a fresh
         append if layout matters."""
-        v, _, entry = self._snapshot(None)
+        s = self._replay()
+        v, entry = s["version"], s["entry"]
         schema = StructType.fromJson(entry["schema"])
         types = {f.name: f.dataType.simpleString() for f in schema.fields}
         spec: list[dict] = []
@@ -2886,8 +2829,7 @@ class VersionedTable:
 
     def partition_spec(self, version: int | None = None) -> list[dict]:
         """The active partition spec at ``version`` (head if None)."""
-        _, _, entry = self._snapshot(version)
-        return entry.get("spec") or []
+        return self._replay(version)["entry"].get("spec") or []
 
     def widen_column_type(self, col: str, new_type) -> int:
         """ALTER TABLE ... ALTER COLUMN TYPE — metadata-only LOSSLESS
@@ -2913,7 +2855,8 @@ class VersionedTable:
         Reference parity: the reference has no ALTER surface (pandas
         scripts rewrite whole frames); this is the lakehouse-layer
         extension the round-9 verdict asked for (#2)."""
-        v, _, entry = self._snapshot(None)
+        s = self._replay()
+        v, entry = s["version"], s["entry"]
         schema = StructType.fromJson(entry["schema"])
         field = next((f for f in schema.fields if f.name == col), None)
         if field is None:
@@ -2985,7 +2928,8 @@ class VersionedTable:
         return v + 1
 
     def overwrite(self, df: DataFrame) -> int:
-        v, live, entry = self._snapshot(None)
+        s = self._replay()
+        v, live, entry = s["version"], s["live"], s["entry"]
         spec = entry.get("spec") or []
         old_types = {
             f.name: f.dataType.simpleString()
@@ -3037,9 +2981,7 @@ class VersionedTable:
     def _rewrite_slice(
         self,
         op: str,
-        v: int,
-        schema: StructType,
-        dvs: list[str],
+        s: dict,
         candidates: list[str],
         touched: list[str],
         rewrite: Callable[[DataFrame], DataFrame],
@@ -3053,7 +2995,7 @@ class VersionedTable:
         """Copy-on-write DML core (Delta's touched-file rewrite).
 
         ``candidates`` are the live segments the operation read at
-        snapshot ``v`` (its conflict-check read set), ``touched`` the
+        snapshot ``s`` (its conflict-check read set), ``touched`` the
         ones among them holding affected rows, and ``skipped`` the live
         segments log stats proved disjoint without a read.  ONE DV-aware
         scan of ``touched`` feeds ``rewrite(slice)`` — the rows that
@@ -3066,8 +3008,10 @@ class VersionedTable:
         a batch, an empty ``touched`` has nothing to rewrite.
         Commit-free when nothing is removed or added.  Returns the
         version that committed."""
+        v = s["version"]
+        schema = StructType.fromJson(s["entry"]["schema"])
         add = [new_rel] if new_rel is not None else []
-        slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
+        slice_df = self._scan_segments(s, touched)
         with _persisted(slice_df, self.cdf_enabled) as slice_df:
             if touched or new_rel is None:
                 add += self._nonempty(
@@ -3097,9 +3041,7 @@ class VersionedTable:
     def _mask_rows(
         self,
         op: str,
-        v: int,
-        schema: StructType,
-        live: list[str],
+        s: dict,
         matched: DataFrame,
         changes: Callable[[DataFrame], DataFrame],
         extra: dict,
@@ -3109,17 +3051,19 @@ class VersionedTable:
     ) -> int:
         """Merge-on-read DML core (Delta deletion vectors / Iceberg
         positional deletes): ``matched`` — rows of the identity-keeping
-        scan of ``live`` at snapshot ``v``, which already excludes rows
+        scan of snapshot ``s``'s live set, which already excludes rows
         earlier DVs masked, so none is masked or imaged twice — land as
         one deletion vector; with ``rows`` their data columns,
         ``images(rows)`` (if given) land as one appended segment and, on
         CDF tables, ``changes(rows)`` as the commit's change rows.
         ZERO existing segments are rewritten; the deferred rewrite
         amortizes into the next :meth:`compact`.  The operation read
-        every live file, so ``live`` is its conflict-check read set.
+        every live file, so the live set is its conflict-check read set.
         Commit-free when neither a DV nor an image row results (no empty
         DV is ever registered — see :meth:`_write_dv`).  Returns the
         version that committed."""
+        v = s["version"]
+        schema = StructType.fromJson(s["entry"]["schema"])
         with _persisted(
             matched, self.cdf_enabled or images is not None
         ) as matched:
@@ -3138,7 +3082,7 @@ class VersionedTable:
                 extra["cdf"] = self._write_cdf(changes(rows), v + 1)
         return self._commit_rebased(
             v, op, add=add, remove=[], schema=schema, extra=extra,
-            read_files=live, probes=probes,
+            read_files=s["live"], probes=probes,
         )
 
     def _nonempty(self, rel: str) -> list[str]:
@@ -3151,12 +3095,7 @@ class VersionedTable:
         return []
 
     def _matched_segments(
-        self,
-        v: int,
-        rels: list[str],
-        schema: StructType,
-        dvs: list[str],
-        match: Column,
+        self, s: dict, rels: list[str], match: Column
     ) -> list[str]:
         """EXACT touched-file discovery: which of ``rels`` hold at least
         one live row where ``match`` is true?  One small job over an
@@ -3167,9 +3106,7 @@ class VersionedTable:
         with no matching row needs no rewrite by definition."""
         if not rels:
             return []
-        scan = self._scan_segments(
-            v, rels, schema, dvs=dvs, keep_identity=True
-        )
+        scan = self._scan_segments(s, rels, keep_identity=True)
         by_base = {os.path.basename(r): r for r in rels}
         hits = scan.where(match).select("_dv_seg").distinct().collect()
         return sorted(by_base[row._dv_seg] for row in hits)
@@ -3246,19 +3183,20 @@ class VersionedTable:
         validated row by row against the predicate before the slice
         rewrite drops the matching rows and appends it."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
+        s = self._replay()
+        v = s["version"]
+        schema = StructType.fromJson(s["entry"]["schema"])
         if df is not None:
             df = self._require_schema(df, "overwrite_where")
-        elif new_rel is not None:
-            cons = self.constraints(v)
-            if cons:
-                self._enforce_constraints([new_rel], cons, "replace_where")
+        elif new_rel is not None and s["constraints"]:
+            self._enforce_constraints(
+                [new_rel], s["constraints"], "replace_where"
+            )
         candidates, skipped = (
-            self.pruned_segments(v, *prune) if prune else (live, [])
+            self._prune_range(s, *prune) if prune else (s["live"], [])
         )
         match = F.coalesce(cond, F.lit(False))
-        touched = self._matched_segments(v, candidates, schema, dvs, match)
+        touched = self._matched_segments(s, candidates, match)
         # the batch lands (and is validated) before the slice rewrite:
         # a rejected batch must cost nothing but its own write
         if df is not None:
@@ -3290,7 +3228,7 @@ class VersionedTable:
         committed = v  # nothing deleted, nothing inserted: no-op
         if new_rel is not None or touched:
             committed = self._rewrite_slice(
-                "replace_where", v, schema, dvs, candidates, touched,
+                "replace_where", s, candidates, touched,
                 rewrite=lambda s: s.where(~match),
                 changes=lambda s: _change_rows(s.where(match), "delete"),
                 extra={"condition": desc or str(condition)},
@@ -3320,11 +3258,10 @@ class VersionedTable:
         every matchable key, so its change set is the full-table one."""
         source = self._require_schema(source, "merge_upsert")
         keys = list(keys)
-        v, _, dvs, entry = self._snapshot_state(None)
-        touched, untouched = self.touched_segments(source, keys[0], v)
+        s = self._replay()
+        touched, untouched = self._touched_segments(s, source, keys[0])
         return self._rewrite_slice(
-            "merge", v, StructType.fromJson(entry["schema"]), dvs,
-            touched, touched,
+            "merge", s, touched, touched,
             rewrite=lambda s: upsert(target=s, source=source, keys=keys),
             changes=lambda s: upsert_change_feed(s, source, keys),
             extra={"keys": keys},
@@ -3336,12 +3273,19 @@ class VersionedTable:
     ) -> tuple[list[str], list[str]]:
         """Delta's touched-file discovery: which live segments CAN contain
         a key present in the merge source?  ONE small job joins the
-        source's distinct keys against the broadcast per-segment
-        [min,max] ranges (O(files) rows — driver metadata scale); a
+        source's keys against the broadcast per-segment [min,max] ranges
+        (O(files) rows — driver metadata scale) and keeps the distinct
+        hit segments, so duplicate source keys cost nothing extra; a
         segment lacking stats for the key is conservatively touched.
         Returns (touched, untouched), both sorted."""
-        stats = self._live_segment_stats(version)
-        touched = {r for r, s in stats.items() if s.get(key) is None}
+        return self._touched_segments(self._replay(version), source, key)
+
+    def _touched_segments(
+        self, s: dict, source: DataFrame, key: str
+    ) -> tuple[list[str], list[str]]:
+        """:meth:`touched_segments` over snapshot ``s``."""
+        stats = s["stats"]
+        touched = {r for r, st in stats.items() if st.get(key) is None}
         ranged = [
             (r, stats[r][key][0], stats[r][key][1])
             for r in sorted(stats)
@@ -3357,7 +3301,6 @@ class VersionedTable:
             )
             hits = (
                 source.select(F.col(key).alias("_k"))
-                .distinct()
                 .join(
                     F.broadcast(rng),
                     (F.col("_k") >= F.col("_mn"))
@@ -3380,14 +3323,13 @@ class VersionedTable:
         No-op (commit-free) when nothing matches.  On CDF tables the
         commit carries one delete row per removed row."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
+        s = self._replay()
         match = F.coalesce(cond, F.lit(False))
-        touched = self._matched_segments(v, live, schema, dvs, match)
+        touched = self._matched_segments(s, s["live"], match)
         if not touched:
-            return v  # a DELETE of zero rows: no-op, commit-free
+            return s["version"]  # a DELETE of zero rows: no-op, commit-free
         return self._rewrite_slice(
-            "delete", v, schema, dvs, live, touched,
+            "delete", s, s["live"], touched,
             rewrite=lambda s: s.where(~match),
             changes=lambda s: _change_rows(s.where(match), "delete"),
             extra={"condition": str(condition)},
@@ -3443,18 +3385,18 @@ class VersionedTable:
         nothing matches.  On CDF tables the commit carries
         update_preimage/update_postimage rows."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
+        s = self._replay()
+        schema = StructType.fromJson(s["entry"]["schema"])
         assigns = self._resolve_assignments(set_exprs, schema)
         match = F.coalesce(cond, F.lit(False))
-        touched = self._matched_segments(v, live, schema, dvs, match)
+        touched = self._matched_segments(s, s["live"], match)
         if not touched:
-            return v  # an UPDATE of zero rows: no-op, commit-free
+            return s["version"]  # an UPDATE of zero rows: commit-free
         guarded = {
             c: F.when(match, e).otherwise(F.col(c)) for c, e in assigns.items()
         }
         return self._rewrite_slice(
-            "update", v, schema, dvs, live, touched,
+            "update", s, s["live"], touched,
             rewrite=lambda s: _post_images(s, guarded),
             changes=lambda s: _update_changes(s.where(match), assigns),
             extra={
@@ -3482,13 +3424,12 @@ class VersionedTable:
         update_where and update_where_mor share (and what the model
         checker's noop program asserts)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
-        matched = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
-        ).where(F.coalesce(cond, F.lit(False)))
+        s = self._replay()
+        matched = self._scan_segments(s, s["live"], keep_identity=True).where(
+            F.coalesce(cond, F.lit(False))
+        )
         return self._mask_rows(
-            "delete_mor", v, schema, live, matched,
+            "delete_mor", s, matched,
             changes=lambda rows: _change_rows(rows, "delete"),
             extra={"condition": str(condition)},
         )
@@ -3510,14 +3451,15 @@ class VersionedTable:
         the CHECK-constraint choke point like every write; CDF commits
         carry update_preimage/update_postimage rows from the same scan."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
-        assigns = self._resolve_assignments(set_exprs, schema)
-        matched = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
-        ).where(F.coalesce(cond, F.lit(False)))
+        s = self._replay()
+        assigns = self._resolve_assignments(
+            set_exprs, StructType.fromJson(s["entry"]["schema"])
+        )
+        matched = self._scan_segments(s, s["live"], keep_identity=True).where(
+            F.coalesce(cond, F.lit(False))
+        )
         return self._mask_rows(
-            "update_mor", v, schema, live, matched,
+            "update_mor", s, matched,
             changes=lambda rows: _update_changes(rows, assigns),
             extra={
                 "condition": str(condition),
@@ -3547,11 +3489,8 @@ class VersionedTable:
         another DV all conflict."""
         source = self._require_schema(source, "merge_upsert_mor")
         keys = list(keys)
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
-        matched = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
-        ).join(
+        s = self._replay()
+        matched = self._scan_segments(s, s["live"], keep_identity=True).join(
             F.broadcast(source.select(*keys).distinct()),
             on=keys,
             how="left_semi",
@@ -3560,7 +3499,7 @@ class VersionedTable:
         # source holds — exactly the matched rows; the source, aligned to
         # the table schema, is the appended image
         return self._mask_rows(
-            "merge_mor", v, schema, live, matched,
+            "merge_mor", s, matched,
             changes=lambda rows: upsert_change_feed(rows, source, keys),
             extra={"keys": keys},
             images=lambda _: source,
@@ -3577,7 +3516,8 @@ class VersionedTable:
         value-identical by construction.  Delta folds this into
         OPTIMIZE; here it is the explicit maintenance surface.  No-op
         (commit-free) when 0 or 1 DVs are active."""
-        v, _, dvs, entry = self._snapshot_state(None)
+        s = self._replay()
+        v, dvs, entry = s["version"], s["dvs"], s["entry"]
         if len(dvs) <= 1:
             return v  # nothing to fold
         self._check_present(v, dvs)
@@ -3620,8 +3560,10 @@ class VersionedTable:
         commit as a data CHANGE (rows it resurrects/removes are not an
         append) — the source raises unless skipChangeCommits, like
         merge/delete."""
-        v_now, live_now, dvs_now, entry_now = self._snapshot_state(None)
-        v_t, live_t, dvs_t, entry_t = self._snapshot_state(version)
+        now, then = self._replay(), self._replay(version)
+        v_now, live_now, dvs_now = now["version"], now["live"], now["dvs"]
+        v_t, live_t, dvs_t = then["version"], then["live"], then["dvs"]
+        entry_now, entry_t = now["entry"], then["entry"]
         add = sorted(set(live_t) - set(live_now))
         remove = sorted(set(live_now) - set(live_t))
         same_dvs = set(dvs_t) == set(dvs_now)
@@ -3632,23 +3574,17 @@ class VersionedTable:
         # the resurrected files must still exist — a vacuumed target is
         # unrestorable and must say so, never read as zero rows
         self._check_present(v_t, list(live_t) + list(dvs_t))
-        cons_then = self.constraints(v_t)
         unchecked = {
             n: e
-            for n, e in self.constraints(v_now).items()
-            if cons_then.get(n) != e
+            for n, e in now["constraints"].items()
+            if then["constraints"].get(n) != e
         }
         if unchecked:
             # constraints added (or changed) since the target: the
             # target's rows never passed them — validate the snapshot
             # the restore would serve (through its own DV set) and
             # refuse rather than resurrect violators
-            snap = self._scan_segments(
-                v_t,
-                list(live_t),
-                StructType.fromJson(entry_t["schema"]),
-                dvs=list(dvs_t),
-            )
+            snap = self._scan_segments(then, live_t)
             names = sorted(unchecked)
             row = snap.agg(
                 *[
@@ -3697,8 +3633,7 @@ class VersionedTable:
     def active_deletion_vectors(self, version: int | None = None) -> list[str]:
         """The DV files masking rows at ``version`` (empty after any
         full-replace rewrite materialized them) — the DESCRIBE surface."""
-        version, _, _ = self._snapshot(version)
-        return sorted(self._resolve_dvs(version))
+        return self._replay(version)["dvs"]
 
     def compact(self, target_partitions: int = 1) -> int:
         """Bin-pack the live segments into ``target_partitions`` files.
@@ -3706,8 +3641,9 @@ class VersionedTable:
         OPTIMIZE surface of Delta/Iceberg.  This is the WHOLE-set form;
         at scale use :meth:`compact_small`, which never rewrites
         already-big files."""
-        v, live, _ = self._snapshot(None)
-        df = self.read(v).coalesce(target_partitions)
+        s = self._replay()
+        v, live = s["version"], s["live"]
+        df = self._scan_segments(s, live).coalesce(target_partitions)
         add = [self._write_segment(df, v + 1)]
         return self._commit_rebased(
             v, "compact", add=add, remove=live, schema=df.schema,
@@ -3741,14 +3677,15 @@ class VersionedTable:
         untouched segments keep theirs active.  dataChange=false for
         streams (op ``compact``, skipped like the whole-set form).
         No-op (commit-free) when fewer than two segments qualify."""
-        v, live, dvs, entry = self._snapshot_state(None)
+        s = self._replay()
+        v, live = s["version"], s["live"]
         small = [
             rel for rel in live if self._segment_bytes(rel) < max_bytes
         ]
         if len(small) < 2:
             return v  # nothing to pack
-        schema = StructType.fromJson(entry["schema"])
-        merged = self._scan_segments(v, small, schema, dvs=dvs).coalesce(
+        schema = StructType.fromJson(s["entry"]["schema"])
+        merged = self._scan_segments(s, small).coalesce(
             target_partitions
         )
         add = [self._write_segment(merged, v + 1)]
@@ -3782,8 +3719,8 @@ class VersionedTable:
         DV-aware like :meth:`compact_small` (op ``compact``,
         dataChange=false — streams skip it); no-op when fewer than two
         segments qualify."""
-        v, live, dvs, entry = self._snapshot_state(None)
-        pvs = self._live_segment_pvs(v)
+        s = self._replay()
+        v, live, pvs = s["version"], s["live"], s["pvs"]
         targets: list[str] = []
         for rel in live:
             for key, pval in (pvs.get(rel) or {}).items():
@@ -3806,8 +3743,8 @@ class VersionedTable:
             common = {
                 k: vv for k, vv in common.items() if pv.get(k) == vv
             }
-        schema = StructType.fromJson(entry["schema"])
-        merged = self._scan_segments(v, targets, schema, dvs=dvs).coalesce(
+        schema = StructType.fromJson(s["entry"]["schema"])
+        merged = self._scan_segments(s, targets).coalesce(
             target_partitions
         )
         add = [self._write_segment(merged, v + 1)]
@@ -3840,8 +3777,9 @@ class VersionedTable:
         if len(cluster_by) != 2:
             raise ValueError("compact_clustered takes exactly two columns")
         c1, c2 = cluster_by
-        v, live, entry = self._snapshot(None)
-        df = self.read(v)
+        s = self._replay()
+        v, live = s["version"], s["live"]
+        df = self._scan_segments(s, live)
         # Quantization bounds from the commit log's own folded stats when
         # every live segment carries them — O(log) driver metadata, no
         # extra table scan; the agg below is only the stat-less fallback.
@@ -3906,133 +3844,19 @@ class VersionedTable:
             shutil.rmtree(tmp_abs, ignore_errors=True)
         return self._commit_rebased(
             v, "compact", add=add, remove=live,
-            schema=StructType.fromJson(entry["schema"]),
+            schema=StructType.fromJson(s["entry"]["schema"]),
             extra={"clustered_by": list(cluster_by)},
             read_files=live, ignore_adds=True,
         )
 
     # ------------------------------------------------------- stats pruning
-    def _live_segment_stats(self, version: int) -> dict[str, dict]:
-        """Stats for every live segment at ``version``, gathered from the
-        commits that ADDED them (stats are immutable with the segment).
-        Checkpoint-accelerated like every other fold: the checkpoint
-        carries the full live-set stats map (Delta's checkpoint add-file
-        stats), so resolution replays only the tail — O(tail) driver
-        metadata per pruned read, and O(tail) per checkpoint write.  A
-        pre-stats-rev checkpoint forces the genesis walk (never wrong,
-        only slower)."""
-        return self._live_segment_meta(version)[0]
-
-    def _live_segment_pvs(self, version: int) -> dict[str, dict]:
-        """Partition tuples for every live segment at ``version`` (see
-        :meth:`_live_segment_meta` — one shared fold with the stats)."""
-        return self._live_segment_meta(version)[1]
-
-    def _live_segment_meta(
-        self, version: int
-    ) -> tuple[dict[str, dict], dict[str, dict]]:
-        """(stats, partition tuples) for every live segment at
-        ``version`` in ONE checkpoint + tail walk — both maps are
-        immutable with their segments and fold identically, and every
-        bounded read needs both (pv pruning runs before the stats
-        fold), so reading the same commit JSON twice would double the
-        planner's metadata I/O for nothing.  Checkpoint-accelerated via
-        the ``stats``/``pvs`` keys; a pre-rev checkpoint lacking either
-        key forces the genesis walk for that map (never wrong, only
-        slower)."""
-        live = self._resolve_live(version)
-        stats_out: dict[str, dict] = {}
-        pvs_out: dict[str, dict] = {}
-        stats_start = 0
-        pvs_start = 0
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None:
-            if "stats" in ckpt:
-                stats_out = {
-                    rel: st
-                    for rel, st in ckpt["stats"].items()
-                    if rel in live
-                }
-                stats_start = ckpt["version"] + 1
-            if "pvs" in ckpt:
-                pvs_out = {
-                    rel: pv
-                    for rel, pv in ckpt["pvs"].items()
-                    if rel in live
-                }
-                pvs_start = ckpt["version"] + 1
-        # versions are contiguous by construction (every commit claims
-        # predecessor+1), so the tail is a range — iterating the full
-        # _versions() listing here cost O(history) python work per fold
-        # at deep logs (measured, round 11)
-        for v in range(min(stats_start, pvs_start), version + 1):
-            entry = self._read_commit(v)
-            if v >= stats_start:
-                for rel in entry["add"]:
-                    if rel in live:
-                        stats_out[rel] = entry.get("stats", {}).get(
-                            rel, {}
-                        )
-            if v >= pvs_start:
-                for rel, pv in (entry.get("pv") or {}).items():
-                    if rel in live and pv:
-                        pvs_out[rel] = pv
-        return stats_out, pvs_out
-
-    def _live_segment_commits(self, version: int) -> dict[str, int]:
-        """rel-path → the commit that PHYSICALLY WROTE each live segment
-        at ``version`` (first add from genesis — a RESTORE's
-        re-reference never wins; the audit cares which commit produced
-        the bytes).  Checkpoint-accelerated like the stats fold: the
-        checkpoint carries the live set's map, so resolution replays
-        only the tail.  The ONE commit shape whose ``add`` can
-        re-reference a pre-checkpoint segment is a restore (it records
-        ``restored_from``); its re-added rels fall back to a genesis
-        walk scoped to just those rels — every other op writes fresh
-        uuid-named segments, so a tail-first add IS the physical write.
-        Pre-rev checkpoints lack the key and force the genesis walk
-        (never wrong, only slower)."""
-        live = self._resolve_live(version)
-        out: dict[str, int] = {}
-        start = 0
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None and "seg_commits" in ckpt:
-            out = {
-                rel: v
-                for rel, v in ckpt["seg_commits"].items()
-                if rel in live
-            }
-            start = ckpt["version"] + 1
-        pending = set(live) - set(out)
-        refold: set[str] = set()
-        for v in range(start, version + 1):
-            if not pending:
-                break
-            entry = self._read_commit(v)
-            resurrection = "restored_from" in entry
-            for rel in entry["add"]:
-                if rel in pending:
-                    pending.discard(rel)
-                    if resurrection:
-                        refold.add(rel)
-                    else:
-                        out[rel] = v
-        for v in self._versions():
-            if not refold or v > version:
-                break
-            entry = self._read_commit(v)
-            for rel in entry["add"]:
-                if rel in refold:
-                    out[rel] = v
-                    refold.discard(rel)
-        return out
-
-    def _stat_names(self, version: int, col: str) -> list[str]:
-        """The physical names ``col``'s values may live under in a
-        snapshot's segments: the logical name plus its retired rename
-        chain (segments persist write-time names; stats and bloom
-        sidecars are keyed by them)."""
-        chains = self._read_commit(version).get("renames") or {}
+    @staticmethod
+    def _stat_names(s: dict, col: str) -> list[str]:
+        """The physical names ``col``'s values may live under in snapshot
+        ``s``'s segments: the logical name plus its retired rename chain
+        (segments persist write-time names; stats and bloom sidecars are
+        keyed by them)."""
+        chains = s["entry"].get("renames") or {}
         return [col, *chains.get(col, [])]
 
     def column_range(self, col: str, version: int | None = None):
@@ -4040,12 +3864,11 @@ class VersionedTable:
         per-segment stats alone — O(log) driver metadata, no Spark job.
         None if any live segment lacks stats for the column (a fold over
         partial stats would silently understate the range)."""
-        version, _, _ = self._snapshot(version)
-        names = self._stat_names(version, col)
-        stats = self._live_segment_stats(version)
+        snap = self._replay(version)
+        names = self._stat_names(snap, col)
         ranges = [
-            next((s[n] for n in names if n in s), None)
-            for s in stats.values()
+            next((st[n] for n in names if n in st), None)
+            for st in snap["stats"].values()
         ]
         if not ranges or any(r is None for r in ranges):
             return None
@@ -4110,9 +3933,9 @@ class VersionedTable:
         carries a large row fraction shuffles that fraction into ONE
         reducer partition — the case where AQE's skew split is
         suppressed by downstream hash-distribution requirements and
-        manual salting is the only mitigation (measured 1.24x,
-        SCALE_STRESSORS skew_join).  Columns the written schema lacks
-        are skipped; an all-null column records no entry (same
+        manual salting is the only mitigation (measured 1.24x, round-9
+        skew-join stressor, BASELINE.md).  Columns the written schema
+        lacks are skipped; an all-null column records no entry (same
         conservative gap semantics as the HLL sketches)."""
         df = self.spark.read.parquet(
             *(os.path.join(self.root, r) for r in add)
@@ -4175,13 +3998,12 @@ class VersionedTable:
         eras, evolution gaps): guessing 'not skewed' from partial stats
         could flip the planner the expensive way (same conservative
         policy as table_ndv)."""
-        version, live, _ = self._snapshot(version)
-        if not live:
+        s = self._replay(version)
+        if not s["live"]:
             return None
-        stats = self._live_segment_stats(version)
         by_value: dict[str, int] = {}
-        for rel in live:
-            m = (stats.get(rel) or {}).get("__mcv__")
+        for rel in s["live"]:
+            m = (s["stats"].get(rel) or {}).get("__mcv__")
             if not isinstance(m, dict):
                 return None
             if col in m:
@@ -4212,8 +4034,8 @@ class VersionedTable:
            vtable's ``table_stats()['n_bytes']`` — at or under
            ``spark.sql.autoBroadcastJoinThreshold``): plain join with
            the broadcast hint.  Broadcast beats salting whenever it is
-           available (measured: SCALE_STRESSORS skew_join — 'do not
-           salt a broadcastable join'), and a broadcast join has no
+           available (measured: round-9 skew-join stressor, BASELINE.md
+           — 'do not salt a broadcastable join'), and a broadcast join has no
            reducer hot partition for skew to hurt.
         2. Else, the fact key's log MCV says one value carries at least
            ``skew_frac`` of the table's rows: salted join
@@ -4274,27 +4096,27 @@ class VersionedTable:
         way.  Rows masked by deletion vectors still count (sketches are
         per written segment) — NDV is a planning upper estimate, not an
         exact count."""
-        version, live, _ = self._snapshot(version)
-        if not live:
+        s = self._replay(version)
+        if not s["live"]:
             return 0
-        import base64 as _b64
-
-        stats = self._live_segment_stats(version)
-        sketches: list[bytes] = []
-        for rel in live:
-            m = (stats.get(rel) or {}).get("__hll__")
+        sketches: list[str] = []
+        for rel in s["live"]:
+            m = (s["stats"].get(rel) or {}).get("__hll__")
             if not isinstance(m, dict) or col not in m:
                 return None
             if m[col] is not None:
-                sketches.append(_b64.b64decode(m[col]))
+                sketches.append(m[col])
         if not sketches:
             return 0  # every live segment was all-null in col
-        df = self.spark.createDataFrame(
-            [(s,) for s in sketches], "s binary"
+        df = _literal_frame(
+            self.spark,
+            StructType([StructField("s", StringType())]),
+            [(sk,) for sk in sketches],
         )
         return int(
             df.agg(
-                F.hll_sketch_estimate(F.hll_union_agg("s")).alias("e")
+                F.hll_sketch_estimate(F.hll_union_agg(F.unbase64("s")))
+                .alias("e")
             ).first()["e"]
         )
 
@@ -4329,7 +4151,8 @@ class VersionedTable:
         # SAME head — a concurrent overwrite between them could otherwise
         # pull an unbounded distinct set driver-side after a stale small
         # estimate approved the collect
-        version, _, _ = self._snapshot(version)
+        if version is None:
+            version = self.latest_version()
         ndv = self.table_ndv(col, version)
         if ndv is not None and ndv <= max_inset:
             vals = [
@@ -4360,8 +4183,14 @@ class VersionedTable:
         survives.  A segment with neither a pv field nor stats for
         ``col`` is conservatively scanned — pruning may only ever skip
         provably-disjoint files."""
-        names = self._stat_names(version, col)
-        stats, pvs = self._live_segment_meta(version)
+        return self._prune_range(self._replay(version), col, lo, hi)
+
+    def _prune_range(
+        self, s: dict, col: str, lo, hi
+    ) -> tuple[list[str], list[str]]:
+        """:meth:`pruned_segments` over snapshot ``s``."""
+        names = self._stat_names(s, col)
+        stats, pvs = s["stats"], s["pvs"]
         scanned, skipped = [], []
         for rel in sorted(stats):
             if partition_skips(
@@ -4387,10 +4216,8 @@ class VersionedTable:
         with manifests; at 100 TB this is what turns a full-table scan
         into a few files).  The caller must still apply its own residual
         predicate: pruning skips whole files, it does not filter rows."""
-        version, _, dvs, entry = self._snapshot_state(version)
-        scanned, _ = self.pruned_segments(version, col, lo, hi)
-        schema = StructType.fromJson(entry["schema"])
-        return self._scan_segments(version, scanned, schema, dvs=dvs)
+        s = self._replay(version)
+        return self._scan_segments(s, self._prune_range(s, col, lo, hi)[0])
 
     # ------------------------------------------------------------ change feed
     def change_feed(
@@ -4551,7 +4378,7 @@ class VersionedTable:
                 self._read_commit(versions[-1])["schema"]
             )
             return (
-                _empty_frame(self.spark, head_schema)
+                _literal_frame(self.spark, head_schema)
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_version", F.lit(0).cast("bigint"))
                 .limit(0)
@@ -4666,11 +4493,11 @@ class VersionedTable:
 
         import pyarrow.parquet as pq
 
-        _, live, dvs, _ = self._snapshot_state(version)
+        s = self._replay(version)
         n_rows = 0
         n_bytes = 0
         n_files = 0
-        for rel in live:
+        for rel in s["live"]:
             for p in _glob.glob(
                 os.path.join(self.root, rel, "part-*.parquet")
             ):
@@ -4684,7 +4511,7 @@ class VersionedTable:
             "n_rows": n_rows,
             "n_bytes": n_bytes,
             "n_files": n_files,
-            "has_dvs": bool(dvs),
+            "has_dvs": bool(s["dvs"]),
         }
 
     def read_source(
@@ -4735,10 +4562,10 @@ class VersionedTable:
         metadata (os.stat over the live part files), no Spark job."""
         import glob as _glob
 
-        v, live, dvs, entry = self._snapshot_state(None)
+        s = self._replay()
         n_files = 0
         n_bytes = 0
-        for rel in live:
+        for rel in s["live"]:
             # one directory listing per segment serves both stats
             for p in _glob.glob(
                 os.path.join(self.root, rel, "part-*.parquet")
@@ -4751,15 +4578,15 @@ class VersionedTable:
         props = self._read_commit(0).get("properties", {})
         return {
             "location": self.root,
-            "version": v,
-            "operation": entry["op"],
-            "numLiveSegments": len(live),
+            "version": s["version"],
+            "operation": s["entry"]["op"],
+            "numLiveSegments": len(s["live"]),
             "numLiveFiles": n_files,
             "sizeInBytes": n_bytes,
-            "numDeletionVectors": len(dvs),
-            "schema": entry["schema"],
+            "numDeletionVectors": len(s["dvs"]),
+            "schema": s["entry"]["schema"],
             "properties": props,
-            "constraints": self.constraints(v),
+            "constraints": s["constraints"],
         }
 
     # ---------------------------------------------------------------- vacuum
@@ -4790,12 +4617,12 @@ class VersionedTable:
         retained = versions[-retain_last:]
         keep: set[str] = set()
         for v in retained:
-            keep |= self._resolve_live(v)
+            s = self._replay(v)
             # DVs active at a retained version stay readable with it
-            keep |= self._resolve_dvs(v)
+            keep |= set(s["live"]) | set(s["dvs"])
             # change-data segments live with their commit: the feed of a
             # retained version must stay streamable
-            cdf = self._read_commit(v).get("cdf")
+            cdf = s["entry"].get("cdf")
             if cdf:
                 keep.add(cdf)
         # everything ANY commit ever referenced — the complement (true
@@ -4902,14 +4729,14 @@ class VersionedTable:
         for n in ckpt_names:
             try:
                 with open(os.path.join(self._log_dir, n)) as fh:
-                    payload = json.load(fh)
-            except (OSError, ValueError):
-                # an unreadable checkpoint might reference anything —
-                # reclaiming nothing is the only safe answer this sweep
+                    refs = json.load(fh)["sidecars"]
+            except (OSError, ValueError, KeyError):
+                # an unreadable or incomplete checkpoint might reference
+                # anything — reclaiming nothing is the only safe answer
+                # this sweep
                 ckpt_ok = False
                 break
-            for ref in payload.get("sidecars") or []:
-                referenced.add(ref["name"])
+            referenced.update(ref["name"] for ref in refs)
         if ckpt_ok:
             for name in sorted(os.listdir(self._log_dir)):
                 if not name.endswith(".sidecar.json"):

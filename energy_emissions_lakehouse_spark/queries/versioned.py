@@ -48,7 +48,7 @@ from energy_emissions_lakehouse_spark.registry import register
 from energy_emissions_lakehouse_spark.tables import t
 
 #: Bump to invalidate staged histories when the build recipe changes.
-_HISTORY_REV = 17
+_HISTORY_REV = 18
 
 _ORDER_COLS = [
     "o_orderkey",
@@ -2582,10 +2582,10 @@ def vtable_partition_pruned_scan(spark, sf_dir) -> DataFrame:
     import datetime
 
     vt = staged_vtable_spec(spark, sf_dir)
-    v = vt.latest_version()
+    snap = vt._replay()
     lo = datetime.datetime(1995, 3, 1)
     hi = datetime.datetime(1995, 3, 31, 23, 59, 59, 999999)
-    scanned_m, skipped_m = vt.pruned_segments(v, "o_orderdate", lo, hi)
+    scanned_m, skipped_m = vt._prune_range(snap, "o_orderdate", lo, hi)
     march = vt.read_pruned("o_orderdate", lo, hi).filter(
         (F.col("o_orderdate") >= F.lit("1995-03-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1995-04-01").cast("timestamp"))
@@ -2609,8 +2609,8 @@ def vtable_partition_pruned_scan(spark, sf_dir) -> DataFrame:
         .agg(F.min("o_custkey"))
         .collect()[0][0]
     )
-    scanned_b, skipped_b = vt.pruned_segments(v, "o_custkey", k, k)
-    pvs = vt._live_segment_pvs(v)
+    scanned_b, skipped_b = vt._prune_range(snap, "o_custkey", k, k)
+    pvs = snap["pvs"]
     bkey = "bucket(o_custkey,8)"
     planned_b = sum(1 for r in scanned_b if bkey in pvs.get(r, {}))
     skipped_bn = sum(1 for r in skipped_b if bkey in pvs.get(r, {}))
@@ -3192,7 +3192,7 @@ def vtable_ndv_inset_pushdown(spark, sf_dir) -> DataFrame:
     "rewrite (hot-key fraction >= skew_frac and the dim not provably "
     "broadcastable — the case where AQE's skew split is suppressed by "
     "downstream hash-distribution requirements; measured 1.24x win, "
-    "SCALE_STRESSORS skew_join) and the plain shuffle join.  Unknown "
+    "round-9 skew-join stressor) and the plain shuffle join.  Unknown "
     "stats choose conservatively (no salt, no broadcast).  Both plan "
     "directions + fallbacks are asserted in tests/test_round12_ops.py; "
     "used_salt pins the chosen strategy inside the value oracle",

@@ -66,6 +66,7 @@ from energy_emissions_lakehouse_spark.operators.vtable import (
     LOG_DIR,
     ConcurrentCommitError,
     VersionedTable,
+    _literal_frame,
     read_commit,
 )
 
@@ -263,9 +264,8 @@ class VtableBatchReader(DataSourceReader):
         # every method the planner touches)
         vt = VersionedTable(None, root)
         v_opt = options.get("versionAsOf")
-        version, live, dvs, entry = vt._snapshot_state(
-            int(v_opt) if v_opt is not None else None
-        )
+        snap = vt._replay(int(v_opt) if v_opt is not None else None)
+        entry = snap["entry"]
         #: rename chains of the served snapshot (logical -> retired
         #: physical names): per-file projection falls back through them
         #: (a file stores exactly one of the names), and stats/bloom
@@ -276,12 +276,20 @@ class VtableBatchReader(DataSourceReader):
         #: a metadata-only type widening is visible before any wide
         #: segment exists
         self.widen = entry.get("widen") or {}
-        self.version = version
-        self.live = live
-        self.dvs = dvs
+        self.version = snap["version"]
+        self.live = snap["live"]
+        self.dvs = snap["dvs"]
+        #: per-segment stats and partition tuples of the same snapshot,
+        #: for partitions() — driver-side only (see __getstate__)
+        self._meta = (snap["stats"], snap["pvs"])
         #: pruning conjuncts gathered by pushFilters:
         #: [(col, lo, hi, is_point, values)] — see pushFilters
         self._bounds: list[tuple] = []
+
+    def __getstate__(self):
+        # an executor's read() needs only its partition: the O(live)
+        # planning metadata (HLL sketches included) stays on the driver
+        return {k: v for k, v in self.__dict__.items() if k != "_meta"}
 
     def pushFilters(self, filters):
         """Gather the conjuncts the vtable can prune FILES with; return
@@ -320,7 +328,7 @@ class VtableBatchReader(DataSourceReader):
             )
 
             vt = VersionedTable(None, self.root)
-            stats, pvs = vt._live_segment_meta(self.version)
+            stats, pvs = self._meta
             bloom_cols, _, _ = vt.bloom_props
             survivors = []
             for rel in self.live:
@@ -606,7 +614,7 @@ class VtableBatchWriter(DataSourceArrowWriter):
                 # a create must leave a readable v0 even for an empty
                 # frame: materialize an empty segment so the schema has
                 # a footer to serve
-                spark.createDataFrame([], self.schema).write.mode(
+                _literal_frame(spark, self.schema).write.mode(
                     "error"
                 ).parquet(seg)
                 add = [self.rel]
@@ -635,17 +643,18 @@ class VtableBatchWriter(DataSourceArrowWriter):
         if add:
             vt._enforce_constraints(add, enforced, "write")
         for _ in range(64):
-            v = vt.latest_version()
+            snap = vt._replay()
+            v = snap["version"]
             if not self.overwrite:
-                _require_schema_like(vt._read_commit(v), self.schema)
+                _require_schema_like(snap["entry"], self.schema)
             # a lost race may mean a concurrently ADDED constraint —
             # the batch must satisfy the map at the head it lands on
             # (same post-race re-validation rule as idempotent_append)
-            current = vt.constraints(v)
+            current = snap["constraints"]
             if add and current != enforced:
                 vt._enforce_constraints(add, current, "write")
                 enforced = current
-            remove = sorted(vt._resolve_live(v)) if self.overwrite else []
+            remove = snap["live"] if self.overwrite else []
             try:
                 vt._commit(
                     v + 1,

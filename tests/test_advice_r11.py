@@ -10,8 +10,8 @@
    live set (remove=[], no dv_add) must raise the restart error, not
    serve its segments aligned to the stale open schema.
 3. low — vtable._commit checkpoint: the stats and pvs maps come from
-   ONE _live_segment_meta fold (the commit-log walk must not run twice
-   per checkpoint).
+   ONE log replay (the commit-log walk must not run twice per
+   checkpoint).
 4. low — temporal partition pvs on TIMESTAMP sources: the session
    timezone is pinned into the spec at set_partition_spec time and a
    partitioned write under a different session zone is refused loudly
@@ -115,19 +115,28 @@ def test_midstream_plain_append_still_serves(spark, root):
 
 
 def test_checkpoint_single_meta_fold(spark, root, monkeypatch):
-    """The checkpoint writer must run _live_segment_meta exactly once
-    per checkpoint (stats+pvs from one walk)."""
+    """The checkpoint writer must run the log replay exactly once per
+    checkpoint (every fold from one walk)."""
     import energy_emissions_lakehouse_spark.operators.vtable as vmod
 
     vt = VersionedTable.create(spark, root, _keyed(spark, 0, 5))
-    calls = {"n": 0}
-    orig = VersionedTable._live_segment_meta
+    calls = {"n": 0, "in_checkpoint": False}
+    orig = VersionedTable._replay
+    orig_ckpt = VersionedTable._write_checkpoint
 
-    def counting(self, version):
-        calls["n"] += 1
-        return orig(self, version)
+    def counting(self, *args, **kwargs):
+        calls["n"] += calls["in_checkpoint"]
+        return orig(self, *args, **kwargs)
 
-    monkeypatch.setattr(VersionedTable, "_live_segment_meta", counting)
+    def checkpoint(self, version):
+        calls["in_checkpoint"] = True
+        try:
+            return orig_ckpt(self, version)
+        finally:
+            calls["in_checkpoint"] = False
+
+    monkeypatch.setattr(VersionedTable, "_replay", counting)
+    monkeypatch.setattr(VersionedTable, "_write_checkpoint", checkpoint)
     # drive to the next checkpoint boundary
     next_ckpt = (
         (vt.latest_version() // vmod.CHECKPOINT_EVERY) + 1

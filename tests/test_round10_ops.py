@@ -411,7 +411,7 @@ def test_partition_prune_month_and_spec_evolution(spark, root):
     assert got.count() == want
     # bucket probe: among era-B segments exactly one is planned
     s2, k2 = vt.pruned_segments(v, "g", 3, 3)
-    pvs = vt._live_segment_pvs(v)
+    pvs = vt._replay(v)["pvs"]
     bkey = "bucket(g,4)"
     assert sum(1 for r in s2 if bkey in pvs.get(r, {})) == 1
     assert sum(1 for r in k2 if bkey in pvs.get(r, {})) == 3
@@ -429,7 +429,7 @@ def test_partition_pv_survives_checkpoint(spark, root):
         vt.append(_dated(spark, 2 + i * 3, 5 + i * 3))
     v = vt.latest_version()
     assert v >= 9
-    pvs = vt._live_segment_pvs(v)
+    pvs = vt._replay(v)["pvs"]
     n_bucketed = sum(1 for pv in pvs.values() if "bucket(g,2)" in pv)
     assert n_bucketed >= 9  # every partitioned append contributed
     s, k = vt.pruned_segments(v, "g", 1, 1)
@@ -465,7 +465,7 @@ def test_null_partition_value_roundtrips_and_never_prunes(spark, root):
     assert got.filter(F.col("g").isNull()).count() == 3
     # the null-partition segment is never skipped
     s, k = vt.pruned_segments(vt.latest_version(), "g", 1, 1)
-    pvs = vt._live_segment_pvs(vt.latest_version())
+    pvs = vt._replay(vt.latest_version())["pvs"]
     null_segs = [r for r, pv in pvs.items() if pv.get("identity(g)") is None]
     assert null_segs and all(r in s for r in null_segs)
 
@@ -502,7 +502,7 @@ def test_datasource_prunes_on_partition_values(spark, root):
     reader = VtableBatchReader(root, vt.read().schema, {"path": root})
     reader.pushFilters([EqualTo(("g",), 2)])
     parts = reader.partitions()
-    pvs = vt._live_segment_pvs(vt.latest_version())
+    pvs = vt._replay(vt.latest_version())["pvs"]
     planned_dirs = {p.path.split("/")[-2] for p in parts}
     bucketed = [
         r.split("/")[-1] for r, pv in pvs.items() if "bucket(g,4)" in pv
@@ -721,7 +721,7 @@ def test_compact_partition_packs_only_matching_segments(spark, root):
     n_before, sum_before = before.count(), before.agg(
         F.sum("k")
     ).collect()[0][0]
-    pvs_before = vt._live_segment_pvs(vt.latest_version())
+    pvs_before = vt._replay(vt.latest_version())["pvs"]
     march_before = [
         r for r, pv in pvs_before.items() if pv.get("month(ts)") == "1995-03"
     ]
@@ -734,7 +734,7 @@ def test_compact_partition_packs_only_matching_segments(spark, root):
     assert entry["scope"] == "partition"
     assert entry["packed"] == 2 and len(entry["add"]) == 1
     # the packed segment keeps the partition tuple -> pruning survives
-    pvs = vt._live_segment_pvs(v)
+    pvs = vt._replay(v)["pvs"]
     assert pvs[entry["add"][0]] == {"month(ts)": "1995-03"}
     march_after = [
         r for r, pv in pvs.items() if pv.get("month(ts)") == "1995-03"
@@ -748,7 +748,7 @@ def test_compact_partition_packs_only_matching_segments(spark, root):
         r for r, pv in pvs_before.items()
         if pv.get("month(ts)") not in (None, "1995-03")
     ]
-    live_now = set(vt._resolve_live(v))
+    live_now = set(vt._replay(v)["live"])
     assert all(r in live_now for r in other)
     # no-op when fewer than two segments match
     assert vt.compact_partition("ts", datetime.date(1995, 3, 15)) == v
@@ -760,12 +760,12 @@ def test_compact_partition_never_touches_prespec_segments(spark, root):
     vt.append(_dated(spark, 20, 30))
     import datetime
 
-    v0_live = set(vt._resolve_live(0))
+    v0_live = set(vt._replay(0)["live"])
     v = vt.compact_partition("ts", datetime.date(1995, 3, 15))
     # only one partitioned March segment exists -> no-op; the pre-spec
     # segment (which HOLDS March rows) must never qualify
     assert v == vt.latest_version()
-    assert v0_live <= set(vt._resolve_live(v))
+    assert v0_live <= set(vt._replay(v)["live"])
 
 
 # ------------------------------------------------- feature interplay
@@ -813,7 +813,7 @@ def test_widen_then_partition_spec_interplay(spark, root):
     vt.append(_nd(30, 50))                   # narrow batch: upcast write
     v = vt.latest_version()
     s, k = vt.pruned_segments(v, "g", 2, 2)
-    pvs = vt._live_segment_pvs(v)
+    pvs = vt._replay(v)["pvs"]
     bkey = "bucket(g,4)"
     # two partitioned appends -> exactly two segments hold bucket(2)
     assert sum(1 for r in s if bkey in pvs.get(r, {})) == 2

@@ -448,7 +448,7 @@ def test_snapshot_resolution_reads_bounded_tail(spark, root, monkeypatch):
     import energy_emissions_lakehouse_spark.operators.vtable as vmod
 
     vt = VersionedTable.create(spark, root, _rows(spark, 0, 10))
-    seed = sorted(vt._resolve_live(0))[0]
+    seed = vt._replay(0)["live"][0]
     for v in range(1, 4 * vmod.CHECKPOINT_EVERY + 3):
         rel = os.path.join(
             "data", f"{v:020d}-{os.urandom(4).hex()}"
@@ -469,7 +469,7 @@ def test_snapshot_resolution_reads_bounded_tail(spark, root, monkeypatch):
         return orig(self, version)
 
     monkeypatch.setattr(VersionedTable, "_read_commit", counting)
-    fresh._snapshot(None)
+    fresh._replay()
     assert calls["n"] <= vmod.CHECKPOINT_EVERY + 3, (
         f"head resolution read {calls['n']} commits at depth "
         f"{vt.latest_version()} — the checkpointed fold is unbounded"
@@ -498,10 +498,11 @@ def test_incremental_checkpoint_equals_genesis_state(spark, root):
     # round 12: the on-disk form is main + sidecars; hydrate to the
     # legacy view shape the assertions below pin
     ckpt = vt._hydrate_checkpoint(ckpt)
-    live_g, dvs_g = vt._resolve_state(head, use_checkpoint=False)
+    genesis = vt._replay(head, use_checkpoint=False)
+    live_g, dvs_g = genesis["live"], genesis["dvs"]
     assert sorted(ckpt["live"]) == sorted(live_g)
     assert sorted(ckpt["dvs"]) == sorted(dvs_g)
-    assert ckpt["txns"] == vt._resolve_txns(head, use_checkpoint=False)
+    assert ckpt["txns"] == vt._replay(head, use_checkpoint=False)["txns"]
 
 
 # ------------------------------------------- byte-based stream rate cap
@@ -630,5 +631,5 @@ def test_ndv_and_bytes_survive_checkpoint_boundary(spark, root):
     )
     fresh = VersionedTable(spark, root)
     assert fresh.table_ndv("g") == 13
-    stats = fresh._live_segment_stats(head)
+    stats = fresh._replay(head)["stats"]
     assert all("__bytes__" in st for st in stats.values())

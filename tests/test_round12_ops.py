@@ -1,11 +1,12 @@
 """Round-12 operator pins.
 
-Sidecar checkpoints (verdict item 2): checkpoint-commit cost must be
-O(tail + dirty sidecars), not O(live) — the main checkpoint file carries
-only the small folds plus references to immutable per-SIDECAR_MAX-segment
-sidecar files, and consecutive checkpoints REUSE every sidecar the tail
-didn't touch.  Hydration must reproduce exactly the legacy inline views
-every consumer fold reads.
+Sidecar checkpoints: checkpoint-commit cost must be O(tail + dirty
+sidecars), not O(live) — the main checkpoint file carries only the small
+folds plus references to immutable per-SIDECAR_MAX-segment sidecar files,
+and consecutive checkpoints REUSE every sidecar whose entries are
+unchanged.  A hydrated checkpoint must equal the genesis replay at its
+version; a checkpoint that is not a complete sidecar-form state is
+skipped, never misread.
 """
 
 from __future__ import annotations
@@ -68,16 +69,17 @@ def test_checkpoint_is_sidecar_form_and_hydrates_exact(spark, root):
     assert _sidecar_files(root), "sidecar files must exist on disk"
     # a FRESH handle (disk hydration path) folds exactly the genesis walk
     fresh = VersionedTable(spark, root)
-    live_g, dvs_g = fresh._resolve_state(head, use_checkpoint=False)
+    genesis = fresh._replay(head, use_checkpoint=False)
+    live_g, dvs_g = genesis["live"], genesis["dvs"]
     ckpt = fresh._latest_checkpoint(head)
     assert sorted(ckpt["live"]) == sorted(live_g)
     assert sorted(ckpt["dvs"]) == sorted(dvs_g)
     assert set(ckpt["stats"]) == set(live_g)
     assert set(ckpt["seg_commits"]) == set(live_g)
     # and the consumer folds serve identical answers via the checkpoint
-    assert fresh._live_segment_stats(head) == {
+    assert fresh._replay(head)["stats"] == {
         rel: fresh._read_commit(v).get("stats", {}).get(rel, {})
-        for rel, v in fresh._live_segment_commits(head).items()
+        for rel, v in fresh._replay(head)["seg_commits"].items()
     }
 
 
@@ -103,7 +105,7 @@ def test_consecutive_checkpoints_reuse_clean_sidecars(
     head = 2 * CHECKPOINT_EVERY
     ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
     assert sorted(ckpt["live"]) == sorted(
-        vt._resolve_live(head, use_checkpoint=False)
+        set(vt._replay(head, use_checkpoint=False)["live"])
     )
 
 
@@ -123,7 +125,7 @@ def test_full_rewrite_replaces_every_sidecar(spark, root, monkeypatch):
     assert set(refs2).isdisjoint(set(refs1))
     # and hydration must stay exact
     ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
-    live_g = vt._resolve_live(head, use_checkpoint=False)
+    live_g = set(vt._replay(head, use_checkpoint=False)["live"])
     assert sorted(ckpt["live"]) == sorted(live_g)
 
 
@@ -144,7 +146,7 @@ def test_partial_remove_reuses_untouched_sidecars(
     assert set(refs1[:-1]) <= set(refs2), "MOR delete must not dirty data sidecars"
     ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
     assert sorted(ckpt["dvs"]) == sorted(
-        vt._resolve_dvs(head, use_checkpoint=False)
+        set(vt._replay(head, use_checkpoint=False)["dvs"])
     )
 
 
@@ -161,11 +163,11 @@ def test_restore_in_tail_falls_back_to_full_fold(spark, root):
     assert head >= CHECKPOINT_EVERY
     fresh = VersionedTable(spark, root)
     ckpt = fresh._latest_checkpoint(head)
-    live_g = fresh._resolve_live(ckpt["version"], use_checkpoint=False)
+    live_g = set(fresh._replay(ckpt["version"], use_checkpoint=False)["live"])
     assert sorted(ckpt["live"]) == sorted(live_g)
     # physical-writer provenance survives the resurrection (restore's
     # re-add must NOT claim the restore commit as the writer)
-    commits = fresh._live_segment_commits(head)
+    commits = fresh._replay(head)["seg_commits"]
     assert all(
         rel in fresh._read_commit(v)["add"] for rel, v in commits.items()
     )
@@ -188,8 +190,8 @@ def test_missing_sidecar_falls_back_to_older_state(spark, root):
     fresh = VersionedTable(spark, root)
     # the broken checkpoint is dropped; folds fall back (genesis here)
     # and serve the exact state
-    assert sorted(fresh._resolve_live(head)) == sorted(
-        fresh._resolve_live(head, use_checkpoint=False)
+    assert fresh._replay(head)["live"] == sorted(
+        set(fresh._replay(head, use_checkpoint=False)["live"])
     )
     assert fresh.read().count() == 30 + 5 * (CHECKPOINT_EVERY + 1)
 
@@ -213,6 +215,92 @@ def test_deep_drip_rewrites_bounded_sidecars_per_checkpoint(
     # 8 adds per checkpoint window, SIDECAR_MAX=4 -> at most 3 new files
     # (partial last + two full), never O(live)
     assert new_per_ckpt and all(n <= 3 for n in new_per_ckpt), new_per_ckpt
+
+
+
+def test_one_replay_reads_each_tail_commit_once(spark, root, monkeypatch):
+    """One log replay serves a whole operation: on a head 7 commits past
+    a checkpoint, a checkpoint write and a pruned read each read every
+    tail commit exactly once, and no other commit."""
+    from collections import Counter
+
+    vt = VersionedTable.create(spark, root, _rows(spark, 0, 10))
+    for i in range(1, CHECKPOINT_EVERY + 8):
+        vt.append(_rows(spark, 100 * i, 100 * i + 5))
+    head = vt.latest_version()
+    assert head == CHECKPOINT_EVERY + 7
+    tail = Counter(range(CHECKPOINT_EVERY + 1, head + 1))
+    reads: Counter = Counter()
+    real = vmod.read_commit
+
+    def counting(root_, version):
+        reads[version] += 1
+        return real(root_, version)
+
+    monkeypatch.setattr(vmod, "read_commit", counting)
+    fresh = VersionedTable(spark, root)
+    fresh.read_pruned("k", 100, 104)
+    assert reads == tail, f"read_pruned read {dict(reads)}"
+    reads.clear()
+    fresh._write_checkpoint(head)
+    assert reads == tail, f"_write_checkpoint read {dict(reads)}"
+
+
+
+def test_shared_handle_checkpoint_cache_under_thread_stress(spark, root):
+    """Threads sharing ONE handle replay, write and re-read checkpoints
+    concurrently: every replay equals the genesis fold at its version
+    and the handle's checkpoint cache never exceeds its bound."""
+    import sys
+    import threading
+
+    vt = VersionedTable.create(spark, root, _rows(spark, 0, 5))
+    schema = vt.read().schema
+    seg = vt._replay()["live"][0]
+    head = 8 * CHECKPOINT_EVERY + 3  # twice the cache bound: evictions
+    for v in range(1, head + 1):  # metadata-only commits: no data job
+        vt._commit(
+            v, "set_constraint", add=[], remove=[], schema=schema,
+            extra={"constraints": {"c": f"k < {1000 + v}"}},
+        )
+    want = {
+        v: vt._replay(v, use_checkpoint=False) for v in range(head + 1)
+    }
+    shared = VersionedTable(spark, root)
+    errors: list[BaseException] = []
+
+    def worker(tid: int) -> None:
+        try:
+            for i in range(1500):
+                v = (tid * 7 + i * 5) % (head + 1)
+                if v and v % CHECKPOINT_EVERY == 0 and i % 7 == 0:
+                    shared._write_checkpoint(v)
+                ckpt = shared._latest_checkpoint(v)
+                if ckpt is not None:
+                    cv = ckpt["version"]
+                    assert v - CHECKPOINT_EVERY < cv <= v, (v, cv)
+                    assert ckpt["constraints"] == want[cv]["constraints"]
+                if i % 20 == 0:
+                    got = shared._replay(v)
+                    assert got["live"] == [seg]
+                    for k in ("dvs", "txns", "constraints", "stats"):
+                        assert got[k] == want[v][k], (v, k)
+                assert len(shared._ckpt_payloads) <= vmod._CKPT_CACHE_MAX
+        except BaseException as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts), "stress run did not finish"
+    assert not errors, errors[:3]
 
 
 # ---------------------------- MCV stats + stats-driven skew planning
@@ -458,20 +546,22 @@ def test_racing_writers_publish_exact_checkpoints(spark, root):
             continue  # lost to a concurrent-commit race: legal
         n_published += 1
         ckpt = fresh._hydrate_checkpoint(_ckpt_raw(fresh, cv))
-        live_g, dvs_g = fresh._resolve_state(cv, use_checkpoint=False)
+        genesis = fresh._replay(cv, use_checkpoint=False)
+        live_g, dvs_g = genesis["live"], genesis["dvs"]
         assert sorted(ckpt["live"]) == sorted(live_g), f"v{cv} live"
         assert sorted(ckpt["dvs"]) == sorted(dvs_g), f"v{cv} dvs"
         assert set(ckpt["stats"]) == set(live_g), f"v{cv} stats"
-        assert ckpt["txns"] == fresh._resolve_txns(
+        assert ckpt["txns"] == fresh._replay(
             cv, use_checkpoint=False
-        ), f"v{cv} txns"
+        )["txns"], f"v{cv} txns"
     assert n_published >= 1, "no checkpoint published across 4 boundaries"
 
 
 def test_legacy_inline_checkpoint_upgrades_to_sidecars(spark, root):
-    """A round-11-format INLINE checkpoint on disk: reads hydrate it
-    as-is, and the NEXT checkpoint write upgrades to sidecar form with
-    exact state."""
+    """An INLINE checkpoint on disk (the format before sidecars) is not
+    a complete sidecar-form state: reads skip it and fold from genesis,
+    and the NEXT checkpoint write upgrades to sidecar form with exact
+    state."""
     vt = VersionedTable.create(spark, root, _rows(spark, 0, 20))
     for i in range(1, CHECKPOINT_EVERY + 1):
         vt.append(_rows(spark, 100 * i, 100 * i + 5))
@@ -487,13 +577,13 @@ def test_legacy_inline_checkpoint_upgrades_to_sidecars(spark, root):
         json.dump(legacy, fh)
     for n in _sidecar_files(root):  # r11 logs have no sidecar files
         os.unlink(os.path.join(root, vmod.LOG_DIR, n))
-    # a FRESH handle reads the legacy form exactly
+    # a FRESH handle skips the inline form; reads stay exact
     fresh = VersionedTable(spark, root)
-    ckpt = fresh._latest_checkpoint(CHECKPOINT_EVERY)
-    assert "sidecars" not in ckpt
-    assert sorted(ckpt["live"]) == sorted(
-        fresh._resolve_live(CHECKPOINT_EVERY, use_checkpoint=False)
+    assert fresh._latest_checkpoint(CHECKPOINT_EVERY) is None
+    assert fresh._replay(CHECKPOINT_EVERY)["live"] == (
+        fresh._replay(CHECKPOINT_EVERY, use_checkpoint=False)["live"]
     )
+    assert fresh.read(CHECKPOINT_EVERY).count() == 20 + 5 * CHECKPOINT_EVERY
     # drive to the next boundary: the new checkpoint must be sidecar
     # form (upgrade) and exact
     for i in range(CHECKPOINT_EVERY):
@@ -503,7 +593,7 @@ def test_legacy_inline_checkpoint_upgrades_to_sidecars(spark, root):
     assert "sidecars" in raw and "live" not in raw
     up = fresh._hydrate_checkpoint(raw)
     assert sorted(up["live"]) == sorted(
-        fresh._resolve_live(head, use_checkpoint=False)
+        set(fresh._replay(head, use_checkpoint=False)["live"])
     )
     assert fresh.read().count() == 20 + 5 * (2 * CHECKPOINT_EVERY)
 

@@ -173,13 +173,13 @@ def test_compaction_is_content_identical_and_collapses_segments(
         )
     before_version = vt.latest_version()
     before = _rows(vt.read(before_version))
-    n_live_before = len(vt._snapshot(None)[1])
+    n_live_before = len(vt._replay()["live"])
     assert n_live_before == 5  # create + 4 appends
     vt.compact()
     assert _rows(vt.read()) == before
-    assert len(vt._snapshot(None)[1]) == 1
+    assert len(vt._replay()["live"]) == 1
     # exactly one parquet part file after a coalesce(1) bin-pack
-    seg = vt._snapshot(None)[1][0]
+    seg = vt._replay()["live"][0]
     parts = glob.glob(os.path.join(vt_root, seg, "part-*"))
     assert len(parts) == 1
 
@@ -321,7 +321,9 @@ def test_checkpointed_replay_matches_full_replay(spark, vt_root):
         if n.endswith(".checkpoint.json")
     ]
     assert ckpts  # a checkpoint actually landed
-    assert vt._resolve_live(v) == vt._resolve_live(v, use_checkpoint=False)
+    assert vt._replay(v)["live"] == (
+        vt._replay(v, use_checkpoint=False)["live"]
+    )
     assert vt.read(v).count() == 2 + CHECKPOINT_EVERY + 3
 
 
@@ -470,7 +472,7 @@ def test_merge_pruned_rewrites_only_touched_segments(spark, vt_root):
     entry = vt._read_commit(v)
     assert entry["remove"] == [seg_b]
     assert entry["rewritten"] == 1 and entry["preserved"] == 1
-    assert seg_a in vt._resolve_live(v)  # untouched segment survives
+    assert seg_a in set(vt._replay(v)["live"])  # untouched segment survives
     got = dict(_rows(vt.read(v)))
     assert got[105] == -1 and got[108] == -2 and got[200] == -3
     assert got[0] == 0 and got[104] == 1040  # non-matched rows intact
@@ -493,7 +495,7 @@ def test_delete_rewrites_only_touched_segments(spark, vt_root):
     entry = vt._read_commit(v)
     assert entry["op"] == "delete" and entry["remove"] == [seg_b]
     assert entry["rewritten"] == 1 and entry["preserved"] == 1
-    assert seg_a in vt._resolve_live(v)  # untouched segment survives
+    assert seg_a in set(vt._replay(v)["live"])  # untouched segment survives
     got = dict(_rows(vt.read(v)))
     assert sorted(got) == list(range(10)) + list(range(100, 105))
 
@@ -631,7 +633,7 @@ def test_compact_clustered_prunes_on_both_dimensions(spark, vt_root):
         F.count(F.lit(1)), F.sum("a"), F.sum("b"), F.sum("payload")
     ).collect()[0]
     assert tuple(before) == tuple(after)  # content-identical rewrite
-    n_live = len(vt._resolve_live(v))
+    n_live = len(vt._replay(v)["live"])
     for col in ("a", "b"):
         lo, hi = vt.column_range(col, v)
         scanned, skipped = vt.pruned_segments(
@@ -898,7 +900,7 @@ def test_delete_mor_masks_rows_without_touching_segments(spark, vt_root):
     got = sorted(r.k for r in vt.read().collect())
     assert got == [k for k in range(20) if k % 3 != 0]
     assert vt.read(0).count() == 20  # snapshot isolation across the DV
-    assert vt._resolve_live(v1) == {seg0}  # zero data rewritten
+    assert set(vt._replay(v1)["live"]) == {seg0}  # zero data rewritten
 
 
 def test_delete_mor_is_position_scoped_and_accumulates(spark, vt_root):
@@ -1016,9 +1018,9 @@ def test_dv_resolution_through_checkpoint_matches_genesis_fold(
     vt.delete_where_mor("k = 100")
     v = vt.latest_version()
     assert v > CHECKPOINT_EVERY
-    assert vt._resolve_dvs(v, use_checkpoint=True) == vt._resolve_dvs(
+    assert vt._replay(v, use_checkpoint=True)["dvs"] == vt._replay(
         v, use_checkpoint=False
-    )
+    )["dvs"]
     assert len(vt.active_deletion_vectors()) == 2
     assert sorted(r.k for r in vt.read().where("k < 102").collect()) == [
         1, 2, 3, 4, 5, 101,
@@ -1165,7 +1167,7 @@ def test_vacuum_sweeps_bloom_sidecars_with_segments(spark, vt_root):
     # expired segments AND their sidecars are gone; the live one stays
     left = os.listdir(os.path.join(vt_root, "_index"))
     assert len(left) == 1
-    live_seg = os.path.basename(vt._snapshot(None)[1][0])
+    live_seg = os.path.basename(vt._replay()["live"][0])
     assert left[0] == live_seg + ".bloom.json"
     # and the compacted table still answers point lookups correctly
     assert vt.read_point("k", 3059).where("k = 3059").count() == 1
@@ -1205,7 +1207,7 @@ def test_merge_mor_masks_matches_and_appends_source(spark, vt_root):
     got = dict(_rows(vt.read()))
     assert got == {0: 0, 1: 10, 2: 20, 3: 30, 4: -1, 5: 50, 9: -9}
     assert _rows(vt.read(0)) == [(k, k * 10) for k in range(6)]  # v0 intact
-    assert vt._read_commit(0)["add"][0] in vt._resolve_live(v1)
+    assert vt._read_commit(0)["add"][0] in set(vt._replay(v1)["live"])
     # the DV holds exactly the one matched row's position
     dv = spark.read.parquet(
         os.path.join(vt.root, entry["dv_add"][0])
@@ -2005,13 +2007,13 @@ def test_update_where_cow_rewrites_only_touched(spark, vt_root):
     are rewritten; the discovery is exact, and predicate-UNKNOWN rows
     are kept unchanged (SQL UPDATE null semantics)."""
     vt = _mk_two_seg(spark, vt_root)
-    live_before = vt._resolve_live(vt.latest_version())
+    live_before = set(vt._replay(vt.latest_version())["live"])
     v = vt.update_where("k >= 50 AND k < 55", {"v": "-1"})
     entry = vt._read_commit(v)
     assert entry["op"] == "update"
     assert entry["rewritten"] == 1 and entry["preserved"] == 1
     # the untouched [0,50) segment survives by NAME in the live set
-    live_after = vt._resolve_live(v)
+    live_after = set(vt._replay(v)["live"])
     assert len(live_before & live_after) == 1
     head = vt.read()
     assert head.count() == 100
@@ -2378,7 +2380,7 @@ def test_update_on_emptied_table_is_noop(spark, vt_root):
     not an unresolved-column error."""
     vt = _mk_two_seg(spark, vt_root)
     v = vt.replace_where_segment(None, "k >= 0")
-    assert vt._resolve_live(v) == set()
+    assert set(vt._replay(v)["live"]) == set()
     assert vt.read().count() == 0
     assert vt.update_where("k > 0", {"v": "0"}) == v  # no-op
     assert vt.overwrite_where(
@@ -2473,14 +2475,14 @@ def test_segment_stats_fold_into_checkpoints(spark, vt_root):
     assert "stats" in ckpt
     assert set(ckpt["stats"]) == set(ckpt["live"])
     # the checkpointed fold equals the genesis walk
-    live = vt._resolve_live(head)
+    live = set(vt._replay(head)["live"])
     genesis: dict = {}
     for v in vt._versions():
         e = vt._read_commit(v)
         for rel in e["add"]:
             if rel in live:
                 genesis[rel] = e.get("stats", {}).get(rel, {})
-    assert vt._live_segment_stats(head) == genesis
+    assert vt._replay(head)["stats"] == genesis
     # pruning exact through the checkpointed path: a point probe scans
     # exactly the one segment holding it
     scanned, skipped = vt.pruned_segments(head, "k", 100, 100)
@@ -2497,7 +2499,7 @@ def test_segment_stats_fold_into_checkpoints(spark, vt_root):
     with open(cpath, "w") as fh:
         json.dump(legacy, fh)
     vt._ckpt_payloads.clear()
-    assert vt._live_segment_stats(head) == genesis
+    assert vt._replay(head)["stats"] == genesis
 
 
 def test_compact_small_packs_only_small_segments(spark, vt_root):
@@ -2520,14 +2522,14 @@ def test_compact_small_packs_only_small_segments(spark, vt_root):
     before = sorted(
         (r.k, r.v) for r in vt.read().collect()
     )
-    live_before = vt._resolve_live(vt.latest_version())
+    live_before = set(vt._replay(vt.latest_version())["live"])
     sizes = {rel: vt._segment_bytes(rel) for rel in live_before}
     threshold = sorted(sizes.values())[-2]  # the two big loads stay out
     v = vt.compact_small(max_bytes=threshold)
     entry = vt._read_commit(v)
     assert entry["op"] == "compact" and entry["scope"] == "small"
     assert entry["packed"] == 3 and entry["preserved"] == 2
-    live_after = vt._resolve_live(v)
+    live_after = set(vt._replay(v)["live"])
     # the big segments survive by NAME; the three tiny ones became one
     assert {r for r in live_before if sizes[r] >= threshold} < live_after
     assert len(live_after) == 3
@@ -2581,7 +2583,7 @@ def _genesis_seg_commits(vt, version):
     truth the checkpointed fold must reproduce (a restore's re-add
     appears later than the physical write, so first-add wins here by
     construction)."""
-    live = vt._resolve_live(version)
+    live = set(vt._replay(version)["live"])
     out = {}
     for v in sorted(vt._versions()):
         if v > version:
@@ -2620,11 +2622,11 @@ def test_provenance_fold_is_checkpointed_and_restore_aware(spark, vt_root):
     ckpt = vt._latest_checkpoint(head)
     assert ckpt is not None and "seg_commits" in ckpt
     # checkpointed fold == genesis fold on the plain (no-restore) head
-    assert vt._live_segment_commits(head) == _genesis_seg_commits(vt, head)
+    assert vt._replay(head)["seg_commits"] == _genesis_seg_commits(vt, head)
     # resurrect the PRE-checkpoint segments: the tail sees them added by
     # the restore commit, which must NOT win provenance
     v_r = vt.restore(1)
-    got = vt._live_segment_commits(v_r)
+    got = vt._replay(v_r)["seg_commits"]
     want = _genesis_seg_commits(vt, v_r)
     assert got == want
     assert sorted(want.values()) == [0, 1]  # physical writers, not v_r
@@ -2636,7 +2638,7 @@ def test_provenance_fold_is_checkpointed_and_restore_aware(spark, vt_root):
         stamps[k] == 0 for k in stamps if k != 100
     )
     # time travel BEFORE the restore still resolves through the ckpt
-    assert vt._live_segment_commits(head) == _genesis_seg_commits(vt, head)
+    assert vt._replay(head)["seg_commits"] == _genesis_seg_commits(vt, head)
 
 
 def test_mor_dml_on_empty_table_is_commit_free_noop(spark, vt_root):
@@ -2650,11 +2652,72 @@ def test_mor_dml_on_empty_table_is_commit_free_noop(spark, vt_root):
     # log layer — the DML surface must still treat it as empty-table
     v = vt.latest_version()
     vt._commit(
-        v + 1, "truncate", add=[], remove=sorted(vt._resolve_live(v)),
+        v + 1, "truncate", add=[], remove=vt._replay(v)["live"],
         schema=vt.read().schema,
     )
     head = vt.latest_version()
-    assert not vt._resolve_live(head)
+    assert not vt._replay(head)["live"]
     assert vt.update_where_mor("k = 1", {"v": F.lit(0)}) == head
     assert vt.delete_where_mor("k = 1") == head
     assert vt.latest_version() == head  # truly commit-free
+
+
+# ------------------------------------------- JVM-only metadata frames
+def test_vtable_modules_build_no_python_list_frames():
+    """A frame from ``createDataFrame(<list/tuple/comprehension>)`` plans
+    as ``Scan ExistingRDD`` and starts Python workers when executed; the
+    vtable's metadata frames are SQL literal relations instead
+    (``vtable._literal_frame``)."""
+    import ast
+
+    import energy_emissions_lakehouse_spark
+
+    pkg = os.path.dirname(energy_emissions_lakehouse_spark.__file__)
+    paths = [os.path.join(pkg, "operators", "vtable.py")] + sorted(
+        glob.glob(os.path.join(pkg, "sources", "vtable_*.py"))
+    )
+    literal = (
+        ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp,
+    )
+
+    def python_rows(arg) -> bool:
+        return isinstance(arg, literal) or (
+            isinstance(arg, ast.Call)
+            and ast.unparse(arg.func) in ("list", "tuple", "sorted")
+        )
+
+    found = []
+    for path in paths:
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and node.args
+                and python_rows(node.args[0])
+            ):
+                found.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not found, found
+
+
+def test_provenance_read_plans_in_the_jvm(spark, vt_root):
+    """With Arrow off (a plain session), the segment->commit lookup of
+    read_with_provenance must still plan as a JVM literal relation."""
+    vt = _mk(spark, vt_root, n=4)
+    vt.append(
+        spark.range(10, 12).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+    )
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = vt.read_with_provenance()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        rows = sorted((r.k, r._commit_version) for r in df.collect())
+    finally:
+        spark.conf.set(key, old)
+    assert "ExistingRDD" not in plan, plan
+    assert rows == [(k, 0) for k in range(4)] + [(10, 1), (11, 1)]

@@ -279,9 +279,9 @@ def test_checkpoint_write_failure_never_fails_the_commit(spark, base):
     assert ckpts == []  # every checkpoint publish was injected dead
     assert _log_scratch(root) == []
     assert vt.read().count() == 2 + 5 * (CHECKPOINT_EVERY + 2)
-    assert vt._resolve_live(head) == vt._resolve_live(
+    assert set(vt._replay(head)["live"]) == set(vt._replay(
         head, use_checkpoint=False
-    )
+    )["live"])
 
 
 def test_chaos_soak_dml_under_rogue_zero_grace_vacuum(spark, base):
@@ -518,7 +518,7 @@ def test_clone_racing_vacuum_skips_vanished_file_loudly(
     dest = os.path.join(base, "c")
 
     # find v0's (historic) segment: referenced by v0, not live at head
-    live = set(vt._resolve_live(vt.latest_version()))
+    live = set(vt._replay()["live"])
     v0_segs = set(vt._read_commit(0)["add"]) - live
     assert v0_segs
     victim = next(iter(v0_segs))

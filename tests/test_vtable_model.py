@@ -175,7 +175,8 @@ def test_random_dml_program_matches_model_and_history(spark, root):
         ckpt = vt._hydrate_checkpoint(
             json.load(open(vt._checkpoint_path(cv)))
         )
-        live_g, dvs_g = vt._resolve_state(cv, use_checkpoint=False)
+        genesis = vt._replay(cv, use_checkpoint=False)
+        live_g, dvs_g = genesis["live"], genesis["dvs"]
         assert sorted(ckpt["live"]) == sorted(live_g), f"ckpt v{cv} live"
         assert sorted(ckpt["dvs"]) == sorted(dvs_g), f"ckpt v{cv} dvs"
         assert set(ckpt["stats"]) == set(live_g), f"ckpt v{cv} stats"

@@ -49,7 +49,7 @@ def _state(vt, version=None):
 def test_rename_is_metadata_only_and_preserves_nulls(spark, base):
     root = os.path.join(base, "t")
     vt = _mk(spark, root, [(1, 10), (2, None), (3, 30)])
-    n_segs_before = len(vt._resolve_live(vt.latest_version()))
+    n_segs_before = len(vt._replay()["live"])
     v = vt.rename_column("v", "val")
     entry = vt._read_commit(v)
     assert entry["add"] == [] and entry["remove"] == []  # zero rewrite
@@ -60,7 +60,7 @@ def test_rename_is_metadata_only_and_preserves_nulls(spark, base):
     assert _state(vt) == {1: (10,), 2: (None,), 3: (30,)}
     vt.append(spark.createDataFrame([(4, None), (5, 50)], "k bigint, val bigint"))
     assert _state(vt) == {1: (10,), 2: (None,), 3: (30,), 4: (None,), 5: (50,)}
-    assert len(vt._resolve_live(vt.latest_version())) == n_segs_before + 1
+    assert len(vt._replay()["live"]) == n_segs_before + 1
 
 
 def test_chained_rename_and_dml_across_boundary(spark, base):

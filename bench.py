@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Per-round benchmark: every registered query at $SPARK_GRAFT_SF_DIR.
 
 Prints the contract JSON as the FINAL stdout line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -10,7 +10,7 @@ where ``queries`` carries as many per-query medians as fit the driver's
 line 1 and is persisted to BENCH_SELF.json (committed each round).
 
 Each query is timed end-to-end (plan build + execution + collect of the
-result, which is small for every headline query), SPARK_GRAFT_BENCH_REPS
+result, which is small for every registered query), SPARK_GRAFT_BENCH_REPS
 times (default 3): the reported per-query number is the MEDIAN and the
 max-min spread rides along under "query_spread" (host noise is payload,
 not prose). A JVM/codegen warm-up query runs first and is not counted. Query set spans the engine surface:
@@ -32,54 +32,6 @@ if _REPO_ROOT not in sys.path:
 
 from energy_emissions_lakehouse_spark.registry import all_queries
 from energy_emissions_lakehouse_spark.session import get_spark
-
-# Round-12 verdict item 1: the headline set is DERIVED from the query
-# registry at run time (headline = sorted(registry) - DEMONSTRATORS), not
-# hand-curated — a hand-maintained list silently dropped 99 registered
-# queries from the metric through round 11 (most sub-second, but two
-# heavy Arrow-surface queries rode along unlabeled).  Now every
-# registered query is either timed in the headline metric or explicitly
-# labeled a DEMONSTRATOR with a known-floor rationale below; a pytest
-# (tests/test_advice_r12.py) pins the identity so no query can silently
-# leave the metric again.
-def headline_names(registry_names) -> list[str]:
-    demos = set(DEMONSTRATORS)
-    unknown = demos - set(registry_names)
-    if unknown:
-        raise SystemExit(
-            f"bench.py: DEMONSTRATORS not in registry: {sorted(unknown)}"
-        )
-    return [n for n in sorted(registry_names) if n not in demos]
-
-# Labeled DEMONSTRATORS (round-6 verdict item 4): queries kept for their
-# semantics exposition whose cost is a documented floor, not a design —
-# timed and reported in their own block (like staging) so the headline
-# metric carries only production-shaped paths.  stream_session_timeout_close
-# is per-user fine-grained applyInPandasWithState (~1 ms/group Python
-# floor, streaming/jobs.py docstring); its registered production
-# alternatives (stream_session_windows, the _coarse variant) are headline.
-DEMONSTRATORS = [
-    "stream_session_timeout_close",
-    # round 11: graph-ANN tier — measured NEGATIVE on the cost-recall
-    # frontier vs ADC re-rank (BASELINE.md "Graph-ANN tier"); kept as
-    # the graph-shape demonstrator, excluded from the headline metric
-    # by the same known-floor policy
-    "graph_ann_ivf_beam_topk",
-    # round 12 (verdict item 1): the two heavy Arrow-surface queries
-    # that previously rode outside the metric unlabeled.  Both exist to
-    # pin a Python-execution surface against a declarative oracle and
-    # carry a documented Arrow/pandas per-group floor; their headline
-    # production twins compute the same results JVM-side:
-    # - sessionize_grouped_map (queries/events.py): applyInPandas
-    #   gap-split, twin = events_sessionization / sessionize_partitionwise
-    #   (18.5 s vs 0.3 s at sf0.1 — the floor is the per-user pandas
-    #   frame materialization, not the plan)
-    # - cogroup_user_conversion (queries/events.py): cogrouped
-    #   applyInPandas merge, twin = the declarative full-outer-join
-    #   oracle it is pinned to (6.8 s at sf0.1, same floor)
-    "sessionize_grouped_map",
-    "cogroup_user_conversion",
-]
 
 
 def dedup_stage_sweep(spark, sf_dirs: list[str]) -> dict:
@@ -180,10 +132,8 @@ def main() -> None:
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1).rstrip(".")) if match else -1.0
 
-    # Config provenance (round-5 advice: three runs were burned as
-    # non-comparable because unset SPARK_GRAFT_CPUS silently fell back to
-    # the engine default local[8] while the driver runs local[32]).
-    # Unset now defaults to the DRIVER's 32 — never the engine's 8 — and
+    # Config provenance: unset SPARK_GRAFT_CPUS means the cores this
+    # process may run on (what `nproc` prints), never a fixed count, and
     # the payload records the value and where it came from.
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
     env_set = bool(cpus_env and cpus_env.strip())
@@ -203,11 +153,11 @@ def main() -> None:
             )
         cpus_source = "env"
     else:
-        # round-7 advice: whitespace-only counts as unset, same as empty
-        cpus, cpus_source = 32, "default_driver32"
+        # whitespace-only counts as unset, same as empty
+        cpus, cpus_source = len(os.sched_getaffinity(0)), "default_nproc"
     print(
         f"[bench] config: local[{cpus}] (SPARK_GRAFT_CPUS "
-        f"{'=' + cpus_env if env_set else 'unset -> driver default 32'}), "
+        f"{'=' + cpus_env if env_set else 'unset -> nproc'}), "
         f"sf_dir={sf_dir}",
         file=sys.stderr,
     )
@@ -422,13 +372,9 @@ def main() -> None:
           file=sys.stderr)
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    headline = headline_names(queries)
-    print(
-        f"[bench] headline = registry({len(queries)}) - "
-        f"demonstrators({len(DEMONSTRATORS)}) = {len(headline)} queries",
-        file=sys.stderr,
-    )
-    for name in headline:
+    print(f"[bench] headline = registry ({len(queries)} queries)",
+          file=sys.stderr)
+    for name in sorted(queries):
         fn = queries[name]
         runs: list[float] = []
         for _ in range(reps):
@@ -442,17 +388,6 @@ def main() -> None:
             + (f" (spread {spreads[name]}s over {reps})" if reps > 1 else ""),
             file=sys.stderr,
         )
-
-    # Labeled demonstrators: still run and reported every round (their
-    # cost stays measured and auditable), excluded from the headline sum.
-    demonstrators: dict[str, float] = {}
-    for name in DEMONSTRATORS:
-        fn = queries[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        demonstrators[name] = round(time.perf_counter() - t0, 3)
-        print(f"[bench] demonstrator {name}: {demonstrators[name]}s",
-              file=sys.stderr)
 
     probe_after = _calibration_probe()
     probe_drift = round(probe_after / probe_before, 3) if probe_before else 1.0
@@ -484,10 +419,6 @@ def main() -> None:
         # canonicalization; python_worker_pool is process spin-up.
         "staging": staging,
         "staging_total_sec": round(sum(staging.values()), 3),
-        # Labeled known-floor semantics demonstrators (see DEMONSTRATORS):
-        # timed, reported, excluded from the headline sum by policy.
-        "demonstrators": demonstrators,
-        "demonstrators_total_sec": round(sum(demonstrators.values()), 3),
         "cpus": cpus,
         "cpus_source": cpus_source,
         # variance budget (round-8 verdict): per-query medians above,

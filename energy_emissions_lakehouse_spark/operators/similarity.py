@@ -799,123 +799,3 @@ def ivfpq_adc_topk(
     return _ranked(scored, "d_micro, cand_id", k).selectExpr(
         "query_id", "cand_id", f"{_MICRO_BACK} AS d_approx", "rank"
     )
-
-
-def ivf_graph_build(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    degree: int = 6,
-    home: DataFrame | None = None,
-) -> DataFrame:
-    """INDEX BUILD for the graph ANN tier (round-11 stretch): a
-    PARTITION-LOCAL neighbor graph — each vector keeps edges to its
-    ``degree`` nearest neighbors WITHIN ITS IVF CELL (the HNSW idea
-    scoped to cells so both build and search stay cell-local, never a
-    corpus-wide traversal).  Build is one equi-self-join on the cell id
-    + a per-source top-``degree`` window: quadratic only WITHIN a cell
-    (cells are N/nlist by construction), train-once like the PQ model;
-    a production build would swap per-cell NN-descent in here.
-
-    Returns (src, dst, sim) edges, sims rounded to 6dp (the repo's
-    cross-engine exactness contract).  ``home`` optionally reuses an
-    already-computed cell assignment (the serve path shares one)."""
-    if home is None:
-        home = ivf_assign(vectors, centroids)
-    a, b = (
-        home.selectExpr(
-            "centroid_id", f"vec_id AS {e}", f"v AS {e[0]}_vec", f"{norm('v')} AS {e[0]}_n"
-        )
-        for e in ("src", "dst")
-    )
-    pairs = _scored(a.join(b, "centroid_id"), "src", "dst", "!=", "s", "d")
-    return _ranked(pairs, "sim DESC, dst", degree, key="src").select(
-        "src", "dst", "sim"
-    )
-
-
-def ivf_graph_topk(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    query_pred,
-    k: int = 3,
-    beam: int = 8,
-    rounds: int = 2,
-    degree: int = 6,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """Graph-ANN serving: centroid ROUTER picks each query's home cell,
-    the cell's fixed ENTRY POINT (its vector most similar to the
-    centroid — query-independent, like HNSW's top-layer entry) seeds the
-    search, then ``rounds`` beam-expansion steps walk the cell-local
-    neighbor graph: the per-query top-``beam`` of everything scored so
-    far expands its edges, new nodes are scored against the query,
-    visited accumulates (union-distinct — re-expansion is idempotent).
-    Final answer = top-``k`` of visited, self excluded.
-
-    Cost per query is BOUNDED BY CONSTRUCTION: at most
-    1 + beam*degree*rounds float scorings (97 at the defaults
-    beam=8, degree=6, rounds=2) versus
-    the re-rank tier's shortlist (BASELINE.md records the measured
-    cost-recall frontier).  Every step is an equi-join keyed on node or
-    query id — no corpus scan, no cross join; the ``rounds`` driver
-    loop is a bounded index parameter (2-3), same contract as the BPE
-    trainer's K merge rounds, with a localCheckpoint per round keeping
-    lineage flat."""
-    home = ivf_assign(vectors, centroids)
-    if edges is None:
-        # reuse the single assignment pass (the build would otherwise
-        # re-run the N x nlist broadcast scoring)
-        edges = ivf_graph_build(vectors, centroids, degree, home=home)
-    cents = centroids.selectExpr("vec_id AS centroid_id", "v AS c_vec")
-    # fixed entry point per cell: max centroid-similarity, tie on vec_id
-    entry = _ranked(
-        home.join(F.broadcast(cents), "centroid_id").selectExpr(
-            "centroid_id", "vec_id", f"round({cosine('v', 'c_vec')}, 6) AS e_sim"
-        ),
-        "e_sim DESC, vec_id", 1, key="centroid_id",
-    ).selectExpr("centroid_id", "vec_id AS entry_id")
-    # router: each query's nearest centroid (nprobe=1) — exactly the
-    # home assignment already computed (ivf_assign's argmin ties to the
-    # lowest centroid id, the same ordering the explicit window used),
-    # so routing is a filter, not a third N x nlist scoring pass
-    queries = home.filter(query_pred).selectExpr(
-        "vec_id AS query_id", "v AS q_vec", "centroid_id"
-    )
-    cand_vecs = vectors.selectExpr("vec_id AS cand_id", "v AS cv", f"{norm('v')} AS cn")
-    sim = cosine_pre("q_vec", norm("q_vec"), "cv", "cn")
-
-    def score(pairs: DataFrame) -> DataFrame:
-        """(query_id, q_vec, cand_id) -> + sim (6dp, the shared
-        exactness contract)."""
-        return (
-            pairs.join(cand_vecs, "cand_id")
-            .selectExpr("query_id", "q_vec", "cand_id", f"round({sim}, 6) AS sim")
-        )
-
-    visited = score(
-        queries.join(F.broadcast(entry), "centroid_id").select(
-            "query_id", "q_vec", F.col("entry_id").alias("cand_id")
-        )
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        frontier = _ranked(visited, "sim DESC, cand_id", beam).selectExpr(
-            "query_id", "q_vec", "cand_id AS src"
-        )
-        neighbors = (
-            frontier.join(
-                edges.select("src", F.col("dst").alias("cand_id")), "src"
-            )
-            .select("query_id", "q_vec", "cand_id")
-            # distinct BEFORE the subtraction: exceptAll is MULTISET
-            # minus, so a visited node reachable from several frontier
-            # sources would survive with leftover copies and be scored
-            # (and ranked) twice
-            .distinct()
-            .exceptAll(visited.select("query_id", "q_vec", "cand_id"))
-        )
-        visited = visited.unionByName(score(neighbors)).localCheckpoint(
-            eager=True
-        )
-    return _ranked(
-        visited.filter("query_id != cand_id"), "sim DESC, cand_id", k
-    ).select("query_id", "cand_id", "sim", "rank")

@@ -10,7 +10,6 @@ after canonical normalization.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import duckdb
@@ -71,35 +70,30 @@ def compare_query(
         return CompareResult(name, True, len(spark_pdf), -1, "rows-only (no oracle)")
     oracle_pdf = con.execute(spec.oracle).df()
 
+    detail = compare_frames(spark_pdf, oracle_pdf)
+    return CompareResult(
+        name, detail is None, len(spark_pdf), len(oracle_pdf), detail or ""
+    )
+
+
+def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str | None:
+    """None when the two frames hold the same multiset of rows (row and
+    column order ignored, cells exact after ``_canonicalize``; NaN
+    matches NaN, null matches null), else the first mismatch in words."""
     a, b = _canonicalize(spark_pdf), _canonicalize(oracle_pdf)
     if len(a) != len(b):
-        return CompareResult(name, False, len(a), len(b), "row-count mismatch")
+        return f"row-count mismatch: spark={len(a)} oracle={len(b)}"
     if list(a.columns) != list(b.columns):
-        return CompareResult(
-            name, False, len(a), len(b),
-            f"columns differ: spark={list(a.columns)} oracle={list(b.columns)}",
-        )
+        return f"columns differ: spark={list(a.columns)} oracle={list(b.columns)}"
     for col in a.columns:
         av, bv = a[col], b[col]
-        if pd.api.types.is_float_dtype(av) and pd.api.types.is_float_dtype(bv):
-            equal = [
-                (math.isnan(x) and math.isnan(y)) or x == y
-                for x, y in zip(av.fillna(float("nan")), bv.fillna(float("nan")))
-            ]
-            if not all(equal):
-                i = equal.index(False)
-                return CompareResult(
-                    name, False, len(a), len(b),
-                    f"value mismatch col={col} row={i}: "
-                    f"spark={av.iloc[i]!r} oracle={bv.iloc[i]!r}",
-                )
-        else:
-            neq = ~(av.eq(bv) | (av.isna() & bv.isna()))
-            if neq.any():
-                i = int(neq.idxmax())
-                return CompareResult(
-                    name, False, len(a), len(b),
-                    f"value mismatch col={col} row={i}: "
-                    f"spark={av.iloc[i]!r} oracle={bv.iloc[i]!r}",
-                )
-    return CompareResult(name, True, len(a), len(b))
+        # NaN != NaN, and a nullable eq() yields <NA> for null-vs-value:
+        # both-missing is the one extra match, anything else <NA> is not
+        neq = ~(av.eq(bv).fillna(False).astype(bool) | (av.isna() & bv.isna()))
+        if neq.any():
+            i = int(neq.idxmax())
+            return (
+                f"value mismatch col={col} row={i}: "
+                f"spark={av.iloc[i]!r} oracle={bv.iloc[i]!r}"
+            )
+    return None

@@ -444,88 +444,6 @@ def events_user_day_gapfill(spark, sf_dir) -> DataFrame:
 
 
 @register(
-    "sessionize_grouped_map",
-    oracle=f"""
-    WITH ordered AS (
-        SELECT user_id, event_id, ts,
-               LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        FROM events
-    ),
-    flagged AS (
-        SELECT user_id, event_id, ts,
-               CASE WHEN prev_ts IS NULL
-                      OR DATE_DIFF('second', prev_ts, ts) > {SESSION_GAP_SECONDS}
-                    THEN 1 ELSE 0 END AS new_session
-        FROM ordered
-    ),
-    numbered AS (
-        SELECT user_id, ts,
-               SUM(new_session) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        FROM flagged
-    )
-    SELECT user_id,
-           CAST(session_id AS BIGINT)    AS session_id,
-           COUNT(*)                      AS n_events,
-           DATE_TRUNC('second', MIN(ts)) AS session_start,
-           DATE_TRUNC('second', MAX(ts)) AS session_end
-    FROM numbered
-    GROUP BY user_id, session_id
-    """,
-    survey="extension (custom operator, grouped map): applyInPandas "
-    "sessionization — the Arrow-batched per-group escape hatch for logic "
-    "SQL can't express. Must produce EXACTLY the window-algebra oracle "
-    "(same as events_sessionization), proving the pandas path and the "
-    "declarative path agree. One hash shuffle on user_id; each group is "
-    "one in-memory pandas frame, so the 100 TB constraint is per-user "
-    "cardinality (bounded here), never total size",
-)
-def sessionize_grouped_map(spark, sf_dir) -> DataFrame:
-    """Per-user sessionization via groupBy().applyInPandas — imperative
-    gap-splitting in pandas, distributed by Spark. Exists to pin the
-    grouped-map operator surface against a declarative oracle; prefer the
-    pure window form (events_sessionization) when semantics allow."""
-    import pandas as pd
-
-    gap = SESSION_GAP_SECONDS
-
-    def sessions(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        prev = pdf["ts"].shift()
-        # second-boundary difference (== DATE_DIFF('second')/unix_timestamp
-        # semantics), NOT fractional elapsed time — sub-second gap parts
-        # must not flip the threshold comparison vs the oracle.
-        gaps = (
-            pdf["ts"].dt.floor("s") - prev.dt.floor("s")
-        ).dt.total_seconds()
-        new_session = prev.isna() | (gaps > gap)
-        pdf = pdf.assign(session_id=new_session.cumsum().astype("int64"))
-        out = (
-            pdf.groupby("session_id", sort=True)
-            .agg(
-                user_id=("user_id", "first"),
-                n_events=("event_id", "size"),
-                session_start=("ts", "min"),
-                session_end=("ts", "max"),
-            )
-            .reset_index()
-        )
-        out["session_start"] = out["session_start"].dt.floor("s")
-        out["session_end"] = out["session_end"].dt.floor("s")
-        return out[
-            ["user_id", "session_id", "n_events", "session_start", "session_end"]
-        ]
-
-    ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    schema = (
-        "user_id long, session_id long, n_events long, "
-        "session_start timestamp, session_end timestamp"
-    )
-    return ev.groupBy("user_id").applyInPandas(sessions, schema)
-
-
-@register(
     "sessionize_partitionwise",
     oracle=f"""
     WITH ordered AS (
@@ -558,12 +476,12 @@ def sessionize_grouped_map(spark, sf_dir) -> DataFrame:
     survey="extension (custom operator, scale path): partition-wise "
     "vectorized sessionization — mapInPandas over user-clustered "
     "partitions, ONE pandas pipeline per partition (vectorized groupby "
-    "shift/cumsum), not one Python call per user. The per-group "
-    "applyInPandas form (sessionize_grouped_map) pays ~1 ms of "
-    "serialization per tiny group — 15k users -> 15 s; this form "
-    "amortizes it to per-partition and is ~10x faster at sf0.1. Same "
-    "oracle as the declarative window form, so all three sessionizers "
-    "are pinned to identical semantics",
+    "shift/cumsum), not one Python call per user. A per-group "
+    "applyInPandas form pays ~1 ms of serialization per tiny group — "
+    "15k users -> 15 s; this form amortizes it to per-partition and is "
+    "~10x faster at sf0.1. Same oracle as the declarative window form "
+    "(events_sessionization), so both sessionizers are pinned to "
+    "identical semantics",
 )
 def sessionize_partitionwise(spark, sf_dir) -> DataFrame:
     """Sessionization via repartition(user_id) + mapInPandas: every user's
@@ -617,66 +535,6 @@ def sessionize_partitionwise(spark, sf_dir) -> DataFrame:
         "session_start timestamp, session_end timestamp"
     )
     return ev.mapInPandas(sessionize, schema)
-
-
-@register(
-    "cogroup_user_conversion",
-    oracle="""
-    WITH c AS (
-        SELECT user_id, COUNT(*) AS n_clicks,
-               DATE_TRUNC('second', MIN(ts)) AS first_click
-        FROM events WHERE event_type = 'click' GROUP BY user_id
-    ),
-    p AS (
-        SELECT user_id, COUNT(*) AS n_purchases,
-               DATE_TRUNC('second', MIN(ts)) AS first_purchase
-        FROM events WHERE event_type = 'purchase' GROUP BY user_id
-    )
-    SELECT COALESCE(c.user_id, p.user_id)   AS user_id,
-           COALESCE(c.n_clicks, 0)          AS n_clicks,
-           COALESCE(p.n_purchases, 0)       AS n_purchases,
-           c.first_click,
-           p.first_purchase
-    FROM c FULL OUTER JOIN p ON c.user_id = p.user_id
-    """,
-    survey="extension (custom operator, cogrouped map): "
-    "groupBy().cogroup().applyInPandas — BOTH sides of a key arrive as "
-    "pandas frames in one Python call, the escape hatch for per-key "
-    "merge logic SQL can't express (custom matching, model scoring over "
-    "paired histories). Pinned to a declarative full-outer-join oracle "
-    "so the cogrouped path is exactness-checked like everything else",
-)
-def cogroup_user_conversion(spark, sf_dir) -> DataFrame:
-    """Per-user click/purchase profile via cogrouped applyInPandas: clicks
-    and purchases are cogrouped by user_id and merged imperatively in
-    pandas. One shuffle per side (same key), Arrow-batched."""
-    import pandas as pd
-
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    clicks = ev.filter(F.col("event_type") == "click")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-
-    def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out = {
-            "user_id": key[0],
-            "n_clicks": len(left),
-            "n_purchases": len(right),
-            "first_click": left["ts"].min().floor("s") if len(left) else None,
-            "first_purchase": (
-                right["ts"].min().floor("s") if len(right) else None
-            ),
-        }
-        return pd.DataFrame([out])
-
-    schema = (
-        "user_id long, n_clicks long, n_purchases long, "
-        "first_click timestamp, first_purchase timestamp"
-    )
-    return (
-        clicks.groupby("user_id")
-        .cogroup(purchases.groupby("user_id"))
-        .applyInPandas(merge, schema)
-    )
 
 
 @register(

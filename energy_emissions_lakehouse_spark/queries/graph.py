@@ -696,7 +696,7 @@ def kcore_copurchase(spark, sf_dir) -> DataFrame:
     shuffle of this query ever sees the outer setting.  Measured after the
     fix: ~1.2 s warm / ~2.4 s including a cold index build at sf0.01 under
     a 200-partition session (was 7.5 s); sf0.1: 1.50 s in the headlined
-    local[32] bench (BENCH_HEADLINE_r05.json)."""
+    local[32] bench."""
     # loop-local override via the shared context manager (round-6: the
     # concurrency contract — single-threaded session during the loop —
     # is documented once on session.loop_shuffle_partitions); the LAZY

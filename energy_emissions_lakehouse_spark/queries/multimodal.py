@@ -137,7 +137,7 @@ def media_phash_neardup(spark, sf_dir) -> DataFrame:
     "but batches stay pyarrow RecordBatches end-to-end (no pandas "
     "conversion: binary payloads remain Arrow buffers instead of being "
     "copied into Python bytes objects per row). Completes the Python "
-    "execution-surface tier: mapInPandas / applyInPandas / cogroup / "
+    "execution-surface tier: mapInPandas / applyInPandas / "
     "applyInPandasWithState / UDTF / DataSource reader+writer / "
     "mapInArrow",
     tags=("multimodal",),

@@ -258,7 +258,7 @@ def stream_purchase_click_left_join(spark, sf_dir) -> DataFrame:
 
 
 @register(
-    "stream_session_timeout_close",
+    "stream_session_timeout_close_coarse",
     oracle=f"""
     WITH d AS (
         SELECT user_id, ts,
@@ -284,74 +284,17 @@ def stream_purchase_click_left_join(spark, sf_dir) -> DataFrame:
     "sessionization with EVENT-TIME TIMEOUT state eviction "
     "(applyInPandasWithState) — sessions close on the in-stream gap OR "
     "when the watermark passes last_ts + gap with no further events; the "
-    "bounded replay's flush sentinels fire the final timeouts. Must equal "
-    "the batch gaps-and-islands oracle exactly — the strongest check that "
-    "timeout-driven emission neither loses nor duplicates sessions. "
-    "PRODUCTION PAIRING: this query is the custom-keyed-state "
-    "DEMONSTRATOR — applyInPandasWithState has a measured ~1 ms/group "
-    "Python floor per replayed batch (the bench's worst entry), which is "
-    "the price of arbitrary per-key logic. When the semantics are plain "
-    "gap sessionization, the native `session_window` variant "
-    "(stream_session_windows) is the production path: pure JVM state, no "
-    "per-group Python, same watermark discipline. Reach for THIS shape "
-    "only when per-key logic goes beyond what session_window expresses "
-    "(per-session ML features, conditional timeouts, cross-field state)",
-)
-def stream_session_timeout_close(spark, sf_dir) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    # ONE stateful operator -> one sentinel batch suffices (the engine's
-    # no-data micro-batch applies the final watermark); every extra
-    # sentinel batch would re-invoke the pandas state fn for all ~5k user
-    # groups at the ~1 ms/group Python floor
-    ev = jobs.read_events_stream_with_flush(spark, sf_dir, n_sentinels=1)
-    # 16 state partitions, not the run_to_table default of 8: this op does
-    # ~per-user pandas work inside each batch, so task parallelism pays for
-    # the extra per-store open/commit (measured 6.5 s vs 8.9-10 s at sf0.1)
-    out = jobs.run_to_table(
-        jobs.stateful_session_close(ev), mode="append", state_partitions=16
-    )
-    return out.filter(F.col("user_id") >= 0).select(
-        "user_id",
-        F.date_trunc("second", F.col("session_start")).alias("session_start"),
-        "n_events",
-    )
-
-
-@register(
-    "stream_session_timeout_close_coarse",
-    oracle=f"""
-    WITH d AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                        > INTERVAL {jobs.SESSION_GAP_SECONDS} SECOND
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-    ),
-    s AS (
-        SELECT user_id, ts,
-               SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-        FROM d
-    )
-    SELECT user_id,
-           DATE_TRUNC('second', MIN(ts)) AS session_start,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM s GROUP BY user_id, sid
-    """,
-    survey="extension (streaming, custom stateful operator — SCALE PATH): "
-    "the COARSENED-KEY form of timeout sessionization. State key is "
-    "pmod(user_id, 64) instead of the raw user id, so the ~1 ms/group "
-    "Python/Arrow floor of applyInPandasWithState is paid per BUCKET (a "
-    "chosen constant, >= core count) instead of per user; each bucket's "
-    "state holds its users' open sessions as parallel arrays and the "
-    "per-user merge runs vectorized inside the bucket. Timeouts re-arm "
-    "at the earliest due session and close only sessions the current "
-    "watermark has actually passed. Same gaps-and-islands oracle as the "
-    "fine-grained demonstrator — identical output, ~bucket/user-count "
-    "times less fixed overhead per batch",
+    "bounded replay's flush sentinels fire the final timeouts. State key "
+    "is pmod(user_id, 64) instead of the raw user id, so the ~1 ms/group "
+    "Python/Arrow floor is paid per BUCKET (a chosen constant, >= core "
+    "count) instead of per user; each bucket's state holds its users' "
+    "open sessions as parallel arrays. Timeouts re-arm at the earliest "
+    "due session and close only sessions the current watermark has "
+    "actually passed. Must equal the batch gaps-and-islands oracle "
+    "exactly — the check that timeout-driven emission neither loses nor "
+    "duplicates sessions. When the semantics are plain gap "
+    "sessionization, the native session_window variant "
+    "(stream_session_windows) needs no per-group Python at all",
 )
 def stream_session_timeout_close_coarse(spark, sf_dir) -> DataFrame:
     from pyspark.sql import functions as F

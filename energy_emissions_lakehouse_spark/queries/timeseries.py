@@ -337,8 +337,8 @@ def events_cusum_drift(spark, sf_dir) -> DataFrame:
 
     Recursive keyed state is the one shape Catalyst windows cannot
     express; the scale-correct Spark form is a grouped Arrow pass over
-    the pre-aggregated grid (the same pattern as sessionize_grouped_map,
-    ~1 ms/group — trivially cheap at hours-x-keys grid size)."""
+    the pre-aggregated grid (applyInPandas costs ~1 ms/group —
+    trivially cheap at hours-x-keys grid size)."""
     import pandas as pd
 
     hourly = _hourly_cents(spark, sf_dir)

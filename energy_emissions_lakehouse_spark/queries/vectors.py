@@ -1495,135 +1495,3 @@ def embedding_dim_covariance(spark, sf_dir) -> DataFrame:
         .orderBy(F.abs(F.col("cov_num")).desc(), "i", "j")
         .limit(20)
     )
-
-
-def _gcos(qv: str, cv: str) -> str:
-    """6dp cosine between two DOUBLE[] expressions (the repo's
-    cross-engine exactness contract), alias-parameterized."""
-    return (
-        f"ROUND(list_dot_product({qv}, {cv}) / NULLIF("
-        f"sqrt(list_dot_product({qv}, {qv})) * "
-        f"sqrt(list_dot_product({cv}, {cv})), 0.0), 6)"
-    )
-
-
-@register(
-    "graph_ann_ivf_beam_topk",
-    oracle=f"""
-    -- graph-ANN tier: per-IVF-cell neighbor graph (degree 6), fixed
-    -- per-cell entry point, 2 beam-expansion rounds (beam 8) — the
-    -- oracle unrolls the bounded search exactly.  MATERIALIZED on every
-    -- chained CTE: the rounds reference each other repeatedly and
-    -- DuckDB would otherwise inline them exponentially (verify-skill
-    -- gotcha).
-    WITH e AS MATERIALIZED (SELECT vec_id, {_EMB} AS v FROM embeddings),
-    cent AS MATERIALIZED (
-      SELECT vec_id AS centroid_id, v AS c_vec FROM e
-      WHERE vec_id % 100 = 1
-    ),
-    routed AS MATERIALIZED (
-      SELECT e.vec_id, e.v, cent.centroid_id,
-             {_gcos('e.v', 'cent.c_vec')} AS c_sim,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_gcos('e.v', 'cent.c_vec')} DESC,
-                          cent.centroid_id) AS rn
-      FROM e CROSS JOIN cent
-    ),
-    home AS MATERIALIZED (
-      SELECT vec_id, v, centroid_id, c_sim FROM routed WHERE rn = 1
-    ),
-    entry AS MATERIALIZED (
-      SELECT centroid_id, vec_id AS entry_id FROM (
-        SELECT centroid_id, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY centroid_id
-                   ORDER BY c_sim DESC, vec_id) AS ern
-        FROM home
-      ) WHERE ern = 1
-    ),
-    edges AS MATERIALIZED (
-      SELECT src, dst FROM (
-        SELECT a.vec_id AS src, b.vec_id AS dst,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                   ORDER BY {_gcos('a.v', 'b.v')} DESC, b.vec_id) AS rn
-        FROM home a JOIN home b
-          ON a.centroid_id = b.centroid_id AND a.vec_id != b.vec_id
-      ) WHERE rn <= 6
-    ),
-    q AS MATERIALIZED (
-      SELECT vec_id AS query_id, v AS q_vec, centroid_id FROM home
-      WHERE vec_id % 100 = 0
-    ),
-    v0 AS MATERIALIZED (
-      SELECT q.query_id, q.q_vec, en.entry_id AS cand_id,
-             {_gcos('q.q_vec', 'ev.v')} AS sim
-      FROM q JOIN entry en USING (centroid_id)
-             JOIN e ev ON ev.vec_id = en.entry_id
-    ),
-    f1 AS MATERIALIZED (
-      SELECT query_id, cand_id FROM (
-        SELECT query_id, cand_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY sim DESC, cand_id) AS rn
-        FROM v0
-      ) WHERE rn <= 8
-    ),
-    v1 AS MATERIALIZED (
-      SELECT query_id, q_vec, cand_id, sim FROM v0
-      UNION
-      SELECT q.query_id, q.q_vec, ed.dst AS cand_id,
-             {_gcos('q.q_vec', 'ev.v')} AS sim
-      FROM f1 JOIN edges ed ON ed.src = f1.cand_id
-              JOIN q ON q.query_id = f1.query_id
-              JOIN e ev ON ev.vec_id = ed.dst
-    ),
-    f2 AS MATERIALIZED (
-      SELECT query_id, cand_id FROM (
-        SELECT query_id, cand_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY sim DESC, cand_id) AS rn
-        FROM v1
-      ) WHERE rn <= 8
-    ),
-    v2 AS MATERIALIZED (
-      SELECT query_id, q_vec, cand_id, sim FROM v1
-      UNION
-      SELECT q.query_id, q.q_vec, ed.dst AS cand_id,
-             {_gcos('q.q_vec', 'ev.v')} AS sim
-      FROM f2 JOIN edges ed ON ed.src = f2.cand_id
-              JOIN q ON q.query_id = f2.query_id
-              JOIN e ev ON ev.vec_id = ed.dst
-    )
-    SELECT query_id, cand_id, sim, rank FROM (
-      SELECT query_id, cand_id, sim,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
-      FROM v2 WHERE query_id != cand_id
-    ) WHERE rank <= 3
-    ORDER BY query_id, rank
-    """,
-    survey="extension (similarity, graph tier — round-11 stretch): "
-    "HNSW-style partition-LOCAL neighbor graph with a centroid router — "
-    "per-IVF-cell degree-6 kNN graph (index build: one cell-keyed "
-    "self-join + top-degree window, quadratic only within a cell, "
-    "train-once), served by bounded beam search (fixed per-cell entry "
-    "point, 2 rounds x beam 8 — at most 1+8*6*2=97 float scorings per "
-    "query, every step an equi-join on node id).  Cost-recall frontier "
-    "vs the ADC re-rank tier measured in BASELINE.md; the oracle "
-    "unrolls the exact bounded search",
-)
-def graph_ann_ivf_beam_topk(spark, sf_dir) -> DataFrame:
-    """Graph-ANN top-3 over the deterministic IVF layout (centroids =
-    vec_id % 100 == 1, queries = % 100 == 0): build the cell-local
-    neighbor graph, route each query to its home cell's entry point,
-    beam-walk 2 rounds, exact-rank the visited set."""
-    emb = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(sim.as_double("embedding")).alias("v")
-    )
-    centroids = emb.filter(F.col("vec_id") % 100 == 1)
-    return (
-        sim.ivf_graph_topk(
-            emb, centroids, F.col("vec_id") % 100 == 0,
-            k=3, beam=8, rounds=2, degree=6,
-        )
-        .orderBy("query_id", "rank")
-    )

@@ -600,100 +600,6 @@ def purchase_click_left_join(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_session_close(events: DataFrame) -> DataFrame:
-    """Per-user sessionization via applyInPandasWithState with EVENT-TIME
-    TIMEOUT: a session closes either when a later event arrives past the
-    30-min gap (in-batch/cross-batch logic) or when the WATERMARK passes
-    last_ts + gap with no further events — the timeout path, which is the
-    piece built-in session_window cannot express with custom state.
-
-    Emits one row per CLOSED session. State per user is the single open
-    session (start_us, last_us, n) in integer microseconds — exact merge
-    across any batch boundary. On the bounded replay the flush sentinels
-    advance the watermark past every real event, firing the final
-    timeouts; sentinel groups (user_id < 0) are dropped by the caller
-    AFTER the sink, never before the watermark node."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    gap_us = SESSION_GAP_SECONDS * 1_000_000
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_us", LongType()),
-            StructField("last_us", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def close_row(key, start_us, n):
-        return pd.DataFrame(
-            {
-                "user_id": [key],
-                "session_start": [pd.Timestamp(start_us, unit="us")],
-                "n_events": [n],
-            }
-        )
-
-    def update(key, pdfs, state: GroupState):
-        uid = key[0]
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield close_row(uid, start_us, n)
-            return
-        open_s = state.get if state.exists else None
-        closed = []
-        ts_us_all = []
-        for pdf in pdfs:
-            # int64 µs since epoch — exact arithmetic from here on
-            ts_us_all.append(
-                pdf["ts"].astype("datetime64[us]").astype("int64")
-            )
-        if ts_us_all:
-            ts_sorted = pd.concat(ts_us_all).sort_values().to_numpy()
-            for t in ts_sorted:
-                t = int(t)
-                if open_s is None:
-                    open_s = (t, t, 1)
-                elif t - open_s[1] <= gap_us:
-                    open_s = (open_s[0], t, open_s[2] + 1)
-                else:
-                    closed.append(open_s)
-                    open_s = (t, t, 1)
-        if open_s is not None:
-            state.update(open_s)
-            # fire when the watermark passes last event + gap (ms API)
-            state.setTimeoutTimestamp(open_s[1] // 1000 + gap_us // 1000)
-        for start_us, _last, n in closed:
-            yield close_row(uid, start_us, n)
-
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", "1 hour")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 #: Bucket count for the coarsened-key sessionizer: the Python-side cost of
 #: applyInPandasWithState is ~1 ms PER GROUP per batch (pandas/Arrow call
 #: overhead), so 5k user groups cost ~5 s/batch regardless of row volume.
@@ -703,26 +609,33 @@ SESSION_BUCKETS = 64
 
 
 def stateful_session_close_coarse(events: DataFrame) -> DataFrame:
-    """Semantically identical to :func:`stateful_session_close`, with the
-    state key COARSENED: ``pmod(user_id, SESSION_BUCKETS)`` instead of the
-    raw user id, one state entry per bucket holding every open session of
-    the bucket's users as parallel arrays.
+    """Per-user sessionization via applyInPandasWithState with EVENT-TIME
+    TIMEOUT: a session closes either when a later event arrives past the
+    30-min gap or when the WATERMARK passes last_ts + gap with no further
+    events — the timeout path, which built-in session_window cannot
+    express with custom state.  Emits one row per CLOSED session; times
+    are integer microseconds, exact across any batch boundary.  On the
+    bounded replay the flush sentinels advance the watermark past every
+    real event, firing the final timeouts; sentinel rows (user_id < 0)
+    are dropped by the caller AFTER the sink, never before the watermark
+    node.
 
-    Why this is the production shape for custom keyed state at scale: the
-    fine-grained version pays the per-group Python/Arrow floor for every
-    user every batch (~1 ms x |users|); this version pays it per BUCKET
-    (a fixed, chosen number), and the per-user work inside the bucket is
-    plain in-memory dict/array manipulation — the same technique as
-    reducer-side key coarsening in MapReduce-era sessionizers. Bucket
-    count is a parallelism-vs-overhead knob: >= shuffle partitions keeps
-    all cores busy; far below |users| kills the constant.
+    The state key is COARSENED: ``pmod(user_id, SESSION_BUCKETS)``
+    instead of the raw user id, one state entry per bucket holding every
+    open session of the bucket's users as parallel arrays.  A per-user
+    key would pay the per-group Python/Arrow floor for every user every
+    batch (~1 ms x |users|); this pays it per BUCKET (a fixed, chosen
+    number), and the per-user work inside the bucket is plain in-memory
+    dict/array manipulation — reducer-side key coarsening, as in
+    MapReduce-era sessionizers.  Bucket count is a parallelism-vs-overhead
+    knob: >= shuffle partitions keeps all cores busy; far below |users|
+    kills the constant.
 
     Timeout handling is the subtle part: a bucket's timeout must fire at
     the EARLIEST (last_ts + gap) across its open sessions; when it fires,
     only sessions actually due at the current watermark close
-    (``state.getCurrentWatermarkMs()``), the rest re-arm. Output rows are
-    identical to the fine-grained operator — both run against the same
-    gaps-and-islands oracle."""
+    (``state.getCurrentWatermarkMs()``), the rest re-arm.  Output rows
+    are checked against the gaps-and-islands oracle."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (

@@ -1,16 +1,15 @@
 #!/usr/bin/env python
-"""Driver-contract simulation (see /root/repo/.claude/skills/verify).
+"""Driver-contract simulation (see .claude/skills/verify).
 
 Plain SparkSession (driver conditions: ANSI on, Etc/UTC), __spark_entry__
-imported fresh, every queries() entry value-hash-compared against
-oracle_sql() on DuckDB at sf0.01. Prints per-query status + total wall.
+imported fresh, every queries() entry compared against oracle_sql() on
+DuckDB with ``oracle.compare_frames`` (exact cells, row and column order
+ignored). Prints per-query status + total wall.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 import time
@@ -18,7 +17,6 @@ import time
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -26,34 +24,9 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # contains one of them (fast iteration on a changed query family)
 NAME_FILTER = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 # optional CERT_OUT=<path>: write the full per-query certification record
-# (name -> rows/hash/sec/status) so auditors can diff a round's complete
-# sweep without re-running it (the committed CERT_FULL_r{N}.json artifact)
+# (name -> rows/sec/status) so a sweep can be diffed without re-running it;
+# the record is written on demand, not committed
 CERT_OUT = os.environ.get("CERT_OUT")
-
-
-def norm_cell(v):
-    if v is None or (isinstance(v, float) and math.isnan(v)):
-        return "NULL"
-    if isinstance(v, float):
-        return repr(round(v, 9))
-    return repr(v)
-
-
-def frame_hash(pdf: pd.DataFrame) -> tuple[int, str]:
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for col in pdf.columns:
-        s = pdf[col]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            pdf[col] = s.astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(s):
-            pdf[col] = s.astype("Int64")
-        elif pd.api.types.is_float_dtype(s):
-            pdf[col] = s.astype("float64")
-    rows = sorted(
-        tuple(norm_cell(v) for v in row) for row in pdf.itertuples(index=False)
-    )
-    h = hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
-    return len(pdf), h
 
 
 def main() -> None:
@@ -73,7 +46,10 @@ def main() -> None:
     assert n >= 0, "entry() must produce >=0 rows"
     print(f"[drive] entry(): {n} rows ok", file=sys.stderr)
 
-    from energy_emissions_lakehouse_spark.oracle import duckdb_connection
+    from energy_emissions_lakehouse_spark.oracle import (
+        compare_frames,
+        duckdb_connection,
+    )
 
     con = duckdb_connection(SF_DIR)
 
@@ -84,27 +60,20 @@ def main() -> None:
         if NAME_FILTER and not any(s in name for s in NAME_FILTER):
             continue
         tq = time.perf_counter()
-        rows, vhash = None, None
+        rows = None
         try:
             spdf = queries[name](spark, SF_DIR).toPandas()
-            rows, vhash = frame_hash(spdf)
+            rows = len(spdf)
             if name not in oracles:
-                status = f"rows-only ({len(spdf)})"
+                status = f"rows-only ({rows})"
             else:
-                opdf = con.execute(oracles[name]).df()
-                on_, oh = frame_hash(opdf)
-                if rows != on_:
-                    status = f"FAIL rows {rows}!={on_}"
-                elif vhash != oh:
-                    status = f"FAIL hash {vhash}!={oh}"
-                else:
-                    status = "ok"
+                detail = compare_frames(spdf, con.execute(oracles[name]).df())
+                status = "ok" if detail is None else f"FAIL {detail}"
         except Exception as exc:  # noqa: BLE001
             status = f"FAIL exc {type(exc).__name__}: {exc}"
         timings[name] = round(time.perf_counter() - tq, 2)
         cert[name] = {
             "rows": rows,
-            "hash": vhash,
             "sec": timings[name],
             "status": status,
         }

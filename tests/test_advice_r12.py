@@ -1,17 +1,13 @@
-"""Regression pins for the round-11 ADVICE items + verdict item 1
-(fixed in round 12).
+"""Regression pins for the round-11 ADVICE items (fixed in round 12).
 
-1. verdict item 1 — bench.py's headline set is DERIVED from the query
-   registry (headline = sorted(registry) - DEMONSTRATORS); the identity
-   is pinned here so no registered query can silently leave the metric.
-2. low — vtable DV-fold memo under racing threads: it is a bounded,
+1. low — vtable DV-fold memo under racing threads: it is a bounded,
    thread-safe functools.lru_cache; the thread tests of the session memo
    live in tests/test_staging.py.
-3. low — vtable_ndv_inset_pushdown's used_inset flag matches CONCRETE
+2. low — vtable_ndv_inset_pushdown's used_inset flag matches CONCRETE
    join-exec node names, not the bare substring "Join"; pin that a real
    semi-join fallback plan on this Spark version contains at least one
    of the matched node names (rename-drift canary).
-4. low — vtable_stream._entry_bytes: a vacuumed pre-rev segment globs
+3. low — vtable_stream._entry_bytes: a vacuumed pre-rev segment globs
    to zero part files = UNKNOWN size, not 0 bytes; the byte cap must
    admit such a version alone instead of batching an arbitrarily long
    run of them.
@@ -26,11 +22,9 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-import bench
 from energy_emissions_lakehouse_spark.operators.vtable import (
     VersionedTable,
 )
-from energy_emissions_lakehouse_spark.registry import all_queries
 from energy_emissions_lakehouse_spark.sources.vtable_stream import (
     VtableStreamReader,
 )
@@ -50,33 +44,7 @@ def _keyed(spark, lo, hi):
     )
 
 
-# ------------------------------------------- 1. derived headline set
-
-def test_bench_headline_is_registry_minus_demonstrators():
-    queries = all_queries()
-    headline = bench.headline_names(queries)
-    assert set(headline) | set(bench.DEMONSTRATORS) == set(queries), (
-        "every registered query must be headline or a labeled "
-        "demonstrator — nothing silently outside the metric"
-    )
-    assert not set(headline) & set(bench.DEMONSTRATORS)
-    assert len(headline) == len(queries) - len(bench.DEMONSTRATORS)
-    assert headline == sorted(headline)
-    # the two round-12 demotions are labeled, with headline twins
-    for name, twin in (
-        ("sessionize_grouped_map", "events_sessionization"),
-        ("cogroup_user_conversion", "events_funnel_conversion"),
-    ):
-        assert name in bench.DEMONSTRATORS
-        assert twin in headline
-
-
-def test_bench_headline_rejects_unregistered_demonstrator():
-    with pytest.raises(SystemExit, match="DEMONSTRATORS not in registry"):
-        bench.headline_names(["only_this_query"])
-
-
-# --------------------------- 3. used_inset node-name matcher canary
+# --------------------------- 2. used_inset node-name matcher canary
 
 def test_inset_flag_node_names_match_real_fallback_plan(spark, root):
     """The used_inset detector claims a semi-join fallback plan contains
@@ -115,7 +83,7 @@ def test_ndv_inset_pushdown_query_flag_true(spark, sf_dir):
     assert rows and all(r["used_inset"] for r in rows)
 
 
-# ------------------- 4. vacuumed segment = unknown size, not 0 bytes
+# ------------------- 3. vacuumed segment = unknown size, not 0 bytes
 
 def test_entry_bytes_vacuumed_segment_saturates_cap(spark, root):
     vt = VersionedTable.create(spark, root, _keyed(spark, 0, 10))

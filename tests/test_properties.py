@@ -68,17 +68,22 @@ def test_scaled_sum_is_partition_invariant(spark):
 
 
 def test_survey_coverage_map_is_complete():
-    """Every registered query must have a row in SURVEY.md §8 — the
-    judge-facing coverage map can never silently drift from the code."""
+    """SURVEY.md §8 documents exactly the registered queries — none
+    missing from the coverage map, and no row naming a query that no
+    longer exists."""
     import re
+    from pathlib import Path
 
     from energy_emissions_lakehouse_spark.registry import all_queries
 
-    table = open("SURVEY.md").read()
-    documented = set(re.findall(r"^\| `([a-z0-9_]+)` \|", table, re.M))
+    survey = (Path(__file__).resolve().parents[1] / "SURVEY.md").read_text()
+    section8 = survey[survey.index("\n## 8. "):]
+    documented = set(re.findall(r"^\| `([a-z0-9_]+)` \|", section8, re.M))
     registered = set(all_queries())
     missing = registered - documented
     assert not missing, f"queries missing from SURVEY §8: {sorted(missing)}"
+    stale = documented - registered
+    assert not stale, f"SURVEY §8 rows for unregistered queries: {sorted(stale)}"
 
 
 def test_observe_metrics_match_separate_aggregate(spark, sf_dir):

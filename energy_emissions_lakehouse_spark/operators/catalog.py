@@ -74,6 +74,8 @@ from energy_emissions_lakehouse_spark.operators.vtable import (
     ConcurrentCommitError,
     VersionedTable,
     _fmt_version,
+    claim_commit,
+    log_versions,
 )
 
 CATALOG_DIR = "_catalog"
@@ -229,11 +231,7 @@ class TableCatalog:
         return os.path.join(self._dir, _fmt_version(version) + ".json")
 
     def _versions(self) -> list[int]:
-        return sorted(
-            int(n[: -len(".json")])
-            for n in os.listdir(self._dir)
-            if n.endswith(".json") and n[: -len(".json")].isdigit()
-        )
+        return log_versions(self._dir)
 
     def latest_version(self) -> int:
         versions = self._versions()
@@ -246,35 +244,16 @@ class TableCatalog:
             return json.load(fh)
 
     def _commit(self, version: int, entries: dict, op: str) -> None:
-        """Atomically claim catalog ``version`` — same scratch-then-link
-        protocol as the table log: one writer wins, a torn map is never
+        """Atomically claim catalog ``version`` — the table log's claim
+        (:func:`claim_commit`): one writer wins, a torn map is never
         visible under the final name."""
-        payload = {
-            "version": version,
-            "op": op,
-            "tables": entries,
-            "ts": time.time(),
-        }
-        final = self._path(version)
-        scratch = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        with open(scratch, "w") as fh:
-            json.dump(payload, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(scratch, final)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"catalog version {version} of {self.root} was committed "
-                "by another writer — re-read and retry"
-            ) from None
-        finally:
-            # never raise from cleanup after a successful publish — the
-            # caller would retry a transaction that actually committed
-            try:
-                os.unlink(scratch)
-            except OSError:
-                pass
+        claim_commit(
+            self._path(version),
+            {"version": version, "op": op, "tables": entries,
+             "ts": time.time()},
+            f"catalog version {version} of {self.root} was committed by "
+            "another writer — re-read and retry",
+        )
 
     # --------------------------------------------------------------- reading
     def entries(self, version: int | None = None) -> dict[str, dict]:

@@ -102,16 +102,14 @@ def upsert_partition_scoped(
     # Materialize before the write: the plan reads the same path it
     # overwrites. Size = touched partitions only (the delta, not the table).
     merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # dynamic overwrite as a per-write option: only the touched partitions
+    # are replaced, and the session conf is never touched
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
 
 
 def insert_missing(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFrame:

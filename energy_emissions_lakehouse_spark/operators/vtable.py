@@ -117,6 +117,10 @@ INDEX_DIR = "_index"
 #: Column names the DV machinery appends to identified scans — user
 #: schemas must not collide (enforced at segment write time).
 _DV_IDENTITY_COLS = ("_dv_seg", "_dv_file", "_dv_pos")
+#: Per-segment stats keys the commit log stores beside column names —
+#: user columns must not collide either (same check, see
+#: :func:`_require_unreserved`).
+_STATS_KEYS = ("__hll__", "__bytes__", "__mcv__")
 #: Column names the change-feed / provenance READ surfaces append to
 #: served rows.  Unlike the DV identity triple these are NOT rejected
 #: at write time — a CDC-ingest table may legitimately STORE such a
@@ -328,17 +332,15 @@ def _fmt_version(version: int) -> str:
 # "what is a commit file" — a second copy once dropped the isdigit guard
 # and crashed on stray JSON in _log/.
 
-def log_versions(root: str) -> list[int]:
-    """All committed versions under ``root``, oldest first.  Non-numeric
-    .json files (future protocol/metadata files, editor artifacts) are
-    ignored by design."""
-    out = []
-    for name in os.listdir(os.path.join(root, LOG_DIR)):
-        if name.endswith(".json") and not name.endswith(".checkpoint.json"):
-            stem = name[: -len(".json")]
-            if stem.isdigit():
-                out.append(int(stem))
-    return sorted(out)
+def log_versions(log_dir: str) -> list[int]:
+    """All committed versions in the log directory ``log_dir``, oldest
+    first.  Non-numeric .json files (checkpoints, future protocol/metadata
+    files, editor artifacts) are ignored by design."""
+    return sorted(
+        int(name[: -len(".json")])
+        for name in os.listdir(log_dir)
+        if name.endswith(".json") and name[: -len(".json")].isdigit()
+    )
 
 
 def read_commit(root: str, version: int) -> dict:
@@ -346,6 +348,81 @@ def read_commit(root: str, version: int) -> dict:
         os.path.join(root, LOG_DIR, _fmt_version(version) + ".json")
     ) as fh:
         return json.load(fh)
+
+
+def claim_commit(final: str, payload: dict, taken: str) -> None:
+    """Atomically publish ``payload`` as the commit file ``final``.  The
+    full payload lands in a scratch file first; ``os.link`` to the final
+    name either wins or raises :class:`ConcurrentCommitError` (message
+    ``taken``) — a reader can never see a partially written commit under
+    its final name.  The one claim of both the table log and the catalog
+    log (operators/catalog.py)."""
+    scratch = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    with open(scratch, "w") as fh:
+        json.dump(payload, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(scratch, final)
+    except FileExistsError:
+        raise ConcurrentCommitError(taken) from None
+    finally:
+        # A PUBLISHED commit must never raise from cleanup: if the
+        # scratch vanished (a grace-zero vacuum's log-scratch sweep, or
+        # an external cleaner), raising here would make the caller retry
+        # an op that actually landed — a double-apply.  A stranded
+        # scratch (unlink failing some other way) is harmless litter
+        # vacuum reclaims.
+        try:
+            os.unlink(scratch)
+        except OSError:
+            pass
+
+
+def _require_unreserved(columns: list[str]) -> None:
+    """Reject a user column named like a deletion-vector identity column
+    or a per-segment stats key of the commit log — the one reserved-name
+    check every write runs before its batch can reach a commit."""
+    for c in columns:
+        if c in _DV_IDENTITY_COLS:
+            raise ValueError(
+                f"column {c!r} collides with the reserved "
+                f"deletion-vector identity names {_DV_IDENTITY_COLS}"
+            )
+        if c in _STATS_KEYS:
+            raise ValueError(
+                f"column {c!r} collides with a reserved per-segment stats "
+                "key in the commit log — rename it"
+            )
+
+
+def _type_names(schema: StructType) -> dict[str, str]:
+    """``{column: simpleString type}`` of ``schema``."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def _schema_fit(
+    batch: StructType, table: StructType, op: str, castable: bool
+) -> bool:
+    """Schema-on-write (Delta semantics): mixed-type segments under one
+    log would poison every later read, so an incompatible batch is
+    rejected AT WRITE TIME.  Nullability is ignored (parquet does not
+    round-trip it strictly).  True when ``batch`` matches ``table``
+    exactly; False when, with ``castable``, it differs only by lossless
+    widenings the caller casts away (a DataFrame can be upcast, an
+    already-written segment cannot); anything else raises."""
+    got = [(f.name, f.dataType) for f in batch.fields]
+    want = [(f.name, f.dataType) for f in table.fields]
+    if got == want:
+        return True
+    if castable and [g[0] for g in got] == [w[0] for w in want] and all(
+        g[1] == w[1] or _is_widening(g[1], w[1]) for g, w in zip(got, want)
+    ):
+        return False
+    raise ValueError(
+        f"{op}: schema-on-write violation — table has {want}, "
+        f"batch has {got}; use overwrite() to evolve the schema"
+    )
 
 
 #: lossless widenings the parquet scan layer performs at read time
@@ -691,16 +768,11 @@ class VersionedTable:
         retryable."""
         # validate BEFORE any mkdir: a rejected create must leave no
         # half-created root (the retry would hit 'already exists')
-        clash = [c for c in df.columns if c in _DV_IDENTITY_COLS]
-        if clash:
-            raise ValueError(
-                f"column {clash[0]!r} collides with the reserved "
-                f"deletion-vector identity names {_DV_IDENTITY_COLS}"
-            )
+        _require_unreserved(df.columns)
+        types = _type_names(df.schema)
         if bloom_cols:
             if bloom_bits < 64 or bloom_k < 1:
                 raise ValueError("bloom_bits must be >= 64, bloom_k >= 1")
-            types = {f.name: f.dataType.simpleString() for f in df.schema}
             bad = [
                 c for c in bloom_cols
                 if types.get(c) not in _BLOOMABLE_TYPES
@@ -719,7 +791,6 @@ class VersionedTable:
             # segment, folded to a table-level NDV estimate the planner
             # consumes (table_ndv / distinct_filter).  Sketchable types
             # follow hll_sketch_agg's domain.
-            types = {f.name: f.dataType.simpleString() for f in df.schema}
             bad = [
                 c for c in ndv_cols
                 if types.get(c)
@@ -732,64 +803,103 @@ class VersionedTable:
                     "supports integral and string columns "
                     "(hll_sketch_agg domain)"
                 )
-            if "__hll__" in types or "__mcv__" in types:
-                raise ValueError(
-                    "ndv_cols: a column named '__hll__'/'__mcv__' "
-                    "collides with a reserved per-segment stats key in "
-                    "the commit log — rename it or skip NDV sketching"
-                )
         if constraints:
             # still pre-mkdir: bad names/expressions must reject the
             # create before anything lands on disk.  (Whether the DATA
             # satisfies them needs the written segment — that failure
-            # path tears the root down below.)
+            # path tears the root down, see _commit_create.)
             _check_constraint_defs(spark, constraints, df.schema)
         log_dir = os.path.join(root, LOG_DIR)
         if os.path.isdir(log_dir):
             raise FileExistsError(f"versioned table already exists: {root}")
+        # exclusive: a concurrent creator fails here, so the teardown
+        # in _commit_create only ever removes this create's own log
         os.makedirs(log_dir, mode=0o700)
-        os.makedirs(os.path.join(root, DATA_DIR), mode=0o700, exist_ok=True)
-        table = cls(spark, root)
         props: dict = {"enableChangeDataFeed": bool(enable_cdf)}
-        # pre-seed the property caches: the v0 _commit below runs before
-        # commit 0 exists on disk, so the lazy commit-0 read would fail
-        table._bloom_props = ([], 0, 0)
         if bloom_cols:
             props["bloomFilterColumns"] = list(bloom_cols)
             props["bloomBits"] = int(bloom_bits)
             props["bloomK"] = int(bloom_k)
-            os.makedirs(os.path.join(root, INDEX_DIR), mode=0o700)
-            table._bloom_props = (list(bloom_cols), bloom_bits, bloom_k)
         if constraints:
             props["constraints"] = dict(constraints)
-        table._ndv_cols = list(ndv_cols or [])
         if ndv_cols:
             props["ndvColumns"] = list(ndv_cols)
-        add = [table._write_segment(df, 0)]
-        if constraints:
-            # data validation needs the written segment (the input plan
-            # is computed exactly once); a violation means NOTHING ever
-            # referenced this root — tear down what THIS create made
-            # (the root directory may pre-exist with unrelated user
-            # files, which must survive) so the call is retryable, then
-            # raise like any rejected write
+        table = cls._init_root(spark, root, props)
+        return table._commit_create(
+            table._write_segment(df, 0), df.schema, props
+        )
+
+    @classmethod
+    def create_segment(
+        cls, spark: SparkSession, root: str, rel: str, schema: StructType
+    ) -> "VersionedTable":
+        """:meth:`create` with default table properties over an
+        ALREADY-WRITTEN segment ``rel`` holding rows of ``schema`` — the
+        batch-sink path (``df.write.format("eel_vtable")`` to a new
+        root): tasks streamed the batch under ``root`` before any log
+        existed.  Same checks and the same version-0 commit as create.
+        When another creator claims version 0 first this raises
+        :class:`ConcurrentCommitError`: the table exists now, and the
+        caller writes to it instead."""
+        _require_unreserved(schema.fieldNames())
+        props = {"enableChangeDataFeed": False}
+        return cls._init_root(spark, root, props)._commit_create(
+            rel, schema, props
+        )
+
+    @classmethod
+    def _init_root(
+        cls, spark: SparkSession, root: str, props: dict
+    ) -> "VersionedTable":
+        """A handle on ``root`` ahead of its version 0: the log and data
+        directories made (on the sink path an empty log a concurrent
+        creator made is shared — the version-0 claim decides the race;
+        :meth:`create` made its log exclusively before), and the property
+        caches seeded from ``props``, because the version-0 commit reads
+        them before commit 0 exists on disk."""
+        subs = [LOG_DIR, DATA_DIR]
+        if props.get("bloomFilterColumns"):
+            subs.append(INDEX_DIR)
+        for sub in subs:
+            os.makedirs(os.path.join(root, sub), mode=0o700, exist_ok=True)
+        table = cls(spark, root)
+        table._bloom_props = (
+            list(props.get("bloomFilterColumns", [])),
+            int(props.get("bloomBits", 0)),
+            int(props.get("bloomK", 0)),
+        )
+        table._ndv_cols = list(props.get("ndvColumns", []))
+        return table
+
+    def _commit_create(
+        self, rel: str, schema: StructType, props: dict
+    ) -> "VersionedTable":
+        """The commit half of every create: validate the written segment
+        ``rel`` against the create-time constraints, then claim version
+        0 with ``props`` as the table properties.  A violation means
+        NOTHING ever referenced this root — tear down what the create
+        made (the root directory may pre-exist with unrelated user
+        files, which must survive) so the call is retryable, then raise
+        like any rejected write."""
+        cons = props.get("constraints")
+        if cons:
             try:
-                table._enforce_constraints(add, dict(constraints), "create")
+                self._enforce_constraints([rel], dict(cons), "create")
             except ConstraintViolationError:
                 for sub in (LOG_DIR, DATA_DIR, INDEX_DIR):
                     shutil.rmtree(
-                        os.path.join(root, sub), ignore_errors=True
+                        os.path.join(self.root, sub), ignore_errors=True
                     )
                 try:
-                    os.rmdir(root)  # only if nothing else lives there
+                    os.rmdir(self.root)  # only if nothing else lives there
                 except OSError:
                     pass
                 raise
-        table._commit(
-            0, "create", add=add, remove=[], schema=df.schema,
+        self._commit(
+            0, "create", add=[rel], remove=[], schema=schema,
             extra={"properties": props},
         )
-        return table
+        return self
 
     @property
     def cdf_enabled(self) -> bool:
@@ -1000,7 +1110,7 @@ class VersionedTable:
         )
 
     def _versions(self) -> list[int]:
-        return log_versions(self.root)
+        return log_versions(self._log_dir)
 
     def latest_version(self) -> int:
         versions = self._versions()
@@ -1020,10 +1130,8 @@ class VersionedTable:
         schema: StructType,
         extra: dict | None = None,
     ) -> None:
-        """Atomically claim ``version``.  Full payload lands in a scratch
-        file first; ``os.link`` to the final name either wins (EEXIST-free)
-        or raises :class:`ConcurrentCommitError` — a reader can never see a
-        partially written commit under its final name."""
+        """Atomically claim ``version`` (:func:`claim_commit`): wins, or
+        raises :class:`ConcurrentCommitError`."""
         # bloom sidecars before the commit is published: a claimed commit
         # always has its index (a crash before the claim only strands
         # sidecar files alongside the orphan segment — vacuum pairs them)
@@ -1138,30 +1246,11 @@ class VersionedTable:
             "ts": time.time(),
             **(extra or {}),
         }
-        final = self._commit_path(version)
-        scratch = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        with open(scratch, "w") as fh:
-            json.dump(payload, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(scratch, final)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"version {version} of {self.root} was committed by another "
-                f"writer — re-read the snapshot and retry"
-            ) from None
-        finally:
-            # A PUBLISHED commit must never raise from cleanup: if the
-            # scratch vanished (a grace-zero vacuum's log-scratch sweep,
-            # or an external cleaner), raising here would make the
-            # caller retry an op that actually landed — a double-apply.
-            # A stranded scratch (unlink failing some other way) is
-            # harmless litter vacuum reclaims.
-            try:
-                os.unlink(scratch)
-            except OSError:
-                pass
+        claim_commit(
+            self._commit_path(version), payload,
+            f"version {version} of {self.root} was committed by another "
+            "writer — re-read the snapshot and retry",
+        )
         if version > 0 and version % CHECKPOINT_EVERY == 0:
             # Best-effort: a lost/failed checkpoint only means a longer
             # tail replay, never a wrong snapshot.
@@ -1650,25 +1739,12 @@ class VersionedTable:
     # ------------------------------------------------------------ data layer
     def _write_segment(self, df: DataFrame, version_hint: int) -> str:
         """Write one immutable parquet segment; returns its log-relative
-        path.  Invisible until some commit references it.  The single
-        choke point every schema enters through (create / append /
-        evolve / overwrite / merge), so the DV identity names are
-        reserved here."""
-        clash = [c for c in df.columns if c in _DV_IDENTITY_COLS]
-        if clash:
-            raise ValueError(
-                f"column {clash[0]!r} collides with the reserved "
-                f"deletion-vector identity names {_DV_IDENTITY_COLS}"
-            )
-        reserved_stats = [
-            c for c in df.columns
-            if c in ("__hll__", "__bytes__", "__mcv__")
-        ]
-        if reserved_stats:
-            raise ValueError(
-                f"column {reserved_stats[0]!r} collides with a reserved "
-                "per-segment stats key in the commit log — rename it"
-            )
+        path.  Invisible until some commit references it.  The choke
+        point every DataFrame batch enters through (create / append /
+        evolve / overwrite / merge), so the reserved names are checked
+        here; an already-written segment gets the same checks from
+        :meth:`_admit_segment`."""
+        _require_unreserved(df.columns)
         rel = os.path.join(
             DATA_DIR, f"{_fmt_version(version_hint)}-{uuid.uuid4().hex[:8]}"
         )
@@ -1702,21 +1778,7 @@ class VersionedTable:
         dir-name rendering."""
         from urllib.parse import unquote
 
-        clash = [c for c in df.columns if c in _DV_IDENTITY_COLS]
-        if clash:
-            raise ValueError(
-                f"column {clash[0]!r} collides with the reserved "
-                f"deletion-vector identity names {_DV_IDENTITY_COLS}"
-            )
-        reserved_stats = [
-            c for c in df.columns
-            if c in ("__hll__", "__bytes__", "__mcv__")
-        ]
-        if reserved_stats:
-            raise ValueError(
-                f"column {reserved_stats[0]!r} collides with a reserved "
-                "per-segment stats key in the commit log — rename it"
-            )
+        _require_unreserved(df.columns)
         for f in spec:
             pinned_tz = f.get("tz")
             if pinned_tz:
@@ -2357,12 +2419,9 @@ class VersionedTable:
         )
 
     def _require_schema(self, df: DataFrame, op: str) -> DataFrame:
-        """Schema-on-write enforcement (Delta semantics): mixed-type
-        segments under one log would poison every later read, so an
-        incompatible batch is rejected AT WRITE TIME.  Nullability is
-        ignored (parquet does not round-trip it strictly); ``overwrite``
-        is exempt — it replaces the whole live set, so it MAY evolve the
-        schema (Delta's overwriteSchema).
+        """Schema-on-write (:func:`_schema_fit`) for a DataFrame batch;
+        ``overwrite`` is exempt — it replaces the whole live set, so it
+        MAY evolve the schema (Delta's overwriteSchema).
 
         Returns the batch ALIGNED to the table schema: after
         :meth:`widen_column_type`, a writer still producing the
@@ -2373,24 +2432,29 @@ class VersionedTable:
         current = StructType.fromJson(
             self._read_commit(self.latest_version())["schema"]
         )
-        got = [(f.name, f.dataType) for f in df.schema.fields]
-        want = [(f.name, f.dataType) for f in current.fields]
-        if got == want:
+        if _schema_fit(df.schema, current, op, castable=True):
             return df
-        if [g[0] for g in got] == [w[0] for w in want] and all(
-            g[1] == w[1] or _is_widening(g[1], w[1])
-            for g, w in zip(got, want)
-        ):
-            return df.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in current.fields
-                ]
-            )
-        raise ValueError(
-            f"{op}: schema-on-write violation — table has {want}, "
-            f"batch has {got}; use overwrite() to evolve the schema"
+        return df.select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in current.fields
+            ]
         )
+
+    def _admit_segment(
+        self, rel: str, schema: StructType, s: dict, op: str
+    ) -> None:
+        """What a write runs over its batch, run over an ALREADY-WRITTEN
+        segment ``rel`` holding rows of ``schema`` before snapshot ``s``
+        can commit it: the reserved-name check, schema-on-write — exact,
+        since a written file cannot be cast — and the head's CHECK
+        constraints (a violation deletes the segment)."""
+        _require_unreserved(schema.fieldNames())
+        _schema_fit(
+            schema, StructType.fromJson(s["entry"]["schema"]), op,
+            castable=False,
+        )
+        self._enforce_constraints([rel], s["constraints"], op)
 
     def append(self, df: DataFrame) -> int:
         """INSERT — a BLIND append (reads nothing): on a lost commit race
@@ -2403,13 +2467,30 @@ class VersionedTable:
         spec = self.partition_spec()
         if spec:
             add, pvs = self._write_partitioned(df, v + 1, spec)
-            return self._commit_rebased(
-                v, "append", add=add, remove=[], schema=df.schema,
-                extra={"pv": pvs}, blind=True,
-            )
-        add = [self._write_segment(df, v + 1)]
+        else:
+            add, pvs = [self._write_segment(df, v + 1)], None
+        return self._commit_append(v, add, df.schema, pvs)
+
+    def append_segment(self, rel: str, schema: StructType) -> int:
+        """:meth:`append` of an ALREADY-WRITTEN segment ``rel`` holding
+        rows of ``schema`` — the batch-sink path (``df.write
+        .format("eel_vtable").mode("append")``): tasks streamed the
+        batch into ``rel``; this commits it without re-writing the data,
+        after the checks of :meth:`_admit_segment`.  The segment is
+        unpartitioned whatever the spec (never pruned by partition
+        values)."""
+        s = self._replay()
+        self._admit_segment(rel, schema, s, "append")
+        return self._commit_append(s["version"], [rel], schema)
+
+    def _commit_append(
+        self, v: int, add: list[str], schema: StructType,
+        pvs: dict | None = None,
+    ) -> int:
+        """The commit half of every append, read at version ``v``."""
         return self._commit_rebased(
-            v, "append", add=add, remove=[], schema=df.schema, blind=True,
+            v, "append", add=add, remove=[], schema=schema,
+            extra=None if pvs is None else {"pv": pvs}, blind=True,
         )
 
     def idempotent_append(
@@ -2598,7 +2679,8 @@ class VersionedTable:
             raise ValueError(f"rename_column: no column {old!r} ({names})")
         if new in names:
             raise ValueError(f"rename_column: column {new!r} exists")
-        if new in _DV_IDENTITY_COLS or new in _FEED_COLS:
+        _require_unreserved([new])
+        if new in _FEED_COLS:
             raise ValueError(
                 f"rename_column: {new!r} is a reserved internal name"
             )
@@ -2929,50 +3011,68 @@ class VersionedTable:
 
     def overwrite(self, df: DataFrame) -> int:
         s = self._replay()
-        v, live, entry = s["version"], s["live"], s["entry"]
+        entry = s["entry"]
         spec = entry.get("spec") or []
-        old_types = {
-            f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(entry["schema"]).fields
-        }
-        new_types = {
-            f.name: f.dataType.simpleString() for f in df.schema.fields
-        }
         # names AND rendering-stable spec-source types: a same-name
         # type-evolving replace (overwrite may evolve schema) on a
         # bucket/truncate/temporal spec source would write pv values
         # under the NEW type's rendering while _spec_probe hashes the
         # probe's — an unsound skip.  _spec_type_stable guards that the
         # way rename/drop/widen guard their spec sources.
-        type_stable = _spec_type_stable(spec, old_types, new_types)
-        extra_pv: dict = {}
         if (
             spec
-            and type_stable
             and [f.name for f in df.schema.fields]
             == [f["name"] for f in entry["schema"]["fields"]]
+            and _spec_type_stable(
+                spec,
+                _type_names(StructType.fromJson(entry["schema"])),
+                _type_names(df.schema),
+            )
         ):
             # same-shape overwrite: keep the layout contract (a replace
             # that EVOLVES the schema may invalidate spec columns — it
             # writes unpartitioned and the spec applies again from the
             # next same-shape write)
-            add, extra_pv = self._write_partitioned(df, v + 1, spec)
+            add, pvs = self._write_partitioned(df, s["version"] + 1, spec)
         else:
-            add = [self._write_segment(df, v + 1)]
-        # a whole-live-set replace leaves no pre-rename segment live:
-        # reset the rename chains (also what frees retired names for
-        # reuse after an overwriteSchema)
-        extra = {
-            "renames": {}, "dropped": {}, "widen": {}, "pv": extra_pv,
-        }
-        if spec and not type_stable:
-            # schema-evolving replace dropped a spec source column or
-            # changed its type out of the rendering-stable family: the
-            # spec cannot apply to future writes — reset it (metadata
-            # only), like the rename/drop chains
+            add, pvs = [self._write_segment(df, s["version"] + 1)], {}
+        return self._commit_overwrite(s, add, df.schema, pvs)
+
+    def overwrite_segment(self, rel: str, schema: StructType) -> int:
+        """:meth:`overwrite` with an ALREADY-WRITTEN segment ``rel``
+        holding rows of ``schema`` — the batch-sink path (``df.write
+        .format("eel_vtable").mode("overwrite")``).  ``schema`` may
+        evolve the table's (Delta overwriteSchema); the segment passes
+        the reserved-name check and the head's CHECK constraints, and is
+        unpartitioned, like an overwrite that evolves the schema."""
+        s = self._replay()
+        _require_unreserved(schema.fieldNames())
+        self._enforce_constraints([rel], s["constraints"], "overwrite")
+        return self._commit_overwrite(s, [rel], schema, {})
+
+    def _commit_overwrite(
+        self, s: dict, add: list[str], schema: StructType, pvs: dict
+    ) -> int:
+        """The commit half of every overwrite: ``add`` replaces snapshot
+        ``s``'s whole live set at the next version — no rebase, a lost
+        race raises :class:`ConcurrentCommitError`.  A whole-live-set
+        replace leaves no pre-rename segment live, so the rename, drop
+        and widen chains reset (also what frees retired names for reuse
+        after an overwriteSchema).  When ``schema`` dropped a spec
+        source column or changed its type out of the rendering-stable
+        family, the spec cannot apply to future writes: it resets too
+        (metadata only)."""
+        v, entry = s["version"], s["entry"]
+        spec = entry.get("spec") or []
+        extra = {"renames": {}, "dropped": {}, "widen": {}, "pv": pvs}
+        if spec and not _spec_type_stable(
+            spec,
+            _type_names(StructType.fromJson(entry["schema"])),
+            _type_names(schema),
+        ):
             extra["spec"] = []
         self._commit(
-            v + 1, "overwrite", add=add, remove=live, schema=df.schema,
+            v + 1, "overwrite", add=add, remove=s["live"], schema=schema,
             extra=extra,
         )
         return v + 1
@@ -3149,7 +3249,10 @@ class VersionedTable:
         )
 
     def replace_where_segment(
-        self, new_rel: str | None, condition: Column | str
+        self,
+        new_rel: str | None,
+        condition: Column | str,
+        schema: StructType | None = None,
     ) -> int:
         """:meth:`overwrite_where` over an ALREADY-WRITTEN segment — the
         batch-sink path (``df.write.format("eel_vtable")
@@ -3158,11 +3261,12 @@ class VersionedTable:
         into one atomic predicate-scoped replace without re-writing the
         data.  Same contract as overwrite_where: every batch row must
         satisfy the predicate (validated from the written files,
-        O(delta)) and the batch passes the active CHECK constraints —
-        a rejected batch deletes the segment and leaves the table
-        unchanged.  ``new_rel=None`` is the empty batch: a pure
-        predicate delete."""
-        return self._replace_slice(condition, new_rel=new_rel)
+        O(delta)) and the segment passes :meth:`_admit_segment`'s
+        checks against ``schema``, the schema it was written with
+        (default: the table's) — a rejected batch deletes the segment
+        and leaves the table unchanged.  ``new_rel=None`` is the empty
+        batch: a pure predicate delete."""
+        return self._replace_slice(condition, new_rel=new_rel, schema=schema)
 
     def _replace_slice(
         self,
@@ -3170,6 +3274,7 @@ class VersionedTable:
         *,
         df: DataFrame | None = None,
         new_rel: str | None = None,
+        schema: StructType | None = None,
         desc: str | None = None,
         prune: tuple | None = None,
     ) -> int:
@@ -3179,18 +3284,18 @@ class VersionedTable:
         range (the probe a lost race is re-checked against); exact
         discovery narrows them to the touched ones.  The batch — a
         DataFrame (``df``, written here) or an already-written segment
-        (``new_rel``, the sink path; None for an empty batch) — is
-        validated row by row against the predicate before the slice
-        rewrite drops the matching rows and appends it."""
+        (``new_rel`` of ``schema``, the sink path; None for an empty
+        batch) — is validated row by row against the predicate before
+        the slice rewrite drops the matching rows and appends it."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         s = self._replay()
         v = s["version"]
-        schema = StructType.fromJson(s["entry"]["schema"])
+        table_schema = StructType.fromJson(s["entry"]["schema"])
         if df is not None:
             df = self._require_schema(df, "overwrite_where")
-        elif new_rel is not None and s["constraints"]:
-            self._enforce_constraints(
-                [new_rel], s["constraints"], "replace_where"
+        elif new_rel is not None:
+            self._admit_segment(
+                new_rel, schema or table_schema, s, "replace_where"
             )
         candidates, skipped = (
             self._prune_range(s, *prune) if prune else (s["live"], [])
@@ -3203,7 +3308,7 @@ class VersionedTable:
             new_rel = self._write_segment(df, v + 1)
         empty_new: str | None = None
         if new_rel is not None:
-            batch = self.spark.read.schema(schema).parquet(
+            batch = self.spark.read.schema(table_schema).parquet(
                 os.path.join(self.root, new_rel)
             )
             if batch.where(~match).limit(1).count():

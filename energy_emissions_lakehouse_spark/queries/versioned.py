@@ -510,131 +510,28 @@ def _staged_base(spark: SparkSession, sf_dir: str, fresh: bool = False) -> str:
     return staged_artifact("vtable", key, _populate, fresh=fresh)
 
 
-def staged_vtable(spark: SparkSession, sf_dir: str, fresh: bool = False):
-    """The staged 5-version orders vtable (build once, serve many)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table"))
-
-
-def staged_vtable_ranged(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
+def staged_vtable(
+    spark: SparkSession, sf_dir: str, table: str = "table",
+    fresh: bool = False,
 ):
-    """The staged key-ranged orders vtable (four quarter segments)."""
+    """One staged vtable of :func:`_staged_base` (build once, serve
+    many): ``table`` is the 5-version orders history, ``table_ranged``
+    the key-ranged layout (four quarter segments), ``table_zorder`` the
+    z-ordered one (16 clustered segments), ``table_mor`` the
+    deletion-vector history, ``table_bloom`` the bloom-indexed layout
+    (8 custkey-octile segments, bloom on o_orderkey), ``table_admin``
+    the RESTORE + CHECK-constraint customer table, ``table_dml`` the DML
+    table (MOR update + replaceWhere + COW update) and
+    ``table_dml_clone`` its zero-copy clone diverged at v4,
+    ``table_rename`` two renames + cross-rename DML, ``table_widen`` two
+    widens + cross-widen DML, and ``table_spec`` the hidden-partitioning
+    table (month spec -> bucket spec)."""
     from energy_emissions_lakehouse_spark.operators.vtable import (
         VersionedTable,
     )
 
     base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_ranged"))
-
-
-def staged_vtable_zorder(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged z-ordered orders vtable (16 clustered segments)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_zorder"))
-
-
-def staged_vtable_mor(spark: SparkSession, sf_dir: str, fresh: bool = False):
-    """The staged merge-on-read vtable (deletion-vector history)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_mor"))
-
-
-def staged_vtable_bloom(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged bloom-indexed orders vtable (8 custkey-octile
-    segments, bloom on o_orderkey)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_bloom"))
-
-
-def staged_vtable_admin(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged RESTORE + CHECK-constraint customer vtable."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_admin"))
-
-
-def staged_vtable_dml(spark: SparkSession, sf_dir: str, fresh: bool = False):
-    """The staged DML vtable (MOR update + replaceWhere + COW update)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_dml"))
-
-
-def staged_vtable_rename(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged column-rename vtable (two renames + cross-rename DML)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_rename"))
-
-
-def staged_vtable_widen(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged type-widening vtable (two widens + cross-widen DML)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_widen"))
-
-
-def staged_vtable_spec(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged hidden-partitioning vtable (month spec -> bucket spec)."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_spec"))
-
-
-def staged_vtable_dml_clone(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-):
-    """The staged zero-copy clone, diverged from the DML table at v4."""
-    from energy_emissions_lakehouse_spark.operators.vtable import (
-        VersionedTable,
-    )
-
-    base = _staged_base(spark, sf_dir, fresh=fresh)
-    return VersionedTable(spark, os.path.join(base, "table_dml_clone"))
+    return VersionedTable(spark, os.path.join(base, table))
 
 
 @register(
@@ -771,7 +668,7 @@ def vtable_stats_pruned_read(spark, sf_dir) -> DataFrame:
     full-table scan and a few files; correctness never depends on the
     pruning arithmetic because the residual filter re-applies the exact
     predicate."""
-    vt = staged_vtable_ranged(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_ranged")
     # pinned to v3 — the pristine four-quarter layout (v4 is the pruned
     # merge exercised by vtable_merge_pruned_rewrite)
     lo_max, hi_max = vt.column_range("o_orderkey", version=3)
@@ -819,7 +716,7 @@ def vtable_zorder_pruned_scan(spark, sf_dir) -> DataFrame:
     inside the scanned segments.  The same probe against the key-RANGED
     table would scan all four segments — linear sort on one dim cannot
     prune the other."""
-    vt = staged_vtable_zorder(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_zorder")
     lo, hi = vt.column_range("o_custkey")
     band_hi = lo + (hi - lo) // 8
     pruned = vt.read_pruned("o_custkey", lo, band_hi)
@@ -917,7 +814,7 @@ def vtable_merge_pruned_rewrite(spark, sf_dir) -> DataFrame:
     a full-table rewrite and a few files per merge.  The per-status
     count/checksum/price fingerprint catches a lost untouched segment, a
     double-applied update, or a dropped insert alike."""
-    vt = staged_vtable_ranged(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_ranged")
     return vt.read(4).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").cast("bigint").alias("key_checksum"),
@@ -1165,7 +1062,7 @@ def vtable_mor_deleted_read(spark, sf_dir) -> DataFrame:
     the materializing compact — a wrong DV fold (mask leaking onto
     appended rows, resurrected deletes, or a compact that re-applies
     cleared DVs) breaks value parity."""
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     return vt.read(4).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1212,7 +1109,7 @@ def vtable_mor_time_travel_masks(spark, sf_dir) -> DataFrame:
     """Per-version row count + key checksum over the 5-version DV
     history — pins that the version-scoped DV fold serves every snapshot
     correctly, including the post-compact reset."""
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     out = None
     for v in range(8):
         agg = vt.read(v).agg(
@@ -1243,7 +1140,7 @@ def vtable_mor_change_feed_window(spark, sf_dir) -> DataFrame:
     """change_feed(1, 2) over the MOR table: the only difference is DV #2,
     so every emitted row must be a delete whose pre-image matches the
     second predicate applied to the v1-alive rows."""
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     cdf = vt.change_feed(1, 2, keys=["o_orderkey"])
     return cdf.groupBy("change_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1275,7 +1172,7 @@ def vtable_bloom_point_lookup(spark, sf_dir) -> DataFrame:
     one octile segment) plus an absent probe (max+1) that must
     contribute nothing.  The residual predicate keeps correctness
     independent of pruning; the oracle is the plain relational filter."""
-    vt = staged_vtable_bloom(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_bloom")
     lo, hi = t(spark, sf_dir, "orders").agg(
         F.min("o_orderkey"), F.max("o_orderkey")
     ).collect()[0]
@@ -1313,7 +1210,7 @@ def vtable_mor_merge_read(spark, sf_dir) -> DataFrame:
     status 'R' and 1.2x price, every other row is untouched — a mask
     leaking onto unmatched rows, a lost insert, or a resurrected
     pre-merge row breaks value parity."""
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     return vt.read(5).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1343,7 +1240,7 @@ def vtable_mor_dv_compaction_identity(spark, sf_dir) -> DataFrame:
     to the two-DV v6 state it replaced — grouped on o_orderpriority, the
     dimension the v6 delete cut into, so a lost or doubled mask row
     breaks parity."""
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     return vt.read().groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1395,7 +1292,7 @@ def vtable_restore_read(spark, sf_dir) -> DataFrame:
     delete (BUILDING rows missing), resurrects the v2 evolve batch (+1M
     keys present), or misfolds the re-referenced segment breaks value
     parity.  Grouped on c_mktsegment, the dimension v1 deleted by."""
-    vt = staged_vtable_admin(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_admin")
     return vt.read().groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum("c_custkey").alias("key_checksum"),
@@ -1433,7 +1330,7 @@ def vtable_restore_time_travel(spark, sf_dir) -> DataFrame:
     """Per-version count + key checksum across the whole admin history,
     INCLUDING the versions the restore 'undid' — the proof that restore
     is additive history, not destruction."""
-    vt = staged_vtable_admin(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_admin")
     out = None
     for v in range(5):
         agg = vt.read(v).agg(
@@ -1481,7 +1378,7 @@ def vtable_constraint_audit(spark, sf_dir) -> DataFrame:
     head (enforcement is the invariant, the audit is the proof), and a
     what-if tightened floor (acctbal >= 0) counts its would-be
     violations in the same single aggregate pass."""
-    vt = staged_vtable_admin(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_admin")
     return vt.validate_constraints(
         extra_checks={"acctbal_nonneg": "c_acctbal >= 0.0"}
     ).orderBy("check_name")
@@ -1516,7 +1413,7 @@ def vtable_sql_source_mor_scan(spark, sf_dir) -> DataFrame:
         register_vtable_source,
     )
 
-    vt = staged_vtable_mor(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_mor")
     register_vtable_source(spark)
     src = spark.read.format("eel_vtable").option("path", vt.root).load()
     return src.groupBy("o_orderstatus").agg(
@@ -1553,7 +1450,7 @@ def vtable_sql_source_pushdown_point(spark, sf_dir) -> DataFrame:
         register_vtable_source,
     )
 
-    vt = staged_vtable_bloom(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_bloom")
     register_vtable_source(spark)
     lo, hi = t(spark, sf_dir, "orders").agg(
         F.min("o_orderkey"), F.max("o_orderkey")
@@ -1726,7 +1623,7 @@ def vtable_mor_update_read(spark, sf_dir) -> DataFrame:
     and 0.9x price, everything else is untouched — a mask leaking onto
     unmatched rows, a lost image, or an image diverging from the SET
     arithmetic breaks value parity."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     return vt.read(4).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1759,7 +1656,7 @@ def vtable_replace_where_read(spark, sf_dir) -> DataFrame:
     gone, the 'W' replacement batch is in, off-range images survive —
     a leaked slice row, a lost off-range image, or a replacement row
     drifting from the recompute breaks value parity."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     return vt.read(5).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1791,7 +1688,7 @@ def vtable_update_cow_head(spark, sf_dir) -> DataFrame:
     every other row keeps its original priority — an over-applied SET
     (touching 'W' or original rows) or an under-applied one breaks
     value parity."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     return vt.read().groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").alias("key_checksum"),
@@ -1819,7 +1716,7 @@ def vtable_update_change_feed(spark, sf_dir) -> DataFrame:
     """change_feed(3, 4) over the DML table: only the %23 keys may
     appear, all as updates, with price_pre/price_post matching the SET
     arithmetic exactly."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     cdf = vt.change_feed(3, 4, keys=["o_orderkey"])
     return cdf.groupBy("change_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1857,8 +1754,8 @@ def vtable_clone_divergence(spark, sf_dir) -> DataFrame:
     COW update; clone: a delete of even keys from the v4 state it was
     cloned at) — a clone that leaks a source commit, shares log state,
     or corrupts a shared segment breaks either side's parity."""
-    vt = staged_vtable_dml(spark, sf_dir)
-    cl = staged_vtable_dml_clone(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
+    cl = staged_vtable(spark, sf_dir, "table_dml_clone")
 
     def _agg(table, side: str) -> DataFrame:
         return table.read().agg(
@@ -1904,7 +1801,7 @@ def vtable_cdf_mirror_sync(spark, sf_dir) -> DataFrame:
     shuffle on the key, nothing row-level on the driver."""
     from pyspark.sql.window import Window
 
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     head_v = vt.latest_version()
     changes = vt.read_changes(1, head_v).where(
         F.col("_change_type") != "update_preimage"
@@ -1957,7 +1854,7 @@ def vtable_incremental_agg_maintenance(spark, sf_dir) -> DataFrame:
     exactly — no float drift), full-outer-merge the base aggregate with
     the delta aggregate, drop groups whose count reaches zero.  Must
     equal the direct head aggregate value-exactly."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     head_v = vt.latest_version()
     cents = _price_cents()
     base = vt.read(3).groupBy("o_orderstatus").agg(
@@ -2021,7 +1918,7 @@ def stream_vtable_ivm(spark, sf_dir) -> DataFrame:
         run_to_table,
     )
 
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     register_vtable_source(spark)
     feed = (
         spark.readStream.format("eel_vtable")
@@ -2162,7 +2059,7 @@ def vtable_provenance_read(spark, sf_dir) -> DataFrame:
     head carries v4 — exactly what file provenance must report).  The
     oracle reconstructs the same assignment from key arithmetic
     alone."""
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     return (
         vt.read_with_provenance()
         .groupBy(F.col("_commit_version").alias("commit_version"))
@@ -2210,7 +2107,7 @@ def vtable_rename_read(spark, sf_dir) -> DataFrame:
     price_usd (v2 append), and the v3 MOR-update post-images — value
     parity proves the coalesce chain, the DV mask, and the doubled
     update arithmetic all compose."""
-    vt = staged_vtable_rename(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_rename")
     return vt.read().groupBy("status").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("o_orderkey").cast("long").alias("key_checksum"),
@@ -2248,7 +2145,7 @@ def vtable_rename_read(spark, sf_dir) -> DataFrame:
     tags=("vtable",),
 )
 def vtable_rename_time_travel(spark, sf_dir) -> DataFrame:
-    vt = staged_vtable_rename(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_rename")
     v0 = vt.read(0).agg(
         F.count(F.lit(1)).alias("n_orders"),
         scaled_sum(F.col("o_totalprice")).alias("total_price"),
@@ -2290,7 +2187,7 @@ def vtable_drop_column_history(spark, sf_dir) -> DataFrame:
     """v5 (note live: one non-null per evolve-appended row) vs head
     (note dropped: the -1 marker doubles as the schema assertion — it
     is only produced down the column-absent branch)."""
-    vt = staged_vtable_rename(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_rename")
     v5 = vt.read(5).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(
@@ -2333,7 +2230,7 @@ def vtable_sql_source_renamed_scan(spark, sf_dir) -> DataFrame:
         register_vtable_source,
     )
 
-    vt = staged_vtable_rename(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_rename")
     register_vtable_source(spark)
     src = (
         spark.read.format("eel_vtable").option("path", vt.root).load()
@@ -2394,7 +2291,7 @@ def vtable_type_widening_read(spark, sf_dir) -> DataFrame:
     """Head read of the widen table: value parity proves the per-file
     read-time upcast, the write-path narrow-batch upcast, the evolve
     alignment, and the DV mask all compose across type generations."""
-    vt = staged_vtable_widen(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_widen")
     return vt.read().groupBy(
         F.col("o_orderstatus").alias("status"), "src"
     ).agg(
@@ -2439,7 +2336,7 @@ def vtable_widen_time_travel(spark, sf_dir) -> DataFrame:
     """Era'd snapshot reads: dtypes come from the ACTUAL DataFrame
     schemas (not literals), so a widen map leaking backwards through
     time travel flips key_type/price_type and breaks parity."""
-    vt = staged_vtable_widen(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_widen")
 
     def era(label: str, df: DataFrame) -> DataFrame:
         dt = dict(df.dtypes)
@@ -2473,7 +2370,7 @@ def vtable_widen_time_travel(spark, sf_dir) -> DataFrame:
     survey="extension (lakehouse DDL x sources): the Python DataSource "
     "batch read over a WIDENED table — the commit log's widen map "
     "overrides the stale narrow footer types in the Arrow target "
-    "schema (sources/vtable_batch.py _target_schema_at), each file "
+    "schema (sources/vtable_stream.py _target_schema_at), each file "
     "upcast in align_arrow_table, DV masks applied; odd keys only, so "
     "the MOR post-images contribute nothing and parity proves masks + "
     "per-file upcast compose",
@@ -2484,7 +2381,7 @@ def vtable_sql_source_widened_scan(spark, sf_dir) -> DataFrame:
         register_vtable_source,
     )
 
-    vt = staged_vtable_widen(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_widen")
     register_vtable_source(spark)
     src = spark.read.format("eel_vtable").option("path", vt.root).load()
     return (
@@ -2581,7 +2478,7 @@ def vtable_partition_pruned_scan(spark, sf_dir) -> DataFrame:
     over-skip OR over-scan — breaks parity."""
     import datetime
 
-    vt = staged_vtable_spec(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_spec")
     snap = vt._replay()
     lo = datetime.datetime(1995, 3, 1)
     hi = datetime.datetime(1995, 3, 31, 23, 59, 59, 999999)
@@ -2658,7 +2555,7 @@ def vtable_stats_broadcast_join(spark, sf_dir) -> DataFrame:
     + log-stats broadcast): value parity proves the hinted plan reads
     the same head snapshot; the broadcast flip itself is plan-asserted
     in tests."""
-    vt = staged_vtable_admin(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_admin")
     dim = vt.read_source().select("c_custkey", "c_mktsegment")
     orders = t(spark, sf_dir, "orders")
     return (

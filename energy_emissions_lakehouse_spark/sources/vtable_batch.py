@@ -63,11 +63,12 @@ from pyspark.sql.types import StructType
 
 from energy_emissions_lakehouse_spark.operators.vtable import (
     DATA_DIR,
-    LOG_DIR,
     ConcurrentCommitError,
     VersionedTable,
     _literal_frame,
-    read_commit,
+)
+from energy_emissions_lakehouse_spark.sources.vtable_stream import (
+    _target_schema_at,
 )
 
 
@@ -85,104 +86,6 @@ class _BatchFile(InputPartition):
         #: rename chains (logical -> retired names) for per-file
         #: first-present-wins column resolution; {} = unrenamed table
         self.chains = chains or {}
-
-
-def _arrow_type_of(simple: str):
-    """Arrow type for a Spark simpleString (the widen map's value
-    encoding).  A static map, NOT Spark's DDL parser: this runs in the
-    Python DataSource planner worker, which has no SparkSession.  The
-    map is closed over the widening matrix's target types
-    (operators/vtable._WIDEN_OK + decimal), so an unknown string is a
-    protocol bug worth failing on."""
-    import re as _re
-
-    import pyarrow as pa
-
-    prim = {
-        "tinyint": pa.int8(),
-        "smallint": pa.int16(),
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-    }
-    if simple in prim:
-        return prim[simple]
-    m = _re.match(r"^decimal\((\d+),(\d+)\)$", simple)
-    if m:
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    raise ValueError(f"eel_vtable: unsupported widened type {simple!r}")
-
-
-def _target_schema_at(
-    root: str,
-    columns: list[str],
-    max_version: int,
-    chains: dict[str, list[str]] | None = None,
-    widen: dict[str, str] | None = None,
-):
-    """The snapshot's Arrow schema with EXACT physical types, resolved
-    driver-side PER COLUMN from the newest segment footer at or before
-    the snapshot carrying that column under any of its chain names
-    (same contract as the streaming reader's target, bounded to the
-    time-traveled version so a later evolution cannot leak its types
-    backwards; ``chains`` maps a renamed logical column to its retired
-    physical names — rename preserves the type, so the retired twin's
-    footer type IS the logical type).
-
-    ``widen`` (logical name -> widened simpleString, from the commit's
-    inherited widen map) OVERRIDES the footer type: after a metadata-only
-    :meth:`VersionedTable.widen_column_type` the newest footer may still
-    carry the narrow pre-DDL type — the logical type lives in the log,
-    and ``align_arrow_table`` upcasts each file to it."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    chains = chains or {}
-    widen_types = {c: _arrow_type_of(s) for c, s in (widen or {}).items()}
-
-    def _normalize(typ):
-        # Spark writes INT96 timestamps by default; pyarrow reads them
-        # as ns, which Spark's Arrow bridge rejects
-        # ([UNSUPPORTED_ARROWTYPE] Timestamp(NANOSECOND)).  Serve every
-        # timestamp as µs — align_arrow_table casts per file, and INT96
-        # values are UTC-normalized so the cast is a pure unit change.
-        if pa.types.is_timestamp(typ):
-            return pa.timestamp("us", tz=typ.tz)
-        return typ
-    want = {c: [c, *chains.get(c, [])] for c in columns}
-    resolved: dict[str, object] = {}
-    for v in range(max_version, -1, -1):
-        try:
-            entry = read_commit(root, v)
-        except FileNotFoundError:
-            continue
-        for rel in entry["add"]:
-            files = sorted(
-                glob.glob(os.path.join(root, rel, "part-*.parquet"))
-            )
-            if not files:
-                continue
-            footer = pq.read_schema(files[0])
-            for c, names in want.items():
-                if c in resolved:
-                    continue
-                for n in names:
-                    if n in footer.names:
-                        resolved[c] = pa.field(
-                            c,
-                            widen_types.get(
-                                c, _normalize(footer.field(n).type)
-                            ),
-                        )
-                        break
-            if len(resolved) == len(columns):
-                return pa.schema([resolved[c] for c in columns])
-    raise FileNotFoundError(
-        f"no committed segments at or before version {max_version} "
-        f"carry columns {sorted(set(columns) - set(resolved))} under "
-        f"{root}"
-    )
 
 
 def align_arrow_table(table, target, chains: dict | None = None):
@@ -437,26 +340,29 @@ class VtableBatchWriter(DataSourceArrowWriter):
       part file inside a fresh segment directory (invisible until a
       commit references it — a failed job strands an orphan for vacuum,
       never a torn table);
-    - the DRIVER's ``commit()`` folds the task messages into ONE atomic
-      vtable commit (stats from the footers, bloom sidecars, CHECK
-      constraints enforced over the new segment, schema-on-write
-      validated against the post-race head) — all through the same
-      :class:`VersionedTable` code paths the API writes use, so every
-      table invariant holds regardless of which door the data came in.
+    - the DRIVER's ``commit()`` hands that one segment to the commit
+      half of the matching :class:`VersionedTable` write —
+      :meth:`~VersionedTable.create_segment`,
+      :meth:`~VersionedTable.append_segment`,
+      :meth:`~VersionedTable.overwrite_segment` or
+      :meth:`~VersionedTable.replace_where_segment`.  That is the code
+      that commits the API's own writes, so the sink gets their checks
+      (reserved names, schema-on-write, CHECK constraints), their
+      metadata rules and their race rules, and keeps no commit code of
+      its own.
 
     ``mode("append")`` requires the exact table schema (Delta
     schema-on-write); ``mode("overwrite")`` replaces the live set and
     MAY change the schema (Delta overwriteSchema).  Writing to a root
     with no table yet CREATES it (Delta's save-to-new-path), under
-    either mode.
+    either mode; a create that loses the version-0 race to another
+    creator writes to the winner's table instead.
 
     ``.option("replaceWhere", "<sql predicate>")`` with
     ``mode("overwrite")`` narrows the overwrite to the predicate slice
-    (Delta's replaceWhere writer option): the task-written segment
-    becomes one atomic predicate-scoped replace through
-    :meth:`VersionedTable.replace_where_segment` — every batch row must
-    satisfy the predicate, untouched files stay live, and the schema
-    must match exactly (a scoped replace never evolves the schema).
+    (Delta's replaceWhere writer option): every batch row must satisfy
+    the predicate, untouched files stay live, and the schema must match
+    exactly (a scoped replace never evolves the schema).
     """
 
     def __init__(
@@ -475,16 +381,11 @@ class VtableBatchWriter(DataSourceArrowWriter):
                 "eel_vtable: replaceWhere requires mode('overwrite') "
                 "(Delta writer semantics)"
             )
-        exists = os.path.isdir(os.path.join(root, LOG_DIR))
-        self.creating = not exists
-        if exists and (replace_where is not None or not overwrite):
-            # appends and scoped replaces never evolve the schema — one
-            # shared gate fails FAST on the driver before any task
-            # launches; the commit re-checks against the post-race head
-            _require_schema_like(
-                read_commit(root, VersionedTable(None, root).latest_version()),
-                schema,
-            )
+        try:
+            VersionedTable(None, root).latest_version()
+            self.creating = False
+        except FileNotFoundError:  # no log, or a log with no commit yet
+            self.creating = True
         # one fresh segment dir per job — tasks write part files into it
         self.rel = os.path.join(DATA_DIR, f"write-{uuid.uuid4().hex[:12]}")
 
@@ -573,132 +474,54 @@ class VtableBatchWriter(DataSourceArrowWriter):
                         os.unlink(os.path.join(seg, name))
                     except OSError:
                         pass
-        if self.replace_where is not None and self.creating:
+        if self.replace_where is not None and self.creating and files:
             # replaceWhere onto a fresh path degrades to a create, but
             # the batch contract still holds: every row must satisfy the
             # predicate (validated BEFORE the log exists — a rejected
             # batch leaves no half-created table)
-            if files:
-                n_bad = (
-                    spark.read.schema(self.schema)
-                    .parquet(seg)
-                    .where(
-                        ~F.coalesce(
-                            F.expr(self.replace_where), F.lit(False)
-                        )
-                    )
-                    .limit(1)
-                    .count()
+            n_bad = (
+                spark.read.schema(self.schema)
+                .parquet(seg)
+                .where(~F.coalesce(F.expr(self.replace_where), F.lit(False)))
+                .limit(1)
+                .count()
+            )
+            if n_bad:
+                shutil.rmtree(seg, ignore_errors=True)
+                raise ValueError(
+                    "eel_vtable replaceWhere: batch rows must ALL "
+                    f"satisfy the predicate ({self.replace_where}) — "
+                    "batch rejected, nothing created"
                 )
-                if n_bad:
-                    shutil.rmtree(seg, ignore_errors=True)
-                    raise ValueError(
-                        "eel_vtable replaceWhere: batch rows must ALL "
-                        f"satisfy the predicate ({self.replace_where}) — "
-                        "batch rejected, nothing created"
-                    )
+        written = bool(files)
+        if not written and (
+            self.creating or (self.overwrite and self.replace_where is None)
+        ):
+            # a create or overwrite must leave a readable head even for
+            # an empty frame: materialize an empty segment so the schema
+            # has a footer to serve
+            _literal_frame(spark, self.schema).write.mode(
+                "overwrite"
+            ).parquet(seg)
+            written = True
         if self.creating:
-            os.makedirs(os.path.join(self.root, LOG_DIR), exist_ok=True)
-            os.makedirs(os.path.join(self.root, DATA_DIR), exist_ok=True)
+            try:
+                VersionedTable.create_segment(
+                    spark, self.root, self.rel, self.schema
+                )
+                return
+            except ConcurrentCommitError:
+                pass  # another creator won version 0: write to its table
         vt = VersionedTable(spark, self.root)
-        if self.replace_where is not None and not self.creating:
-            self._commit_replace(vt, messages)
-            return
-        add = [self.rel] if files else []
-        if self.creating:
-            # commit 0 does not exist yet — pre-seed the lazy property
-            # caches the commit path reads (same as VersionedTable.create)
-            vt._bloom_props = ([], 0, 0)
-            vt._ndv_cols = []
-            if not files:
-                # a create must leave a readable v0 even for an empty
-                # frame: materialize an empty segment so the schema has
-                # a footer to serve
-                _literal_frame(spark, self.schema).write.mode(
-                    "error"
-                ).parquet(seg)
-                add = [self.rel]
-            try:
-                vt._commit(
-                    0, "create", add=add, remove=[], schema=self.schema,
-                    extra={"properties": {"enableChangeDataFeed": False}},
-                )
-                return
-            except ConcurrentCommitError:
-                # a concurrent creator won version 0: the table now
-                # EXISTS — fall through to the existing-table path (its
-                # schema gate and constraint enforcement now apply)
-                self.creating = False
-                # re-resolve both caches from the winner's commit 0
-                del vt._bloom_props
-                del vt._ndv_cols
-                if self.replace_where is not None:
-                    # a lost CREATE race must stay a predicate-scoped
-                    # replace against the winner's table — falling into
-                    # the full-overwrite loop would delete the winner's
-                    # non-matching rows
-                    self._commit_replace(vt, messages)
-                    return
-        enforced = vt.constraints()
-        if add:
-            vt._enforce_constraints(add, enforced, "write")
-        for _ in range(64):
-            snap = vt._replay()
-            v = snap["version"]
-            if not self.overwrite:
-                _require_schema_like(snap["entry"], self.schema)
-            # a lost race may mean a concurrently ADDED constraint —
-            # the batch must satisfy the map at the head it lands on
-            # (same post-race re-validation rule as idempotent_append)
-            current = snap["constraints"]
-            if add and current != enforced:
-                vt._enforce_constraints(add, current, "write")
-                enforced = current
-            remove = snap["live"] if self.overwrite else []
-            try:
-                vt._commit(
-                    v + 1,
-                    "overwrite" if self.overwrite else "append",
-                    add=add,
-                    remove=remove,
-                    schema=self.schema,
-                )
-                return
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            "eel_vtable write: lost 64 consecutive commit races"
-        )
-
-    def _commit_replace(self, vt: VersionedTable, messages) -> None:
-        """Predicate-scoped replace commit: constraints, the replaceWhere
-        contract, discovery, kept-rewrite and the atomic commit all run
-        through the same VersionedTable path as the API call.  A lost
-        race re-runs discovery against the new head (stranding at most
-        a vacuumable kept-segment orphan).  A batch whose task files
-        hold ZERO rows is handed over as ``None`` (the pure predicate
-        delete) and its empty segment swept HERE — _replace_slice would
-        otherwise delete it before its commit attempt, and a lost race
-        would then retry against a vanished directory."""
-        files = [m.filename for m in messages if m and m.filename]
-        has_rows = any(m.rows for m in messages if m)
-        new_rel = self.rel if (files and has_rows) else None
-        if files and not has_rows:
-            shutil.rmtree(
-                os.path.join(self.root, self.rel), ignore_errors=True
+        if self.replace_where is not None:
+            vt.replace_where_segment(
+                self.rel if written else None, self.replace_where,
+                self.schema,
             )
-        for _ in range(16):
-            _require_schema_like(
-                vt._read_commit(vt.latest_version()), self.schema
-            )
-            try:
-                vt.replace_where_segment(new_rel, self.replace_where)
-                return
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            "eel_vtable replaceWhere: lost 16 consecutive commit races"
-        )
+        elif self.overwrite:
+            vt.overwrite_segment(self.rel, self.schema)
+        elif written:  # an empty append commits nothing
+            vt.append_segment(self.rel, self.schema)
 
     def abort(self, messages) -> None:
         # nothing referenced the segment — remove it; a failed rmtree
@@ -708,17 +531,3 @@ class VtableBatchWriter(DataSourceArrowWriter):
         # hold pre-existing unrelated files); an empty data/_log pair
         # left by an aborted sole creator is inert.
         shutil.rmtree(os.path.join(self.root, self.rel), ignore_errors=True)
-
-
-def _require_schema_like(entry: dict, schema: StructType) -> None:
-    """Schema-on-write for the sink path: same contract as
-    VersionedTable._require_schema (name+type exact, nullability
-    ignored), against a commit entry's recorded schema."""
-    current = StructType.fromJson(entry["schema"])
-    got = [(f.name, f.dataType) for f in schema.fields]
-    want = [(f.name, f.dataType) for f in current.fields]
-    if got != want:
-        raise ValueError(
-            f"eel_vtable append: schema-on-write violation — table has "
-            f"{want}, batch has {got}; use mode('overwrite') to evolve"
-        )

@@ -92,7 +92,10 @@ def _log_dir(root: str) -> str:
 # log access shared with operators/vtable.py — ONE implementation of
 # "what is a commit file" (a private copy here once dropped the isdigit
 # guard and crashed on stray JSON in _log/)
-_versions = log_versions
+def _versions(root: str) -> list[int]:
+    return log_versions(_log_dir(root))
+
+
 _read_commit = read_commit
 
 
@@ -111,6 +114,104 @@ def _latest_version(root: str) -> int:
     return versions[-1]
 
 
+def _arrow_type_of(simple: str):
+    """Arrow type for a Spark simpleString (the widen map's value
+    encoding).  A static map, NOT Spark's DDL parser: this runs in the
+    Python DataSource planner worker, which has no SparkSession.  The
+    map is closed over the widening matrix's target types
+    (operators/vtable._WIDEN_OK + decimal), so an unknown string is a
+    protocol bug worth failing on."""
+    import re as _re
+
+    import pyarrow as pa
+
+    prim = {
+        "tinyint": pa.int8(),
+        "smallint": pa.int16(),
+        "int": pa.int32(),
+        "bigint": pa.int64(),
+        "float": pa.float32(),
+        "double": pa.float64(),
+    }
+    if simple in prim:
+        return prim[simple]
+    m = _re.match(r"^decimal\((\d+),(\d+)\)$", simple)
+    if m:
+        return pa.decimal128(int(m.group(1)), int(m.group(2)))
+    raise ValueError(f"eel_vtable: unsupported widened type {simple!r}")
+
+
+def _target_schema_at(
+    root: str,
+    columns: list[str],
+    max_version: int,
+    chains: dict[str, list[str]] | None = None,
+    widen: dict[str, str] | None = None,
+):
+    """The snapshot's Arrow schema with EXACT physical types, resolved
+    driver-side PER COLUMN from the newest segment footer at or before
+    the snapshot carrying that column under any of its chain names
+    (same contract as the streaming reader's target, bounded to the
+    time-traveled version so a later evolution cannot leak its types
+    backwards; ``chains`` maps a renamed logical column to its retired
+    physical names — rename preserves the type, so the retired twin's
+    footer type IS the logical type).
+
+    ``widen`` (logical name -> widened simpleString, from the commit's
+    inherited widen map) OVERRIDES the footer type: after a metadata-only
+    :meth:`VersionedTable.widen_column_type` the newest footer may still
+    carry the narrow pre-DDL type — the logical type lives in the log,
+    and ``align_arrow_table`` upcasts each file to it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    chains = chains or {}
+    widen_types = {c: _arrow_type_of(s) for c, s in (widen or {}).items()}
+
+    def _normalize(typ):
+        # Spark writes INT96 timestamps by default; pyarrow reads them
+        # as ns, which Spark's Arrow bridge rejects
+        # ([UNSUPPORTED_ARROWTYPE] Timestamp(NANOSECOND)).  Serve every
+        # timestamp as µs — align_arrow_table casts per file, and INT96
+        # values are UTC-normalized so the cast is a pure unit change.
+        if pa.types.is_timestamp(typ):
+            return pa.timestamp("us", tz=typ.tz)
+        return typ
+    want = {c: [c, *chains.get(c, [])] for c in columns}
+    resolved: dict[str, object] = {}
+    for v in range(max_version, -1, -1):
+        try:
+            entry = _read_commit(root, v)
+        except FileNotFoundError:
+            continue
+        for rel in entry["add"]:
+            files = sorted(
+                glob.glob(os.path.join(root, rel, "part-*.parquet"))
+            )
+            if not files:
+                continue
+            footer = pq.read_schema(files[0])
+            for c, names in want.items():
+                if c in resolved:
+                    continue
+                for n in names:
+                    if n in footer.names:
+                        resolved[c] = pa.field(
+                            c,
+                            widen_types.get(
+                                c, _normalize(footer.field(n).type)
+                            ),
+                        )
+                        break
+            if len(resolved) == len(columns):
+                return pa.schema([resolved[c] for c in columns])
+    raise FileNotFoundError(
+        f"no committed segments at or before version {max_version} "
+        f"carry columns {sorted(set(columns) - set(resolved))} under "
+        f"{root}"
+    )
+
+
 def _target_arrow_schema(root: str, columns: list[str]):
     """The stream's target Arrow schema, resolved on the DRIVER from the
     newest committed segment's parquet footer (every vtable write aligns
@@ -118,10 +219,6 @@ def _target_arrow_schema(root: str, columns: list[str]):
     column — including evolved ones — with the exact physical types).
     ONE implementation shared with the batch reader: this is its bounded
     footer walk, unbounded to the latest version."""
-    from energy_emissions_lakehouse_spark.sources.vtable_batch import (
-        _target_schema_at,
-    )
-
     head = _latest_version(root)
     widen = _read_commit(root, head).get("widen")
     return _target_schema_at(root, columns, head, widen=widen)

@@ -33,7 +33,10 @@ from energy_emissions_lakehouse_spark.fsutil import (
     table_cache_key,
 )
 from energy_emissions_lakehouse_spark.functions.exact import scaled_sum
-from energy_emissions_lakehouse_spark.session import configure_runtime
+from energy_emissions_lakehouse_spark.session import (
+    configure_runtime,
+    loop_shuffle_partitions,
+)
 from energy_emissions_lakehouse_spark.tables import EVENTS_SCHEMA, t as load_table
 
 SESSION_GAP_SECONDS = 1800
@@ -97,9 +100,7 @@ def run_to_table(
     bounded local replays. Restored immediately after start."""
     spark = stream.sparkSession
     name = f"eel_stream_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with loop_shuffle_partitions(spark, state_partitions):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -107,8 +108,6 @@ def run_to_table(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     # Round-12 leak fix (guide §5 — the driver should hold almost
     # nothing): every bounded replay used to leave its memory-sink temp
@@ -1147,17 +1146,11 @@ def run_aggregate_to_dir(
     stages. applyInPandasWithState cannot consume an in-query streaming
     aggregate (Spark restriction); the production pipeline shape is
     stage-1 -> files/Kafka -> stage-2, and this helper is that hop."""
-    import os
-    import uuid as _uuid
-
     # same state-store pinning as run_to_table: the store count freezes
     # from this conf at query start; a driver-default 200 costs ~25 s of
     # per-batch store open/commit on a bounded replay
-    spark = stream.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = os.path.join(out_dir + ".ckpt", _uuid.uuid4().hex[:8])
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    ckpt = os.path.join(out_dir + ".ckpt", uuid.uuid4().hex[:8])
+    with loop_shuffle_partitions(stream.sparkSession, state_partitions):
         q = (
             stream.writeStream.format("parquet")
             .option("path", out_dir)
@@ -1166,8 +1159,6 @@ def run_aggregate_to_dir(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
 
 

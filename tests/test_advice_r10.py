@@ -54,7 +54,8 @@ def test_midstream_rename_is_refused_not_nullfilled(spark, root):
     vt.append(_df(spark, 5, 8, col="val"))
     with pytest.raises(RuntimeError, match="renamed columns after the stream"):
         reader.partitions(
-            {"version": 0}, {"version": log_versions(root)[-1]}
+            {"version": 0},
+            {"version": log_versions(os.path.join(root, LOG_DIR))[-1]},
         )
 
 

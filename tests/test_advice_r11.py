@@ -28,6 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from energy_emissions_lakehouse_spark.operators.vtable import (
+    LOG_DIR,
     VersionedTable,
     log_versions,
     read_commit,
@@ -93,7 +94,7 @@ def test_midstream_schema_evolving_overwrite_on_empty_live_raises(
     # zero kept rows, registers no rewrite
     vt.overwrite_where(_keyed(spark, 0, 0), F.lit(True))
     reader = VtableStreamReader(root, vt.read().schema, {})
-    head = log_versions(root)[-1]
+    head = log_versions(os.path.join(root, LOG_DIR))[-1]
     # schema-evolving overwrite: adds a column; table was empty so the
     # commit removes nothing
     evolved = _keyed(spark, 0, 5).withColumn("extra", F.lit(1))

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from energy_emissions_lakehouse_spark.operators.vtable import (
+    LOG_DIR,
     VersionedTable,
     _is_widening,
     log_versions,
@@ -229,7 +230,8 @@ def test_midstream_widen_fails_with_restart_message(spark, root):
     vt.append(_kv(spark, 4, 6, ktype="bigint"))
     with pytest.raises(RuntimeError, match="restart the query"):
         reader.partitions(
-            {"version": 0}, {"version": log_versions(root)[-1]}
+            {"version": 0},
+            {"version": log_versions(os.path.join(root, LOG_DIR))[-1]},
         )
 
 
@@ -241,7 +243,8 @@ def test_midstream_evolve_fails_with_restart_message(spark, root):
     )
     with pytest.raises(RuntimeError, match="restart the query"):
         reader.partitions(
-            {"version": 0}, {"version": log_versions(root)[-1]}
+            {"version": 0},
+            {"version": log_versions(os.path.join(root, LOG_DIR))[-1]},
         )
 
 

@@ -845,10 +845,10 @@ def test_staged_ranged_merge_rewrote_one_of_four_segments(spark, sf_dir):
     quarter segments (the 100 TB claim vtable_merge_pruned_rewrite makes,
     pinned at the commit-metadata level)."""
     from energy_emissions_lakehouse_spark.queries.versioned import (
-        staged_vtable_ranged,
+        staged_vtable,
     )
 
-    vt = staged_vtable_ranged(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_ranged")
     hist = vt.history()
     assert [h["op"] for h in hist] == (
         ["create"] + ["append"] * 3 + ["merge"]
@@ -1807,6 +1807,57 @@ def test_sink_write_modes_and_schema(spark, vt_root):
     assert _rows(src) == _rows(df)
 
 
+def test_sink_overwrite_resets_spec_and_renames(spark, vt_root):
+    """A sink overwrite to a new shape resets the partition spec and the
+    rename chains exactly as overwrite() does, so the next API append in
+    the new shape lands (a stale spec column would not resolve)."""
+    from energy_emissions_lakehouse_spark.sources.vtable_stream import (
+        register_vtable_source,
+    )
+
+    register_vtable_source(spark)
+    vt = _mk(spark, vt_root)
+    vt.set_partition_spec([("k", "bucket", 4)])
+    vt.rename_column("v", "w")
+    spark.range(5).select(
+        F.col("id").alias("a"), F.lit("s").alias("b")
+    ).write.format("eel_vtable").option("path", vt_root).mode(
+        "overwrite"
+    ).save()
+    entry = vt._read_commit(vt.latest_version())
+    assert entry["op"] == "overwrite"
+    assert entry["spec"] == [] and entry["renames"] == {}
+    vt.append(
+        spark.range(5, 8).select(
+            F.col("id").alias("a"), F.lit("t").alias("b")
+        )
+    )
+    assert sorted(r.a for r in vt.read().collect()) == list(range(8))
+
+
+def test_sink_create_rejects_reserved_names(spark, vt_root):
+    """A sink create runs create()'s reserved-name check: a frame with a
+    deletion-vector identity column fails with the same error and leaves
+    no log behind."""
+    import re
+
+    from energy_emissions_lakehouse_spark.sources.vtable_stream import (
+        register_vtable_source,
+    )
+
+    register_vtable_source(spark)
+    bad = spark.range(3).select(
+        F.col("id").alias("k"), F.lit("x").alias("_dv_seg")
+    )
+    with pytest.raises(ValueError, match="reserved") as api:
+        VersionedTable.create(spark, vt_root, bad)
+    with pytest.raises(Exception, match=re.escape(str(api.value))):
+        bad.write.format("eel_vtable").option("path", vt_root).mode(
+            "overwrite"
+        ).save()
+    assert not os.path.isdir(os.path.join(vt_root, "_log"))
+
+
 def test_sink_constraint_enforcement_and_cleanup(spark, vt_root):
     """CHECK constraints gate the DataFrame sink exactly like API
     writes: a violating job aborts, the table is untouched, and the
@@ -2190,11 +2241,10 @@ def test_staged_dml_history_structure(spark, sf_dir):
     rewrote exactly the straddling 2 segments, the COW update rewrote
     1 of 5, and the clone shares inodes while its log diverged."""
     from energy_emissions_lakehouse_spark.queries.versioned import (
-        staged_vtable_dml,
-        staged_vtable_dml_clone,
+        staged_vtable,
     )
 
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     hist = vt.history()
     assert [h["op"] for h in hist] == (
         ["create"] + ["append"] * 3
@@ -2211,7 +2261,7 @@ def test_staged_dml_history_structure(spark, sf_dir):
     # CDF rode every DML commit (the table is CDF-enabled)
     assert all("cdf" in hist[i] for i in (4, 5, 6))
 
-    cl = staged_vtable_dml_clone(spark, sf_dir)
+    cl = staged_vtable(spark, sf_dir, "table_dml_clone")
     assert [h["op"] for h in cl.history()] == (
         ["create"] + ["append"] * 3 + ["update_mor", "delete"]
     )
@@ -2268,11 +2318,11 @@ def test_incremental_maintenance_scans_changes_not_data(spark, sf_dir):
     ONLY — none of the data segments added by v4..v6 appear in any scan
     (refreshing the view costs O(changes), not O(table))."""
     from energy_emissions_lakehouse_spark.queries.versioned import (
-        staged_vtable_dml,
+        staged_vtable,
         vtable_incremental_agg_maintenance,
     )
 
-    vt = staged_vtable_dml(spark, sf_dir)
+    vt = staged_vtable(spark, sf_dir, "table_dml")
     plan = (
         vtable_incremental_agg_maintenance(spark, sf_dir)
         ._jdf.queryExecution()
@@ -2698,6 +2748,39 @@ def test_vtable_modules_build_no_python_list_frames():
                 and python_rows(node.args[0])
             ):
                 found.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not found, found
+
+
+def test_vtable_sink_writer_commits_through_the_api():
+    """The eel_vtable batch sink commits through VersionedTable's public
+    segment commits alone: its writer reads no private attribute of
+    another object (``self`` aside) and holds no ``for ... in range``
+    retry loop of its own — race handling lives in VersionedTable."""
+    import ast
+
+    from energy_emissions_lakehouse_spark.sources import vtable_batch
+
+    tree = ast.parse(open(vtable_batch.__file__, encoding="utf-8").read())
+    (cls,) = [
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "VtableBatchWriter"
+    ]
+    found = []
+    for node in ast.walk(cls):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr.startswith("_")
+            and not (
+                isinstance(node.value, ast.Name) and node.value.id == "self"
+            )
+        ):
+            found.append(f"{ast.unparse(node)}:{node.lineno}")
+        if (
+            isinstance(node, ast.For)
+            and isinstance(node.iter, ast.Call)
+            and ast.unparse(node.iter.func) == "range"
+        ):
+            found.append(f"for-range loop:{node.lineno}")
     assert not found, found
 
 
